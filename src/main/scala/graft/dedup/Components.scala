@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * SoCC'14) — converges in O(log n) rounds independent of graph
   * diameter, unlike plain min-label propagation whose round count grows
   * with the longest chain in the pair graph. Each round is two narrow
-  * (long, long) shuffles; lineage is cut by localCheckpoint per round and
-  * convergence is a single lightweight aggregate over the checkpointed
+  * (long, long) shuffles and one [[graft.Lineage.iterate]] generation,
+  * whose single action is the convergence aggregate over the round's
   * edges (no extra join, no limit/count job).
   */
 object Components {
@@ -33,7 +33,7 @@ object Components {
     import spark.implicits._
 
     // canonical big→small directed edges
-    var ee = pairs.select(
+    val ee = pairs.select(
         greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("u"),
         least(col("id_a").cast("long"), col("id_b").cast("long")).as("v"))
       .filter(col("u") =!= col("v"))
@@ -48,10 +48,7 @@ object Components {
       return out
     }
 
-    var converged = false
-    var iter = 0
-    var lastSig: (Long, Long) = (-1L, -1L)
-    while (!converged && iter < maxIter) {
+    val last = graft.Lineage.iterate("components", ee, maxIter, (-1L, -1L))((ee, _, _) => {
       // large-star: for every node u, attach each LARGER neighbor v to
       // m = min(Γ(u) ∪ {u}); preserves connectivity, shrinks tall chains
       val nbrs = ee.unionByName(ee.select(col("v").as("u"), col("u").as("v")))
@@ -64,29 +61,22 @@ object Components {
       // small-star: connect u and all its (smaller) out-neighbors to the
       // minimum of that set — produces stars rooted at local minima
       val ssMin = ls.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      val ss = ls.join(ssMin, "u")
+      ls.join(ssMin, "u")
         .select(explode(array(
           struct(col("u").as("a"), col("mn").as("b")),
           struct(col("v").as("a"), col("mn").as("b")))).as("e"))
         .select(col("e.a").as("u"), col("e.b").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-        .localCheckpoint()
-      // convergence signature: one scan of the checkpointed edges —
-      // (count, xor-of-hashes) is order-independent, overflow-free (ANSI
-      // safe) and equal ⇔ same distinct edge set
-      val sig = ss.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))"))
-        .as[(Long, Option[Long])].first() match { case (c, h) => (c, h.getOrElse(0L)) }
-      // the superseded round is dead once ss is materialized (eager
-      // checkpoint above) — free its blocks now rather than on GC
-      graft.Lineage.release(ee)
-      ee = ss
-      converged = sig == lastSig
-      lastSig = sig
-      iter += 1
-    }
-    ee.select(col("u").as("id"), col("v").as("component"))
-      .unionByName(ee.select(col("v").as("id"), col("v").as("component")))
+    },
+    // convergence signature: one scan of the round's edges, which fills
+    // its checkpoint — (count, xor-of-hashes) is order-independent,
+    // overflow-free (ANSI safe) and equal ⇔ same distinct edge set
+    observe = ss => ss.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))"))
+      .as[(Long, Option[Long])].first() match { case (c, h) => (c, h.getOrElse(0L)) },
+    until = _ == _)
+    last.select(col("u").as("id"), col("v").as("component"))
+      .unionByName(last.select(col("v").as("id"), col("v").as("component")))
       .distinct()
   }
 

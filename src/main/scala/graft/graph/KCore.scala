@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * deterministic and oracle-expressible (unrolled CTEs), mirroring
   * [[LabelPropagation]]; each round is one map-combined degree
   * aggregation — O(E) narrow rows — and two semi-joins restricting the
-  * edge list, with per-round eager persistence so plan depth stays
-  * linear. Peeling halves the frontier geometrically in practice; the
-  * spec asserts the small-graph fixed point is reached well inside the
-  * round budget.
+  * edge list, one [[graft.Lineage.iterate]] generation per round so the
+  * plan does not grow with the round budget. Peeling halves the
+  * frontier geometrically in practice; the spec asserts the small-graph
+  * fixed point is reached well inside the round budget.
   */
 object KCore {
 
@@ -27,36 +27,22 @@ object KCore {
   def run(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val fwd = edges.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
-    var und = fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
+    val seed = fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .repartition(col("src")).persist()
-    und.count()
-    for (_ <- 1 to rounds) {
+    val und = graft.Lineage.iterate("kcore", seed, rounds, seed.count())((und, _, _) => {
       val keep = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src").as("node"))
       // dst-semi first, src-semi LAST: the final join leaves the surviving
       // edge list hash-partitioned on `src`, which the next round's
-      // groupBy(src) and src-side semi-join reuse without an exchange
-      // lazy localCheckpoint = the same materialization the persist gave
-      // (the count below fills it) PLUS plan truncation: with persist the
-      // plan composed every peel round and each action re-ran analysis
-      // over the whole history (the q74 finding — O(rounds²) planning).
-      // checkpoint preserves the physical partitioning, so the
-      // src-partitioned round structure (see comment above) survives.
-      // Trade: a local checkpoint is NOT recomputable — losing an
-      // executor that holds its blocks fails the job.
-      val next = und
+      // groupBy(src) and src-side semi-join reuse without an exchange (the
+      // checkpoint preserves the physical partitioning)
+      und
         .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
         .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .select(col("src"), col("dst"))
-        .localCheckpoint(eager = false)
-      next.count() // materialize off the parent before dropping it
-      // eager block release of the superseded generation (plain unpersist
-      // is a no-op once und is a checkpointed frame)
-      graft.Lineage.release(und)
-      und = next
-    }
+    }, observe = _.count())
     val out = und.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
       .localCheckpoint()

@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
   * once and persisted; each superstep shuffles only the (node, label)
   * table — O(V) rows — against the co-located edges, then a map-side
   * partial min-aggregate collapses neighbour candidates before the final
-  * shuffle. Labels persist per superstep with eager materialization and
-  * the parent generation is unpersisted immediately, keeping plan depth
-  * linear in `iterations` (same lineage discipline as [[Bfs]]).
+  * shuffle. Each superstep is one [[graft.Lineage.iterate]] generation,
+  * so the plan does not grow with `iterations`.
   */
 object LabelPropagation {
 
@@ -31,39 +30,19 @@ object LabelPropagation {
     val und = fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .repartition(col("src")).persist()
-    var labels = und.select(col("src").as("node")).distinct()
+    val seed = und.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node")).persist()
-    labels.count()
-    for (_ <- 1 to iterations) {
-      // neighbour minimum: edge (src, dst) contributes dst's label to src
-      val nbrMin = und.join(labels, und("dst") === labels("node"))
-        .groupBy(und("src").as("node"))
-        .agg(min(col("lbl")).as("nbr"))
-      // lazy localCheckpoint = the persist's materialization (the count
-      // fills it) PLUS per-superstep plan truncation (the q74 finding —
-      // with persist each action re-analyzed the whole iteration history).
-      // Trade: a local checkpoint is NOT recomputable — losing an
-      // executor that holds its blocks fails the job.
-      val next = labels.join(nbrMin, Seq("node"), "left_outer")
-        .select(col("node"),
-          least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("lbl"))
-        .localCheckpoint(eager = false)
-      next.count() // materialize off the parent before dropping it
-      // eager block release of the superseded generation (plain unpersist
-      // is a no-op once labels is a checkpointed frame)
-      graft.Lineage.release(labels)
-      labels = next
-    }
+    val labels = graft.Lineage.iterate("label_prop", seed, iterations, seed.count())(
+      (labels, _, _) => {
+        // neighbour minimum: edge (src, dst) contributes dst's label to src
+        val nbrMin = und.join(labels, und("dst") === labels("node"))
+          .groupBy(und("src").as("node"))
+          .agg(min(col("lbl")).as("nbr"))
+        labels.join(nbrMin, Seq("node"), "left_outer")
+          .select(col("node"),
+            least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("lbl"))
+      }, observe = _.count())
     und.unpersist()
-    if (iterations <= 0) {
-      // zero supersteps: labels is still the persisted seed — cut lineage
-      // and release it like the pre-loop shape always did
-      val out = labels.localCheckpoint()
-      labels.unpersist()
-      out
-    } else
-      // the last generation is already checkpoint-materialized (its count
-      // above) — a second localCheckpoint here would copy the blocks
-      labels
+    labels
   }
 }

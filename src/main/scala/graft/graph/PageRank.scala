@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * partition exactly once and returns the scalar) — there is no separate
   * per-iteration dangling job and no bare `count()` lineage-cut action.
   * The dangling SET is static (nodes with no out-edges), flagged once up
-  * front. Ranks are persisted per iteration to cut lineage (same
-  * discipline as [[Bfs]]); a fixed iteration count (the common
-  * production choice — convergence-εs are replaced by a budget) keeps
-  * the plan bounded.
+  * front. Each iteration is one [[graft.Lineage.iterate]] generation,
+  * with the dangling scalar as its observation; a fixed iteration count
+  * (the common production choice — convergence-εs are replaced by a
+  * budget) keeps the run bounded.
   *
   * Two rejected alternatives, both measured at sf0.1: (a) a broadcast
   * 1-row-aggregate that fuses the scalar into the update job —
@@ -64,40 +64,22 @@ object PageRank {
     def danglingOf(r: DataFrame): Double = r.filter(!col("has_out"))
       .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
 
-    var ranks = flagged.withColumn("rank", lit(1.0 / n)).persist()
-    var dangling = danglingOf(ranks)
-    for (_ <- 1 to iterations) {
-      val contribs = annotated
-        .join(ranks, annotated("src") === ranks("node"))
-        .select(col("dst").as("node"), (col("rank") / col("outdeg")).as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
-      // LAZY localCheckpoint instead of persist: same MEMORY_AND_DISK
-      // materialization (filled by the danglingOf action below), but the
-      // returned frame is a LogicalRDD — the logical plan STOPS GROWING
-      // per iteration. With persist the final ranks' plan composed every
-      // iteration's joins (~5 MB formatted at 20 iterations, 478
-      // SortMergeJoin nodes) and every action re-ran analysis over it:
-      // O(k²) planning across the run, paid again by every consumer of
-      // the result. Cost of the trade: a local checkpoint is NOT
-      // recomputable — losing an executor that holds its blocks fails
-      // the job (plan truncation traded for fault tolerance, same
-      // contract as [[Bfs.collapse]]'s localCheckpoint fallback).
-      val next = flagged.join(contribs, Seq("node"), "left_outer")
-        .select(col("node"), col("has_out"),
-          (lit((1 - d) / n) +
-            lit(d) * (coalesce(col("inflow"), lit(0.0)) + lit(dangling / n)))
-            .as("rank"))
-        .localCheckpoint(eager = false)
-      // single action: caches every partition of `next` AND returns the
-      // next iteration's dangling mass (unused after the last round).
-      // The superseded generation is then freed EAGERLY (plain unpersist
-      // is a no-op for checkpointed frames, so without this, blocks for
-      // dead generations accumulate until driver GC + ContextCleaner —
-      // peak storage grew with the iteration budget).
-      dangling = danglingOf(next)
-      graft.Lineage.release(ranks)
-      ranks = next
-    }
+    val seed = flagged.withColumn("rank", lit(1.0 / n)).persist()
+    val ranks = graft.Lineage.iterate("pagerank", seed, iterations, danglingOf(seed))(
+      (ranks, dangling, _) => {
+        val contribs = annotated
+          .join(ranks, annotated("src") === ranks("node"))
+          .select(col("dst").as("node"), (col("rank") / col("outdeg")).as("c"))
+          .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
+        flagged.join(contribs, Seq("node"), "left_outer")
+          .select(col("node"), col("has_out"),
+            (lit((1 - d) / n) +
+              lit(d) * (coalesce(col("inflow"), lit(0.0)) + lit(dangling / n)))
+              .as("rank"))
+      },
+      // one action caches every partition of the generation AND returns
+      // the next iteration's dangling mass (unused after the last one)
+      observe = danglingOf)
     annotated.unpersist()
     flagged.unpersist()
     ranks.select(col("node"), col("rank"))

@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   * result deterministic and oracle-expressible (a recursive-CTE path
   * enumeration reaches the same fixpoint on inputs whose longest
   * shortest path fits in the budget); rounds ≥ longest-path length ⇒
-  * exact fixpoint, extra rounds are idempotent. Per-round persistence
-  * + count keeps plan depth linear in rounds (the [[KCore]]/[[Bfs]]
-  * discipline). At 100× the per-round shape is unchanged: two narrow
-  * (node, dist) shuffles; checkpoint every ~10 rounds to cut lineage.
+  * exact fixpoint, extra rounds are idempotent. Each round is one
+  * [[graft.Lineage.iterate]] generation, so the plan does not grow with
+  * rounds. At 100× the per-round shape is unchanged: two narrow
+  * (node, dist) shuffles.
   */
 object ShortestPaths {
 
@@ -33,38 +33,18 @@ object ShortestPaths {
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .repartition(col("src")).persist()
     e.count()
-    var dist = seeds.select(col("node")).distinct()
+    val seed = seeds.select(col("node")).distinct()
       .withColumn("dist", lit(0L)).persist()
-    dist.count()
-    for (_ <- 1 to rounds) {
+    val dist = graft.Lineage.iterate("sssp", seed, rounds, seed.count())((dist, _, _) =>
       // aliases: dist derives from e after round 1, so the self-join
       // needs explicit sides (the Bfs ambiguity note)
-      // lazy localCheckpoint = the persist's materialization (the count
-      // fills it) PLUS per-round plan truncation (the q74 finding — with
-      // persist each action re-analyzed the whole relaxation history).
-      // Trade: a local checkpoint is NOT recomputable — losing an
-      // executor that holds its blocks fails the job.
-      val relaxed = dist.alias("d")
+      dist.alias("d")
         .join(e.alias("e"), col("d.node") === col("e.src"))
         .select(col("e.dst").as("node"), (col("d.dist") + col("e.w")).as("dist"))
         .unionByName(dist)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(eager = false)
-      relaxed.count() // materialize off the parent before dropping it
-      // eager block release of the superseded generation (plain unpersist
-      // is a no-op once dist is a checkpointed frame)
-      graft.Lineage.release(dist)
-      dist = relaxed
-    }
+        .groupBy(col("node")).agg(min(col("dist")).as("dist")),
+      observe = _.count())
     e.unpersist()
-    if (rounds <= 0) {
-      // zero rounds: dist is still the persisted seed — cut lineage and
-      // release it like the pre-loop shape always did
-      val out = dist.localCheckpoint()
-      dist.unpersist()
-      out
-    } else
-      // the last round is already checkpoint-materialized by its count
-      dist
+    dist
   }
 }

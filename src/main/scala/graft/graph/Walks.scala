@@ -32,40 +32,24 @@ object Walks {
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).persist()
     e.count()
-    var walks = seeds.select(col("node").as("start")).distinct()
+    // the seed is not materialized on its own (so there is no observation
+    // of it): hop 1 reads it inside its own job
+    val seed = seeds.select(col("node").as("start")).distinct()
       .withColumn("cur", col("start"))
-    var prev: Option[DataFrame] = None
-    for (i <- 1 to steps) {
+    val walks = graft.Lineage.iterate("walks", seed, steps, 0L)((walks, _, i) => {
       val score = pmod(
         ord(col("cur")) * 31 + lit(i.toLong) * 17 + ord(col("dst")) * 2654435761L,
         lit(1000003L))
       val w = Window.partitionBy(col("start"))
         .orderBy(score.asc_nulls_last, col("dst").asc_nulls_last)
-      // lazy localCheckpoint = the persist's materialization (the count
-      // fills it) PLUS per-hop plan truncation (the q74 finding — with
-      // persist each action re-analyzed the whole hop history).
-      // Trade: a local checkpoint is NOT recomputable — losing an
-      // executor that holds its blocks fails the job.
-      walks = walks.join(e, col("cur") === col("src"), "left_outer")
+      walks.join(e, col("cur") === col("src"), "left_outer")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .withColumn(s"hop$i", col("dst"))
         .withColumn("cur", col("dst"))
         .drop("src", "dst", "rn")
-        .localCheckpoint(eager = false)
-      walks.count() // materialize off the previous step before it drops
-      // eager block release of the superseded hop (plain unpersist is a
-      // no-op for checkpointed frames). The LAST hop is NOT released —
-      // `out` below is a projection over its checkpointed blocks.
-      prev.foreach(graft.Lineage.release)
-      prev = Some(walks)
-    }
-    // the last hop is already checkpoint-materialized; steps == 0 keeps
-    // the cheap seed projection, checkpointed for a stable return shape
-    val out = if (steps <= 0) walks.drop("cur").localCheckpoint()
-              else walks.drop("cur")
-    prev.foreach(_.unpersist())
+    }, observe = _.count())
     e.unpersist()
-    out
+    walks.drop("cur")
   }
 }

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
   * TakeOrdered(1) for the argmax, and one narrow mapPartitions-free
   * column rewrite applying the merge (a fold expression over each
   * word's symbol array; words are short, so the per-row cost is tiny).
-  * `localCheckpoint` cuts the lineage between steps so N merges never
-  * stack N plans.
+  * Each merge is one [[graft.Lineage.iterate]] generation, filled by the
+  * next step's argmax, so N merges never stack N plans.
   *
   * Determinism: pair counts are exact integer sums; the argmax breaks
   * ties by (left, right) lexicographically; the greedy left-to-right
@@ -50,31 +50,26 @@ object Bpe {
   def learnMerges(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     // corpus → vocabulary: everything after this line is vocab-sized
-    var vocab = docs
+    val vocab = docs
       .select(explode(Tfidf.words(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .select(split(col("word"), "(?!^)(?=.)").as("toks"), col("cnt"))
       .localCheckpoint()
+    def topPair(vocab: DataFrame): Option[(String, String, Long)] = vocab
+      .select(explode(adjacentPairs(col("toks"))).as("p"), col("cnt"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("cnt")).as("n"))
+      .orderBy(col("n").desc, col("l").asc, col("r").asc)
+      .limit(1).collect().headOption
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= nMerges && !exhausted) {
-      val top = vocab
-        .select(explode(adjacentPairs(col("toks"))).as("p"), col("cnt"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+    // a vocab with no pair left maps to itself, and `until` ends the loop
+    graft.Lineage.release(graft.Lineage.iterate("bpe", vocab, nMerges, topPair(vocab))(
+      (vocab, top, step) => top.fold(vocab) { case (l, r, n) =>
         learned += ((step, l, r, n))
-        vocab = vocab
-          .select(applyMerge(col("toks"), l, r).as("toks"), col("cnt"))
-          .localCheckpoint()
-        step += 1
-      }
-    }
+        vocab.select(applyMerge(col("toks"), l, r).as("toks"), col("cnt"))
+      },
+      observe = topPair, until = (_, top) => top.isEmpty))
     spark.createDataFrame(
       spark.sparkContext.parallelize(learned.toSeq.map {
         case (s, l, r, n) => Row(s, l, r, n)

@@ -1,6 +1,11 @@
 package graft.graph
 
 import graft.SparkSpec
+import graft.dedup.Components
+import org.apache.spark.graftbridge.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 class GraphAlgoSpec extends SparkSpec {
@@ -54,23 +59,70 @@ class GraphAlgoSpec extends SparkSpec {
     // checkpointed frame is not in the cache manager), so every superseded
     // generation's blocks used to stay resident until driver GC +
     // ContextCleaner — peak storage grew with the iteration budget (the
-    // r15 ADVICE finding). Lineage.release frees the underlying RDD
-    // eagerly: after each run below, only the FINAL generation may remain.
-    def persisted() = spark.sparkContext.getPersistentRDDs.size
+    // r15 ADVICE finding). Lineage.iterate frees the superseded generation
+    // eagerly, and with zero iterations hands back its seed checkpointed
+    // and released: each run below may leave only its result's blocks,
+    // which the caller owns and frees here.
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def free(result: DataFrame): Long = {
+      val n = result.count()
+      result.queryExecution.analyzed.foreach {
+        case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+        case _ =>
+      }
+      n
+    }
     val seeds = Seq("a").toDF("node")
+    val ord = (n: Column) => pmod(xxhash64(n), lit(1000003L))
     val before = persisted()
-    assert(PageRank.run(edges, iterations = 6).count() == 6)
-    assert(KCore.run(edges, k = 1, rounds = 4).count() == 6)
-    assert(LabelPropagation.run(edges, iterations = 5).count() == 6)
-    assert(ShortestPaths.run(edges.withColumn("w", lit(1L)), seeds, rounds = 5)
-      .count() == 4)
-    assert(Walks.run(edges, seeds, steps = 4,
-      n => pmod(xxhash64(n), lit(1000003L))).count() == 1)
+    Seq(6, 0).foreach { n =>
+      assert(free(PageRank.run(edges, iterations = n)) == 6)
+      assert(free(KCore.run(edges, k = 1, rounds = n)) == 6)
+      assert(free(LabelPropagation.run(edges, iterations = n)) == 6)
+      assert(free(ShortestPaths.run(edges.withColumn("w", lit(1L)), seeds, rounds = n))
+        == (if (n == 0) 1 else 4))
+      assert(free(Walks.run(edges, seeds, steps = n, ord)) == 1)
+    }
     // 5 runs × ≥4 iterations would strand ≥20 generations in the old
-    // shape; now at most the 5 final results remain pending GC (suites
-    // share this SparkContext concurrently — delta, not exact count)
-    assert(persisted() - before <= 5,
-      s"superseded generations not freed: $before -> ${persisted()}")
+    // shape, and PageRank with no iterations left its persisted seed in the
+    // cache manager. Suites run one at a time in the forked test JVM, and
+    // the ContextCleaner only ever removes entries: compare id sets.
+    val left = persisted() -- before
+    assert(left.isEmpty, s"superseded generations or seeds not freed: $left")
+  }
+
+  test("iterative operators run a pinned number of jobs at 3 iterations") {
+    // each generation is one lazy checkpoint filled by one action; a change
+    // to how generations are cut or materialized shows up here as a count
+    val sc = spark.sparkContext
+    def jobsOf(run: => Long): Int = {
+      val group = s"job-pin-${java.util.UUID.randomUUID()}"
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            n.incrementAndGet()
+      }
+      sc.addSparkListener(l)
+      sc.setJobGroup(group, group)
+      try { run; ListenerBus.drain(sc); n.get }
+      finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    }
+    val seeds = Seq("a").toDF("node")
+    val ids = edges.select(ascii(col("src")).cast("long").as("id_a"),
+      ascii(col("dst")).cast("long").as("id_b"))
+    val jobs = Map(
+      "pagerank" -> jobsOf(PageRank.run(edges, iterations = 3).count()),
+      "kcore" -> jobsOf(KCore.run(edges, k = 1, rounds = 3).count()),
+      "label_prop" -> jobsOf(LabelPropagation.run(edges, iterations = 3).count()),
+      "sssp" -> jobsOf(ShortestPaths.run(edges.withColumn("w", lit(1L)), seeds, rounds = 3)
+        .count()),
+      "walks" -> jobsOf(Walks.run(edges, seeds, steps = 3,
+        n => pmod(xxhash64(n), lit(1000003L))).count()),
+      "components" -> jobsOf(Components.connectedComponents(ids, maxIter = 3,
+        driverThreshold = 0L).count()))
+    assert(jobs === Map("pagerank" -> 33, "kcore" -> 23, "label_prop" -> 21, "sssp" -> 21,
+      "walks" -> 19, "components" -> 23))
   }
 
   test("bfs reach/closure use a RELIABLE checkpoint when a dir is configured") {

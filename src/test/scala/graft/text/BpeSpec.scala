@@ -33,6 +33,20 @@ class BpeSpec extends SparkSpec {
     assert(merges.count() == 0)
   }
 
+  test("learnMerges frees every vocabulary generation") {
+    // each merge step used to eager-checkpoint a new vocabulary and never
+    // release the superseded one; the result is a driver-built merge
+    // table, so no vocabulary may outlive the call (suites share this
+    // SparkContext — delta bound, not exact count)
+    def persisted() = spark.sparkContext.getPersistentRDDs.size
+    val docs = (1 to 20).map(i => s"banana bandana cabana word$i").toDF("text")
+    val before = persisted()
+    assert(Bpe.learnMerges(docs, "text", nMerges = 5).count() == 5)
+    assert(Bpe.learnMerges(Seq("a b c").toDF("text"), "text", nMerges = 5).count() == 0)
+    assert(persisted() - before <= 1,
+      s"superseded vocabularies not freed: $before -> ${persisted()}")
+  }
+
   test("learnMerges is independent of partitioning") {
     val docs = (1 to 50).map(i => s"alpha beta gamma delta word$i")
       .toDF("text")
