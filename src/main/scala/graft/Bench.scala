@@ -1,5 +1,54 @@
 package graft
+
+import com.fasterxml.jackson.annotation.{JsonSetter, Nulls}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper, PropertyNamingStrategies}
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import com.fasterxml.jackson.databind.node.{ArrayNode, DoubleNode, ObjectNode}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+import scala.util.Try
+
+/** The bench artifact, `bench.json`; JSON field names are the snake_case
+  * of these. Smoke fields carry sentinels: -1 crash, -2 wrong count or
+  * failed invariant, -3 not reached. The fields a no-clobber rule reads
+  * name their element type for Jackson, which cannot see it through
+  * erasure. */
+final case class BenchArtifact(metric: String, value: Double, unit: String,
+    queries: Map[String, Double], min: Map[String, Double], max: Map[String, Double],
+    stat: Map[String, String], errors: Map[String, String],
+    robokopBuildSec: Double, dedupSmokeSec: Double,
+    @JsonDeserialize(contentAs = classOf[java.lang.Double]) dedupCurveSec: Seq[Double],
+    dedupCurveProbeSec: Seq[Double],
+    winnowSmokeSec: Double, substringSmokeSec: Double, mergeSmokeSec: Double,
+    mergeSmokeRows: Map[String, Long],
+    @JsonDeserialize(contentAs = classOf[java.lang.Double]) graphCurveSec: Seq[Double],
+    graphCurveProbeSec: Seq[Double], graphCurveOps: Map[String, Seq[Double]],
+    smokeDetail: Map[String, Observe.Totals], smokeErrors: Map[String, String],
+    loadavgBefore: Double, loadavgAfter: Double, probeSec: Seq[Double], probeSpread: Double,
+    cpus: Int, @JsonDeserialize(contentAs = classOf[java.lang.Integer]) benchCpus: Option[Int],
+    codeFingerprint: Option[String], contaminated: Option[Boolean], partial: Option[Boolean],
+    sf: String) {
+  def cleanFull: Boolean = contaminated.contains(false) && partial.contains(false)
+}
+
+object BenchArtifact {
+  val json: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
+    .setPropertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
+    .setDefaultSetterInfo(JsonSetter.Value.forValueNulls(Nulls.AS_EMPTY))
+
+  /** Lenient read of an artifact, possibly from an older round: a missing
+    * or null field reads as None, empty or 0 (no no-clobber rule reads 0
+    * as a crash or a breach); text that is not an artifact reads as None. */
+  def parse(text: String): Option[BenchArtifact] =
+    Try(json.readValue(text, classOf[BenchArtifact])).toOption.flatMap(Option(_))
+
+  /** The artifact at `path`; None when it is absent or unreadable. */
+  def read(path: Path): Option[BenchArtifact] =
+    Try(new String(Files.readAllBytes(path), "UTF-8")).toOption.flatMap(parse)
+}
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   * Each query runs once untimed (JVM/codegen/page-cache warm-up, one
@@ -27,8 +76,6 @@ import org.apache.spark.sql.SparkSession
   * `probe_spread` (max/min) > 2 also marks the artifact contaminated.
   */
 object Bench {
-  val iterations = 3
-
   /** Smoke pins MIRRORED from BASELINE.md (the extended no-clobber rule's
     * breach test) — update BOTH together when re-pinning. Wall-time pins
     * are deliberately generous (they admit the measured driver-host noise);
@@ -39,47 +86,35 @@ object Bench {
   private[graft] val dedupCurve4xMaxRatio = 5.0
   private[graft] val graphCurve4xMaxRatio = 5.0
 
-  // minimal JSON field extractors for the artifact's own flat shape —
-  // enough to compare a candidate against the on-disk artifact without a
-  // JSON library on the classpath
-  private[graft] def jsonNum(json: String, key: String): Option[Double] =
-    ("\"" + java.util.regex.Pattern.quote(key) + "\":(-?[0-9][0-9.eE+-]*)").r
-      .findFirstMatchIn(json).flatMap(m => m.group(1).toDoubleOption)
-  private[graft] def jsonArr(json: String, key: String): Seq[Double] =
-    ("\"" + java.util.regex.Pattern.quote(key) + "\":\\[([^\\]]*)\\]").r
-      .findFirstMatchIn(json)
-      .map(_.group(1).split(",").toSeq.flatMap(_.trim.toDoubleOption))
-      .getOrElse(Nil)
-  private[graft] def jsonStr(json: String, key: String): Option[String] =
-    ("\"" + java.util.regex.Pattern.quote(key) + "\":\"([^\"]*)\"").r
-      .findFirstMatchIn(json).map(_.group(1))
+  /** Where a candidate artifact goes: over the on-disk artifact, or
+    * diverted to `<benchOut>.rejected` for the reason given. */
+  sealed trait Decision
+  case object Write extends Decision
+  final case class Divert(why: String) extends Decision
 
-  /** True when any smoke in `json` crashed, returned a wrong count, or
+  /** True when any smoke in `a` crashed, returned a wrong count, or
     * never ran: a non-empty `smoke_errors` map, or a negative sentinel in
-    * any smoke field (-1 crash, -2 wrong count, -3 not reached).
-    * `robokop_build_sec` is excluded — it is legitimately -1.0 when the
-    * parser fixtures aren't on disk. */
-  private[graft] def smokesCrashed(json: String): Boolean =
-    !json.contains("\"smoke_errors\":{}") ||
-      (jsonArr(json, "dedup_curve_sec") ++ jsonArr(json, "graph_curve_sec") ++
-        Seq("winnow_smoke_sec", "substring_smoke_sec", "merge_smoke_sec")
-          .flatMap(jsonNum(json, _))).exists(_ < 0)
+    * any smoke field. `robokop_build_sec` is excluded — it is
+    * legitimately -1.0 when the parser fixtures aren't on disk. */
+  private[graft] def smokesCrashed(a: BenchArtifact): Boolean =
+    a.smokeErrors.nonEmpty ||
+      (a.dedupCurveSec ++ a.graphCurveSec ++
+        Seq(a.winnowSmokeSec, a.substringSmokeSec, a.mergeSmokeSec)).exists(_ < 0)
 
-  /** Names the first BASELINE smoke pin `json` breaches, if any. Crash /
+  /** Names the first BASELINE smoke pin `a` breaches, if any. Crash /
     * not-reached sentinels (negative values) are never a breach — they
     * are caught by [[smokesCrashed]] instead. */
-  private[graft] def breachedSmokePin(json: String): Option[String] = {
+  private[graft] def breachedSmokePin(a: BenchArtifact): Option[String] = {
     def ratio(xs: Seq[Double], i: Int): Option[Double] =
       if (xs.length > i && xs.head > 0 && xs(i) > 0) Some(xs(i) / xs.head) else None
-    val curve = jsonArr(json, "dedup_curve_sec")
-    val graph = jsonArr(json, "graph_curve_sec")
-    jsonNum(json, "substring_smoke_sec").filter(_ > substringSmokeMaxSec)
+    val curve = a.dedupCurveSec
+    Some(a.substringSmokeSec).filter(_ > substringSmokeMaxSec)
       .map(s => f"substring_smoke_sec $s%.1f > $substringSmokeMaxSec%.0f")
       .orElse(ratio(curve, 3).filter(_ > dedupCurve8xMaxRatio)
         .map(r => f"dedup_curve 8x ratio $r%.2f > $dedupCurve8xMaxRatio%.0f"))
       .orElse(ratio(curve, 2).filter(_ > dedupCurve4xMaxRatio)
         .map(r => f"dedup_curve 4x ratio $r%.2f > $dedupCurve4xMaxRatio%.0f"))
-      .orElse(ratio(graph, 2).filter(_ > graphCurve4xMaxRatio)
+      .orElse(ratio(a.graphCurveSec, 2).filter(_ > graphCurve4xMaxRatio)
         .map(r => f"graph_curve 4x ratio $r%.2f > $graphCurve4xMaxRatio%.0f"))
   }
 
@@ -92,10 +127,84 @@ object Bench {
     * benchCpus) and could not tell the two apart). Artifacts predating
     * the field are indistinguishable, so the rule fires only when the
     * on-disk artifact carries `bench_cpus`. */
-  private[graft] def crossCoreClobber(existing: String, benchCpus: Int): Boolean =
-    existing.contains("\"contaminated\":false") &&
-      existing.contains("\"partial\":false") &&
-      jsonNum(existing, "bench_cpus").exists(_.toInt != benchCpus)
+  private[graft] def crossCoreClobber(existing: BenchArtifact, benchCpus: Int): Boolean =
+    existing.cleanFull && existing.benchCpus.exists(_ != benchCpus)
+
+  /** Where `candidate` goes, given the artifact on disk (None when absent
+    * or unreadable). No-clobber rules (BASELINE.md refused-artifacts
+    * ledger), all of which protect only a clean, full on-disk artifact:
+    *  (1) a contaminated or partial candidate never overwrites it — the
+    *      post-commit bench runs of r12 and r13 replaced the committed
+    *      clean artifact with a steal-contaminated run, costing a cleanup
+    *      round each time;
+    *  (2) a clean candidate that breaches a BASELINE smoke pin is diverted
+    *      when the on-disk artifact is non-breaching, its smokes all ran,
+    *      and it is from the SAME CODE (fingerprint match) — the r14
+    *      post-commit run was clean by probes yet carried a 116 s substring smoke
+    *      against a 27 s committed same-code run; a same-code pin breach is
+    *      environment, not regression;
+    *  (3) a clean candidate whose smokes crashed never displaces one whose
+    *      smokes all ran — the r15 run-1 heap-OOM cascade wrote -1.0 over a
+    *      committed full curve;
+    *  (4) [[crossCoreClobber]], checked first because it applies to clean
+    *      and dirty candidates alike. */
+  private[graft] def decide(existing: Option[BenchArtifact], candidate: BenchArtifact): Decision =
+    existing.filter(_.cleanFull).fold[Decision](Write) { e =>
+      val sameCode = candidate.codeFingerprint
+        .exists(fp => fp != "unknown" && e.codeFingerprint.contains(fp))
+      if (candidate.benchCpus.exists(crossCoreClobber(e, _)))
+        Divert(s"cross-core-count (bench_cpus ${candidate.benchCpus.get} vs on-disk " +
+          s"${e.benchCpus.get})")
+      else if (!candidate.cleanFull)
+        Divert(if (candidate.partial.contains(true)) "partial" else "contaminated")
+      else if (smokesCrashed(candidate) && !smokesCrashed(e))
+        Divert("smoke-crashed (clean artifact on disk has all smokes green)")
+      else (breachedSmokePin(candidate), breachedSmokePin(e)) match {
+        case (Some(pin), None) if sameCode && !smokesCrashed(e) =>
+          Divert(s"pin-breaching ($pin; same-code artifact on disk holds it)")
+        case _ => Write
+      }
+    }
+
+  /** The `keys` of `a`'s JSON tree, in that order, after `edit`. */
+  private def project(a: BenchArtifact, keys: Seq[String])(edit: ObjectNode => Unit): String = {
+    val tree = BenchArtifact.json.valueToTree[ObjectNode](a)
+    edit(tree)
+    val out = BenchArtifact.json.createObjectNode()
+    keys.foreach(k => out.set[JsonNode](k, tree.get(k)))
+    BenchArtifact.json.writeValueAsString(out)
+  }
+
+  /** The `SPARK_GRAFT_SMOKES=0` stdout line. */
+  private[graft] def queriesLine(a: BenchArtifact): String =
+    project(a, Seq("metric", "value", "unit", "queries", "errors", "partial", "sf"))(_ => ())
+
+  /** The stdout line of a full run. The harness that captures stdout keeps
+    * only the last ~2000 characters, so the full artifact (163 queries × 3
+    * maps) would arrive truncated and unparseable — every BENCH_r{N}.json
+    * before this line existed has "parsed": null. It keeps the headline
+    * fields and contamination signals, only the 30 slowest queries, and
+    * numbers to 3 decimals: ≈1.5 KB, so sbt's trailing "[success]" line
+    * still leaves it whole inside the tail window. */
+  private[graft] def compactLine(a: BenchArtifact, queriesFile: String): String = {
+    val slowest = a.queries.toSeq.filterNot(q => a.errors.contains(q._1)).sortBy(-_._2).take(30)
+    def round3(n: JsonNode): JsonNode = n match {
+      case o: ObjectNode => o.properties.forEach(e => e.setValue(round3(e.getValue))); o
+      case xs: ArrayNode => (0 until xs.size).foreach(i => xs.set(i, round3(xs.get(i)))); xs
+      case d if d.isFloatingPointNumber => DoubleNode.valueOf(Observe.round(d.doubleValue, 3))
+      case other => other
+    }
+    project(a, Seq("metric", "value", "unit", "queries", "queries_n", "queries_file", "errors",
+      "robokop_build_sec", "dedup_smoke_sec", "dedup_curve_sec", "dedup_curve_probe_sec",
+      "winnow_smoke_sec", "substring_smoke_sec", "merge_smoke_sec", "merge_smoke_rows",
+      "graph_curve_sec", "graph_curve_probe_sec", "smoke_errors", "loadavg_before",
+      "loadavg_after", "probe_spread", "cpus", "bench_cpus", "code_fingerprint",
+      "contaminated", "partial", "sf")) { tree =>
+      tree.set[JsonNode]("queries", BenchArtifact.json.valueToTree[JsonNode](ListMap.from(slowest)))
+      tree.put("queries_n", a.queries.size).put("queries_file", queriesFile)
+      round3(tree)
+    }
+  }
 
   /** First 12 hex of sha-256 over src/main/scala (sorted paths + bytes):
     * the artifact's "same code" witness for the no-clobber rule. Git
@@ -162,9 +271,17 @@ object Bench {
   private def boundaryProbe(threads: Int): Double =
     (1 to 3).map(_ => cpuProbe(threads)).min
 
+  private final case class Timed(name: String, headline: Double, min: Double, max: Double,
+      stat: String, error: Option[String])
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val benchCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // the contamination threshold rides the LARGER of JVM-visible
+    // processors and the session's own SPARK_GRAFT_CPUS parallelism: on a
+    // container exposing fewer processors than the configured thread
+    // count, the bench's own load would otherwise trip the gate on a clean run
+    val cpus = math.max(Runtime.getRuntime.availableProcessors(), benchCpus)
     val spark = Sessions.local(benchCpus.toString)
     val loadBefore = load1()
     val probes = scala.collection.mutable.ArrayBuffer(boundaryProbe(benchCpus))
@@ -174,15 +291,8 @@ object Bench {
     val sinkPlane = graft.queries.SinkQueries.defs.keySet
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
-        fn(spark, sfDir).count() // warm-up: codegen + shuffle files + page cache
-        val times = (1 to iterations).map { _ =>
-          // cross-query hygiene: drop cache entries and let the
-          // ContextCleaner release orphaned blocks between iterations so
-          // timings aren't polluted by leftover state
-          spark.sharedState.cacheManager.clearCache()
-          System.gc()
-          time(fn(spark, sfDir).count())
-        }.sorted
+        val times = Observe.timeQuery(spark)(fn(spark, sfDir))
+        val median = times(times.size / 2)
         // headline statistic: MEDIAN for fast queries, MIN for the heavy
         // tail (median > 3 s — the iterative graph operators). The r9
         // committed vs driver artifacts disagreed 1.57× on q118 even with
@@ -200,80 +310,48 @@ object Bench {
         // iteration; contention slows some. Min is the honest statistic
         // there regardless of magnitude.
         val (headline, stat) =
-          if (sinkPlane.contains(name)) (times.head, "min")
-          else if (times(iterations / 2) > 3.0) (times.head, "min")
-          else (times(iterations / 2), "median")
-        (name, headline, times.head, times.last, stat, None: Option[String])
+          if (sinkPlane.contains(name) || median > 3.0) (times.head, "min")
+          else (median, "median")
+        Timed(name, headline, times.head, times.last, stat, None)
       } catch {
         case e: Throwable =>
-          (name, -1.0, -1.0, -1.0, "error",
+          Timed(name, -1.0, -1.0, -1.0, "error",
             Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
       }
     }
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", " ").take(200) + "\""
-    val qs = results.map { case (k, med, _, _, _, _) => "\"" + k + "\":" + med }
-      .mkString("{", ",", "}")
-    val mins = results.map { case (k, _, mn, _, _, _) => "\"" + k + "\":" + mn }
-      .mkString("{", ",", "}")
-    val maxs = results.map { case (k, _, _, mx, _, _) => "\"" + k + "\":" + mx }
-      .mkString("{", ",", "}")
-    // per-query statistic marker ("median" | "min"): the headline switches
-    // to min-of-N for the heavy tail (median > 3 s), and without this map a
-    // consumer comparing artifacts across rounds cannot tell which statistic
-    // a figure is, or notice a query flipping statistic at the threshold
-    val stats = results.map { case (k, _, _, _, st, _) => "\"" + k + "\":\"" + st + "\"" }
-      .mkString("{", ",", "}")
+    def clip(message: String): String = message.replace('\n', ' ').take(200)
+    // per-query maps in name order; `stat` ("median" | "min") says which
+    // statistic each headline is, so a consumer comparing artifacts across
+    // rounds can notice a query flipping statistic at the threshold
+    def byName[V](f: Timed => V): Map[String, V] = ListMap.from(results.map(r => r.name -> f(r)))
     // a throwing query must fail loud: its message lands in `errors` and the
     // headline total is poisoned to -1 so a regression can't shrink the number
-    val errors = results.collect { case (k, _, _, _, _, Some(m)) => "\"" + k + "\":" + jstr(m) }
-      .mkString("{", ",", "}")
+    val errors = ListMap.from(results.flatMap(r => r.error.map(m => r.name -> clip(m))))
     val total =
-      if (results.exists(_._6.isDefined)) -1.0 else results.map(_._2).sum
+      if (errors.nonEmpty) -1.0 else results.map(_.headline).sum
     // a crashed smoke must stay diagnosable from the artifact alone: the
     // -1.0 sentinel says THAT a stage died, `smoke_errors` says WHY (the
     // run-12 ledger has a refused artifact whose whole smoke tail went -1.0
     // with stderr discarded — this map is what was missing)
     val smokeErrors = scala.collection.mutable.LinkedHashMap[String, String]()
     def smokeFail(stage: String, t: Throwable): Unit =
-      smokeErrors(stage) =
-        (t.getClass.getName + ": " + String.valueOf(t.getMessage)).take(300)
-    def smokeErrorsJson: String =
-      smokeErrors.map { case (k, v) => "\"" + k + "\":" + jstr(v) }
-        .mkString("{", ",", "}")
-    // per-smoke stage-metric totals (SmokeMetrics): task wall vs CPU
-    // time, shuffle volumes, spill, GC — so a slow point self-diagnoses
-    // from the artifact (steal: wall up, cpu flat; regression: cpu up;
-    // memory ceiling: spill/gc up). Keyed per curve point.
-    val smokeDetail = scala.collection.mutable.LinkedHashMap[String, String]()
-    def smokeDetailJson: String =
-      smokeDetail.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
+      smokeErrors(stage) = clip(t.getClass.getName + ": " + String.valueOf(t.getMessage))
+    // per-smoke stage-metric totals (Observe.Totals), keyed per curve point
+    val smokeDetail = scala.collection.mutable.LinkedHashMap[String, Observe.Totals]()
     val codeFp = codeFingerprint()
     // composed robokop-style build (parsers → merge → derive → CSV sinks)
     // timed once as a pipeline — reported separately, not in the query total
     val fixturesDir = sys.env.getOrElse("SPARK_GRAFT_FIXTURES", "src/test/resources/parsers")
     val buildSec =
-      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(fixturesDir))) -1.0
+      if (!Files.isDirectory(Paths.get(fixturesDir))) -1.0
       else try {
-        val out = java.nio.file.Files.createTempDirectory("bench-robokop-").toString
+        val out = Files.createTempDirectory("bench-robokop-").toString
         time(graft.pipeline.RobokopBuild.run(spark, fixturesDir, out))
       } catch { case t: Throwable => smokeFail("robokop_build", t); -1.0 }
-    // Artifact insurance: the scale smokes below add ~6-10 minutes. If an
-    // external timeout kills the run mid-smoke, the query measurements
-    // must not die with it — persist a partial artifact now (smoke fields
-    // carry sentinel -3.0 = "not reached"), overwritten by the full JSON
-    // at the end.
-    val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
-    def emitJson(dedupCurve: Seq[(Double, Double)], winnowSec: Double, substringSec: Double,
+    def artifact(dedupCurve: Seq[(Double, Double)], winnowSec: Double, substringSec: Double,
                  mergeSmoke: (Double, Long, Long, Long),
                  graphCurve: Seq[(Double, Double, Double, Double, Double)],
-                 loadAfter: Double, partial: Boolean): String = {
-      // threshold rides the LARGER of JVM-visible processors and the
-      // session's own SPARK_GRAFT_CPUS parallelism: on a container
-      // exposing fewer processors than the configured thread count, the
-      // bench's own load would otherwise trip the gate on a clean run
-      val cpus = math.max(Runtime.getRuntime.availableProcessors(), benchCpus)
+                 loadAfter: Double, partial: Boolean): BenchArtifact = {
       // two independent contamination signals: container loadavg (sees
       // in-container noise) and the cpu-probe spread (sees host-level
       // steal that loadavg cannot — the round-8 artifact failure mode)
@@ -281,109 +359,62 @@ object Bench {
         if (probes.size < 2 || probes.min <= 0) 1.0 else probes.max / probes.min
       val contaminated = loadBefore > 1.5 * cpus || loadAfter > 1.5 * cpus ||
         probeSpread > 2.0
-      val gc = graphCurve.map(_._1).mkString(",")
-      val gOps = s"""{"pagerank":[${graphCurve.map(_._2).mkString(",")}],"hits":[${graphCurve.map(_._3).mkString(",")}],"components":[${graphCurve.map(_._4).mkString(",")}]}"""
+      def r3(xs: Seq[Double]): Seq[Double] = xs.map(Observe.round(_, 3))
       // per-point boundary probes: each curve point carries the CPU work
       // unit sampled right after it, so a squeezed/non-monotonic point is
-      // attributable to host steal from the artifact alone (no
-      // cross-referencing the chronological probe_sec array needed)
-      val dProbes = dedupCurve.map(p => f"${p._2}%.3f").mkString(",")
-      val gProbes = graphCurve.map(p => f"${p._5}%.3f").mkString(",")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"min":$mins,"max":$maxs,"stat":$stats,"errors":$errors,"robokop_build_sec":$buildSec,"dedup_smoke_sec":${dedupCurve.head._1},"dedup_curve_sec":[${dedupCurve.map(_._1).mkString(",")}],"dedup_curve_probe_sec":[$dProbes],"winnow_smoke_sec":$winnowSec,"substring_smoke_sec":$substringSec,"merge_smoke_sec":${mergeSmoke._1},"merge_smoke_rows":{"input":${mergeSmoke._2},"distinct":${mergeSmoke._3},"merged":${mergeSmoke._4}},"graph_curve_sec":[$gc],"graph_curve_probe_sec":[$gProbes],"graph_curve_ops":$gOps,"smoke_detail":$smokeDetailJson,"smoke_errors":$smokeErrorsJson,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"probe_sec":[${probes.map(p => f"$p%.3f").mkString(",")}],"probe_spread":${f"$probeSpread%.3f"},"cpus":$cpus,"bench_cpus":$benchCpus,"code_fingerprint":"$codeFp","contaminated":$contaminated,"partial":$partial,"sf":"$sfDir"}"""
+      // attributable to host steal from the artifact alone
+      BenchArtifact(metric = "total", value = total, unit = "sec",
+        queries = byName(_.headline), min = byName(_.min), max = byName(_.max),
+        stat = byName(_.stat), errors = errors, robokopBuildSec = buildSec,
+        dedupSmokeSec = dedupCurve.head._1, dedupCurveSec = dedupCurve.map(_._1),
+        dedupCurveProbeSec = r3(dedupCurve.map(_._2)), winnowSmokeSec = winnowSec,
+        substringSmokeSec = substringSec, mergeSmokeSec = mergeSmoke._1,
+        mergeSmokeRows = ListMap("input" -> mergeSmoke._2, "distinct" -> mergeSmoke._3,
+          "merged" -> mergeSmoke._4),
+        graphCurveSec = graphCurve.map(_._1), graphCurveProbeSec = r3(graphCurve.map(_._5)),
+        graphCurveOps = ListMap("pagerank" -> graphCurve.map(_._2),
+          "hits" -> graphCurve.map(_._3), "components" -> graphCurve.map(_._4)),
+        smokeDetail = ListMap.from(smokeDetail), smokeErrors = ListMap.from(smokeErrors),
+        loadavgBefore = loadBefore, loadavgAfter = loadAfter, probeSec = r3(probes.toSeq),
+        probeSpread = Observe.round(probeSpread, 3), cpus = cpus, benchCpus = Some(benchCpus),
+        codeFingerprint = Some(codeFp), contaminated = Some(contaminated),
+        partial = Some(partial), sf = sfDir)
     }
-    def writeArtifact(json: String): Unit = {
+    val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
+    def writeArtifact(a: BenchArtifact): Unit = {
+      val bytes = (BenchArtifact.json.writeValueAsString(a) + "\n").getBytes("UTF-8")
+      def write(path: Path): Unit = try Files.write(path, bytes) catch { case _: Throwable => () }
       // The candidate is ALWAYS written verbatim to <benchOut minus
       // extension>_last_run.json first — a fixed secondary path the
-      // no-clobber rules below never divert — so the driver's PERF
-      // pipeline has one unambiguous machine-readable location for the
-      // full per-query map of THIS run (r15's per_query/scaling tables
-      // came up empty because the canonical artifact had been diverted
-      // to .rejected and the stdout line carries only the slowest 30).
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(benchOut.stripSuffix(".json") + "_last_run.json"),
-        (json + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-      // No-clobber rules (BASELINE.md refused-artifacts ledger):
-      //  (1) a clean, full artifact on disk is never overwritten by a
-      //      contaminated or partial one — the driver's post-commit bench
-      //      runs (r12, r13) replaced the committed clean artifact with a
-      //      steal-contaminated run, costing a cleanup round each time;
-      //  (2) a CLEAN full run that breaches a BASELINE smoke pin is also
-      //      diverted when the on-disk artifact is clean, full,
-      //      non-breaching, and from the SAME CODE (fingerprint match) —
-      //      the r14 driver run was clean by probes yet carried a 116 s
-      //      substring smoke against a 27 s committed same-code run; a
-      //      same-code pin breach is environment, not regression, and
-      //      must not displace the cleaner measurement;
-      //  (3) a clean run whose smokes CRASHED (non-empty smoke_errors)
-      //      never displaces a clean artifact whose smokes all ran;
-      //  (4) a run at a DIFFERENT core count than a clean full on-disk
-      //      artifact is diverted regardless of its own cleanliness —
-      //      the driver legitimately re-runs the bench at a lower
-      //      SPARK_GRAFT_CPUS to measure scaling, and in r15 its clean
-      //      8-core run silently replaced the 32-core artifact (the old
-      //      `cpus` field recorded max(availableProcessors, benchCpus),
-      //      making the two indistinguishable). `bench_cpus` now records
-      //      the session's actual parallelism; artifacts predating the
-      //      field can't be distinguished, so the rule only fires when
-      //      the on-disk artifact carries it.
-      // The rejected candidate is still written — to <benchOut>.rejected —
-      // so nothing is lost (and bench_last_run.json above always has it).
-      val path = java.nio.file.Paths.get(benchOut)
-      val candidateDirty =
-        json.contains("\"contaminated\":true") || json.contains("\"partial\":true")
-      val existing =
-        if (java.nio.file.Files.exists(path))
-          try new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-          catch { case _: Throwable => "" }
-        else ""
-      val existingCleanFull = existing.contains("\"contaminated\":false") &&
-        existing.contains("\"partial\":false")
-      def divert(why: String): java.nio.file.Path = {
-        println(s"[bench] $benchOut holds a clean full artifact; " +
-          s"writing this $why run to $benchOut.rejected instead")
-        java.nio.file.Paths.get(benchOut + ".rejected")
-      }
-      // rule (4): cross-core-count overwrite — checked first because it
-      // applies to clean AND dirty candidates alike
-      val target =
-        if (crossCoreClobber(existing, benchCpus))
-          divert(s"cross-core-count (bench_cpus $benchCpus vs on-disk " +
-            s"${jsonNum(existing, "bench_cpus").get.toInt})")
-        else if (candidateDirty && existingCleanFull)
-          divert(if (json.contains("\"partial\":true")) "partial" else "contaminated")
-        else if (!candidateDirty && existingCleanFull) {
-          val sameCode = codeFp != "unknown" &&
-            jsonStr(existing, "code_fingerprint").contains(codeFp)
-          // a run whose smokes CRASHED (non-empty smoke_errors OR a
-          // negative sentinel in any smoke field — a -2.0 wrong-count
-          // leaves smoke_errors empty) must not displace an artifact
-          // whose smokes all ran — the r15 run-1 heap-OOM cascade wrote
-          // -1.0 over a committed full curve
-          val candidateCrashed = smokesCrashed(json)
-          val existingCrashed = smokesCrashed(existing)
-          if (candidateCrashed && !existingCrashed)
-            divert("smoke-crashed (clean artifact on disk has all smokes green)")
-          else (breachedSmokePin(json), breachedSmokePin(existing)) match {
-            // pin-diversion only defers to an artifact whose smokes all
-            // RAN — a complete pin-breaching run beats a crashed one
-            case (Some(pin), None) if sameCode && !existingCrashed =>
-              divert(s"pin-breaching ($pin; same-code artifact on disk holds it)")
-            case _ => path
-          }
-        } else path
-      try java.nio.file.Files.write(target, (json + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      // no-clobber rules never divert — so the full per-query map of THIS
+      // run has one unambiguous machine-readable location (r15's
+      // per_query/scaling tables came up empty because the canonical
+      // artifact had been diverted to .rejected).
+      write(Paths.get(benchOut.stripSuffix(".json") + "_last_run.json"))
+      // a diverted candidate is still written, to <benchOut>.rejected
+      write(decide(BenchArtifact.read(Paths.get(benchOut)), a) match {
+        case Write => Paths.get(benchOut)
+        case Divert(why) =>
+          println(s"[bench] $benchOut holds a clean full artifact; " +
+            s"writing this $why run to $benchOut.rejected instead")
+          Paths.get(benchOut + ".rejected")
+      })
     }
     probes += boundaryProbe(benchCpus) // phase boundary: queries done
+    // Artifact insurance: the scale smokes below add ~6-10 minutes. If an
+    // external timeout kills the run mid-smoke, the query measurements
+    // must not die with it — persist a partial artifact now (smoke fields
+    // carry sentinel -3.0 = "not reached"), overwritten by the full
+    // artifact at the end.
     val notReached = Seq.fill(3)((-3.0, -3.0, -3.0, -3.0, -3.0))
-    writeArtifact(emitJson(Seq.fill(4)((-3.0, -3.0)), -3.0, -3.0, (-3.0, 0L, 0L, 0L),
-      notReached, load1(), partial = true))
+    val queriesOnly = artifact(Seq.fill(4)((-3.0, -3.0)), -3.0, -3.0, (-3.0, 0L, 0L, 0L),
+      notReached, load1(), partial = true)
+    writeArtifact(queriesOnly)
     // SPARK_GRAFT_SMOKES=0: queries-only run for local iteration (the scale
     // smokes add ~10-20 min); the artifact keeps partial=true so BASELINE
     // smoke-floor comparisons know the smokes never ran.
     if (sys.env.get("SPARK_GRAFT_SMOKES").contains("0")) {
-      println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errors,"partial":true,"sf":"$sfDir"}""".take(15000))
+      println(queriesLine(queriesOnly))
       spark.stop(); return
     }
     // Every scale smoke runs in its OWN fresh session: prior executions
@@ -427,8 +458,8 @@ object Bench {
       try {
         val sess = freshSmokeSession()
         val ((secs, dups, expected), sm) =
-          SmokeMetrics.measure(sess)(DedupScaleSmoke.run(sess, n))
-        smokeDetail(s"dedup_$n") = sm.json
+          Observe.measure(sess)(DedupScaleSmoke.run(sess, n))
+        smokeDetail(s"dedup_$n") = sm.totals
         val p = boundaryProbe(benchCpus) // boundary after each curve point
         probes += p
         (if (dups == expected) secs else -2.0, p)
@@ -440,8 +471,8 @@ object Bench {
       try {
         val sess = freshSmokeSession()
         val ((secs, dups, expected), sm) =
-          SmokeMetrics.measure(sess)(DedupScaleSmoke.runWinnowing(sess, 1000000L))
-        smokeDetail("winnow") = sm.json
+          Observe.measure(sess)(DedupScaleSmoke.runWinnowing(sess, 1000000L))
+        smokeDetail("winnow") = sm.totals
         probes += boundaryProbe(benchCpus)
         if (dups == expected) secs else -2.0
       } catch { case t: Throwable => smokeFail("winnow", t); -1.0 }
@@ -451,8 +482,8 @@ object Bench {
       try {
         val sess = freshSmokeSession()
         val ((secs, dups, expected), sm) =
-          SmokeMetrics.measure(sess)(DedupScaleSmoke.runSubstring(sess, 1000000L))
-        smokeDetail("substring") = sm.json
+          Observe.measure(sess)(DedupScaleSmoke.runSubstring(sess, 1000000L))
+        smokeDetail("substring") = sm.totals
         probes += boundaryProbe(benchCpus)
         if (dups == expected) secs else -2.0
       } catch { case t: Throwable => smokeFail("substring", t); -1.0 }
@@ -464,8 +495,8 @@ object Bench {
       try {
         val n = 25000000L
         val sess = freshSmokeSession()
-        val (r, sm) = SmokeMetrics.measure(sess)(ScaleSmoke.run(sess, n))
-        smokeDetail("merge") = sm.json
+        val (r, sm) = Observe.measure(sess)(ScaleSmoke.run(sess, n))
+        smokeDetail("merge") = sm.totals
         probes += boundaryProbe(benchCpus)
         val ok = r.distinctIds == 2 * n - n / 2 && r.mergedAway == n / 2
         (if (ok) r.secs else -2.0, r.inputRows, r.distinctIds, r.mergedAway)
@@ -478,8 +509,8 @@ object Bench {
     val graphCurve = Seq(5000000L, 10000000L, 20000000L).map { m =>
       try {
         val sess = freshSmokeSession()
-        val (r, sm) = SmokeMetrics.measure(sess)(GraphScaleSmoke.run(sess, m))
-        smokeDetail(s"graph_$m") = sm.json
+        val (r, sm) = Observe.measure(sess)(GraphScaleSmoke.run(sess, m))
+        smokeDetail(s"graph_$m") = sm.totals
         val p = boundaryProbe(benchCpus)
         probes += p
         (if (r.ok) r.totalSecs else -2.0, r.prSecs, r.hitsSecs, r.ccSecs, p)
@@ -487,32 +518,12 @@ object Bench {
         smokeFail(s"graph_curve_$m", t); (-1.0, -1.0, -1.0, -1.0, -1.0) }
     }
     val loadAfter = load1()
-    val json = emitJson(dedupCurve, winnowSmokeSec, substringSmokeSec, mergeSmoke,
+    // the canonical artifact: overwrites the pre-smoke partial write and
+    // carries the FULL per-query median/min/max maps
+    val full = artifact(dedupCurve, winnowSmokeSec, substringSmokeSec, mergeSmoke,
       graphCurve, loadAfter, partial = false)
-    // The file is the canonical artifact (overwrites the pre-smoke partial
-    // write) and carries the FULL per-query median/min/max maps.
-    writeArtifact(json)
-    // The driver's stdout capture keeps only the last ~2000 characters, so
-    // the full JSON line (86 queries × 3 maps ≈ 8 KB) arrives truncated and
-    // unparseable — every prior round's BENCH_r{N}.json has "parsed": null.
-    // Print a COMPACT line instead: same headline fields and contamination
-    // signals, but only the slowest queries inline; the full map lives in
-    // bench.json. Budget ≤ ~1700 chars so sbt's trailing "[success]" line
-    // still leaves the whole JSON inside the tail window.
-    val cpus = math.max(Runtime.getRuntime.availableProcessors(), benchCpus)
-    val probeSpread =
-      if (probes.size < 2 || probes.min <= 0) 1.0 else probes.max / probes.min
-    val contaminated = loadBefore > 1.5 * cpus || loadAfter > 1.5 * cpus ||
-      probeSpread > 2.0
-    def r3(d: Double): String = f"$d%.3f"
-    // 30 × ~30 chars ≈ 900 for the query map; whole line ≈ 1.5 KB, leaving
-    // headroom under the driver's ~2000-char tail even as the surface grows
-    val slow = results.filter(_._6.isEmpty).sortBy(-_._2).take(30)
-      .map { case (k, med, _, _, _, _) => "\"" + k + "\":" + r3(med) }
-      .mkString("{", ",", "}")
-    val compact =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$slow,"queries_n":${results.size},"queries_file":"$benchOut","errors":$errors,"robokop_build_sec":${r3(buildSec)},"dedup_smoke_sec":${r3(dedupCurve.head._1)},"dedup_curve_sec":[${dedupCurve.map(d => r3(d._1)).mkString(",")}],"dedup_curve_probe_sec":[${dedupCurve.map(d => r3(d._2)).mkString(",")}],"winnow_smoke_sec":${r3(winnowSmokeSec)},"substring_smoke_sec":${r3(substringSmokeSec)},"merge_smoke_sec":${r3(mergeSmoke._1)},"merge_smoke_rows":{"input":${mergeSmoke._2},"distinct":${mergeSmoke._3},"merged":${mergeSmoke._4}},"graph_curve_sec":[${graphCurve.map(g => r3(g._1)).mkString(",")}],"graph_curve_probe_sec":[${graphCurve.map(g => r3(g._5)).mkString(",")}],"smoke_errors":$smokeErrorsJson,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"probe_spread":${r3(probeSpread)},"cpus":$cpus,"bench_cpus":$benchCpus,"code_fingerprint":"$codeFp","contaminated":$contaminated,"partial":false,"sf":"$sfDir"}"""
-    println(compact)
+    writeArtifact(full)
+    println(compactLine(full, benchOut))
     if (smokeSpark != null) smokeSpark.stop()
   }
 }

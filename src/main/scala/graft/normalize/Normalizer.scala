@@ -229,9 +229,10 @@ object Normalizer {
     * (MEMORY_AND_DISK): the stats pass materializes the map-join +
     * dropDuplicates once, and every downstream consumer (unconnected-node
     * filter, parquet write) reuses that one materialization instead of
-    * re-running the join per action — the round-15 JobProfile measured the
-    * node pipeline executing ~3× per source without it. Call the returned
-    * release() once the result is fully consumed. */
+    * re-running the join per action — a round-15 job profile (the table
+    * QueryTimer prints) measured the node pipeline executing ~3× per
+    * source without it. Call the returned release() once the result is
+    * fully consumed. */
   def normalizeNodesCached(rawNodes: DataFrame, nodeMap: DataFrame,
                            strict: Boolean = true): (DataFrame, NodeNormStats, () => Unit) = {
     // the reference strips newline characters from every top-level string
@@ -348,9 +349,10 @@ object Normalizer {
   /** [[normalizeEdges]] that returns its result PERSISTED
     * (MEMORY_AND_DISK) and computes the stats in TWO fused aggregation
     * passes instead of four independent re-executions of the endpoint
-    * joins (failure count, loop count, splits agg, result count — the
-    * round-15 JobProfile measured the join pipeline running ~5× per source
-    * including the final write). Pass equivalences:
+    * joins (failure count, loop count, splits agg, result count — a
+    * round-15 job profile, the table QueryTimer prints, measured the join
+    * pipeline running ~5× per source including the final write). Pass
+    * equivalences:
     *  - failures = sourceEdges − distinct `_src_edge_id` surviving the
     *    endpoint joins (unchanged set: the rewrite steps are row-preserving);
     *  - loops ride the same aggregate as a conditional sum;

@@ -74,7 +74,8 @@ object IngestPipeline {
   }
 
   /** Label the Spark jobs a phase launches (guide §1.5): thread-local, so
-    * the UI/JobProfile can attribute multi-action pipelines per phase. */
+    * the UI and QueryTimer's job table can attribute multi-action
+    * pipelines per phase. */
   private def labeled[T](spark: SparkSession, desc: String)(f: => T): T = {
     spark.sparkContext.setJobDescription(desc)
     try f finally spark.sparkContext.setJobDescription(null)

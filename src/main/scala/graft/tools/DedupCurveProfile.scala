@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import scala.collection.mutable
+import graft.Observe
 
 /** Attributes a dedup smoke's cost: runs the chosen engine's smoke at
-  * the given sizes with a stage-metrics listener and prints, per stage,
+  * the given sizes under `Observe.measure` and prints, per stage,
   * wall time, task time, shuffle read/write and spill — so a superlinear
   * point or a pin breach reads as "stage X spills" instead of a guess.
   * Usage:
@@ -16,33 +15,6 @@ import scala.collection.mutable
   * their pin four rounds running with quiet CPU probes.)
   */
 object DedupCurveProfile {
-
-  final case class StageAgg(name: String, var wallMs: Long = 0L,
-      var taskTimeMs: Long = 0L, var cpuTimeNs: Long = 0L,
-      var shuffleReadMB: Long = 0L,
-      var shuffleWriteMB: Long = 0L, var spillMemMB: Long = 0L,
-      var spillDiskMB: Long = 0L, var tasks: Int = 0, var maxTaskMs: Long = 0L)
-
-  private class MetricsListener extends SparkListener {
-    val stages = mutable.LinkedHashMap[Int, StageAgg]()
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val si = sc.stageInfo
-      val agg = stages.getOrElseUpdate(si.stageId,
-        StageAgg(si.name.linesIterator.next().take(90)))
-      agg.wallMs += (for {
-        s <- si.submissionTime; c <- si.completionTime
-      } yield c - s).getOrElse(0L)
-      val m = si.taskMetrics
-      agg.taskTimeMs += m.executorRunTime
-      agg.cpuTimeNs += m.executorCpuTime
-      agg.shuffleReadMB += m.shuffleReadMetrics.totalBytesRead >> 20
-      agg.shuffleWriteMB += m.shuffleWriteMetrics.bytesWritten >> 20
-      agg.spillMemMB += m.memoryBytesSpilled >> 20
-      agg.spillDiskMB += m.diskBytesSpilled >> 20
-      agg.tasks += si.numTasks
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val engines: Map[String, (org.apache.spark.sql.SparkSession, Long) => (Double, Long, Long)] =
       Map("minhash" -> graft.DedupScaleSmoke.run,
@@ -59,22 +31,13 @@ object DedupCurveProfile {
     sizes.foreach { n =>
       val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
         .newSession()
-      val listener = new MetricsListener
-      spark.sparkContext.addSparkListener(listener)
-      val (secs, dups, expected) = engines(engine)(spark, n)
-      spark.sparkContext.removeSparkListener(listener)
+      val ((secs, dups, expected), report) = Observe.measure(spark)(engines(engine)(spark, n))
       println(f"%n=== $engine smoke n=$n wall=$secs%.1f s dups=$dups/$expected ===")
-      println(f"${"stage"}%-92s ${"wall_s"}%8s ${"task_s"}%8s ${"shR_MB"}%8s ${"shW_MB"}%8s ${"spillM"}%8s ${"spillD"}%8s ${"tasks"}%6s")
-      listener.stages.values.toSeq.sortBy(-_.taskTimeMs).take(18).foreach { a =>
-        println(f"${a.name}%-92s ${a.wallMs / 1000.0}%8.1f ${a.taskTimeMs / 1000.0}%8.1f " +
-          f"${a.shuffleReadMB}%8d ${a.shuffleWriteMB}%8d ${a.spillMemMB}%8d ${a.spillDiskMB}%8d ${a.tasks}%6d")
-      }
-      val tot = listener.stages.values
-      println(f"TOTAL task_s=${tot.map(_.taskTimeMs).sum / 1000.0}%.1f " +
-        f"task_cpu_s=${tot.map(_.cpuTimeNs).sum / 1e9}%.1f " +
-        f"shuffle_read_MB=${tot.map(_.shuffleReadMB).sum} " +
-        f"shuffle_write_MB=${tot.map(_.shuffleWriteMB).sum} " +
-        f"spill_disk_MB=${tot.map(_.spillDiskMB).sum}")
+      report.stageTable(18).foreach(println)
+      val t = report.totals
+      println(s"TOTAL task_s=${t.taskWallS} task_cpu_s=${t.taskCpuS} " +
+        s"shuffle_read_MB=${t.shuffleReadMb} shuffle_write_MB=${t.shuffleWriteMb} " +
+        s"spill_disk_MB=${t.spillDiskMb}")
     }
   }
 }

@@ -8,17 +8,9 @@ import graft.{Sessions, SparkEntry}
   */
 object DumpQuery {
   def main(args: Array[String]): Unit = {
-    def optArg(flag: String): Option[String] = {
-      val i = args.indexOf(flag)
-      if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
-    }
-    val sfDir = optArg("-sf").getOrElse("/root/testdata/sf0.01")
-    val maxRows = optArg("-n").map(_.toInt).getOrElse(100)
-    val flagIdxs = Seq("-sf", "-n").flatMap { f =>
-      val i = args.indexOf(f); if (i >= 0) Seq(i, i + 1) else Nil
-    }.toSet
-    val names = args.indices.filterNot(flagIdxs).map(args(_))
-    require(names.nonEmpty, "pass at least one query name")
+    val (names, opts) = QueryArgs.parse(args, "-sf", "-n")
+    val sfDir = opts.getOrElse("-sf", "/root/testdata/sf0.01")
+    val maxRows = opts.get("-n").map(_.toInt).getOrElse(100)
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     for (name <- names) {
       println(s"== $name @ $sfDir")

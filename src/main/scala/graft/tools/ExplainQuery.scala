@@ -7,11 +7,8 @@ import graft.{Sessions, SparkEntry}
   */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
-    val sfIdx = args.indexOf("-sf")
-    require(sfIdx < 0 || sfIdx + 1 < args.length, "-sf requires a directory argument")
-    val sfDir = if (sfIdx >= 0) args(sfIdx + 1) else "/root/testdata/sf0.01"
-    val names = (if (sfIdx >= 0) args.take(sfIdx) ++ args.drop(sfIdx + 2) else args).toSeq
-    require(names.nonEmpty, "pass at least one query name")
+    val (names, opts) = QueryArgs.parse(args, "-sf")
+    val sfDir = opts.getOrElse("-sf", "/root/testdata/sf0.01")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     for (name <- names) {
       println(s"===== $name =====")

@@ -1,43 +1,27 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.{Observe, Sessions, SparkEntry}
 
 /** Dev tool: time individual SparkEntry queries without running the whole
-  * bench. Usage: runMain graft.tools.QueryTimer <queryName>... [-sf <dir>]
-  * Same protocol as Bench (1 warm-up + 3 timed, median reported) so local
-  * numbers are comparable with BENCH_r* artifacts.
+  * bench, with Bench's protocol (`Observe.timeQuery`; median reported), so
+  * local numbers are comparable with BENCH_r* artifacts. One more run
+  * under `Observe.measure` then prints every Spark job the query launches
+  * (duration and description or call site), so a multi-action query's
+  * time is attributable to its internal passes; the timed runs stay
+  * un-listened. Usage: runMain graft.tools.QueryTimer <queryName>... [-sf <dir>]
   */
 object QueryTimer {
   def main(args: Array[String]): Unit = {
-    val sfIdx = args.indexOf("-sf")
-    require(sfIdx < 0 || sfIdx + 1 < args.length, "-sf requires a directory argument")
-    val sfDir = if (sfIdx >= 0) args(sfIdx + 1) else "/root/testdata/sf0.1"
-    val names = (if (sfIdx >= 0) args.take(sfIdx) ++ args.drop(sfIdx + 2) else args).toSeq
-    require(names.nonEmpty, "pass at least one query name")
-    // fail BEFORE the Spark session boots: a typo'd name otherwise costs a
-    // 20 s JVM+session startup per attempt, and the close-match hint saves
-    // a grep (q158_neo4j_meta_kg vs q158_plater_metakg was a real miss)
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, {
-      val hints = unknown.map { u =>
-        val near = SparkEntry.queries.keys
-          .filter(k => k.take(5) == u.take(5)).toSeq.sorted
-        s"$u (did you mean: ${if (near.nonEmpty) near.mkString(", ") else "?"})"
-      }
-      s"unknown queries: ${hints.mkString("; ")}"
-    })
+    val (names, opts) = QueryArgs.parse(args, "-sf")
+    val sfDir = opts.getOrElse("-sf", "/root/testdata/sf0.1")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     for (name <- names) {
       val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).count() // warm-up
-      val times = (1 to 3).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val times = Observe.timeQuery(spark)(fn(spark, sfDir))
       println(f"TIMER $name median=${times(1)}%.3f min=${times.head}%.3f max=${times.last}%.3f sf=$sfDir")
+      val (rows, report) = Observe.measure(spark)(fn(spark, sfDir).count())
+      println(s"[jobs] $name: $rows rows")
+      report.jobTable.foreach(line => println(s"[jobs]   $line"))
     }
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.graftbridge.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -42,23 +40,15 @@ class LineageSpec extends SparkSpec {
   test("iterate labels each generation's jobs and restores the caller's description") {
     val sc = spark.sparkContext
     val group = s"lineage-desc-${java.util.UUID.randomUUID()}"
-    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach(p => descriptions.add(p.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(l)
     sc.setJobGroup(group, "caller phase")
     try {
-      val out = Lineage.iterate("gen", spark.range(8).toDF("x"), 3, 0L)(
-        (df, _, _) => bump(df), observe = _.count())
+      val (out, report) = Observe.measure(spark)(Lineage.iterate("gen", spark.range(8).toDF("x"),
+        3, 0L)((df, _, _) => bump(df), observe = _.count()))
       assert(sc.getLocalProperty("spark.job.description") == "caller phase")
-      ListenerBus.drain(sc)
-      import scala.jdk.CollectionConverters._
-      assert(descriptions.asScala.toSet == Set("gen 1/3", "gen 2/3", "gen 3/3"))
+      assert(report.jobs.filter(_.group.contains(group)).map(_.description).toSet ==
+        Set("gen 1/3", "gen 2/3", "gen 3/3"))
       assert(out.agg(min(col("x"))).head().getLong(0) == 3L)
       Lineage.release(out)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    } finally sc.clearJobGroup()
   }
 }

@@ -1,9 +1,7 @@
 package graft.graph
 
-import graft.SparkSpec
+import graft.{Observe, SparkSpec}
 import graft.dedup.Components
-import org.apache.spark.graftbridge.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -97,16 +95,9 @@ class GraphAlgoSpec extends SparkSpec {
     val sc = spark.sparkContext
     def jobsOf(run: => Long): Int = {
       val group = s"job-pin-${java.util.UUID.randomUUID()}"
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-            n.incrementAndGet()
-      }
-      sc.addSparkListener(l)
       sc.setJobGroup(group, group)
-      try { run; ListenerBus.drain(sc); n.get }
-      finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+      try Observe.measure(spark)(run)._2.jobs.count(_.group.contains(group))
+      finally sc.clearJobGroup()
     }
     val seeds = Seq("a").toDF("node")
     val ids = edges.select(ascii(col("src")).cast("long").as("id_a"),
