@@ -35,8 +35,9 @@ object Cli {
       val merged = GraphMerger.mergeGraph(primary = Seq(
         GraphMerger.SourceGraph("a", spark.read.json(nodesA), spark.read.json(edgesA)),
         GraphMerger.SourceGraph("b", spark.read.json(nodesB), spark.read.json(edgesB))))
-      GraphBundle.finalizeBundle(
+      try GraphBundle.finalizeBundle(
         GraphSpec(graphId = "merged", sources = Nil), merged.nodes, merged.edges, out)
+      finally merged.release()
     case "redundant" =>
       KgxIO.writeJsonl(DerivedGraphs.redundantEdges(spark.read.json(args(1))),
         args(2), dedupKeys = Nil)
@@ -49,8 +50,8 @@ object Cli {
     case "plater-meta-kg" => // D7: the neo4j_generated_* pair, from DataFrames
       val (nodes, edges) = (spark.read.json(args(1)), spark.read.json(args(2)))
       Neo4jMetaKg.generate(nodes, edges, args(3))
-    case "ac" =>
-      val ac = AnswerCoalesce.build(spark.read.json(args(1)), spark.read.json(args(2)))
+    case "ac" => Lineage.scoped { scope =>
+      val ac = AnswerCoalesce.build(scope, spark.read.json(args(1)), spark.read.json(args(2)))
       val out = args(3)
       ac.nodeLabels.write.mode("overwrite").json(out + "/nodelabels")
       ac.nodeNames.write.mode("overwrite").json(out + "/nodenames")
@@ -58,6 +59,7 @@ object Cli {
       ac.prov.write.mode("overwrite").json(out + "/prov")
       ac.links.write.mode("overwrite").json(out + "/links")
       ac.backlinks.write.mode("overwrite").json(out + "/backlinks")
+    }
     case "neo4j-csv" =>
       GraphCsvSink.writeNeo4jNodes(spark.read.json(args(1)), args(3) + "/nodes")
       GraphCsvSink.writeNeo4jEdges(spark.read.json(args(2)), args(3) + "/edges")

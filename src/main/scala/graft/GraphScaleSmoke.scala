@@ -68,9 +68,9 @@ object GraphScaleSmoke {
 
   /** Run all three operators over an m-edge graph; wall seconds per op +
     * invariant verdicts. */
-  def run(spark: SparkSession, m: Long): Result = {
+  def run(spark: SparkSession, m: Long): Result = Lineage.scoped { scope =>
     val n = m / 4
-    val e = edges(spark, m).persist()
+    val e = scope.cached(edges(spark, m))
     e.count() // materialize: time the algorithms, not the generator
     def time[T](fn: => T): (Double, T) = {
       val t0 = System.nanoTime()
@@ -94,7 +94,6 @@ object GraphScaleSmoke {
       comps.agg(count(lit(1)).as("ids"),
         count_distinct(col("component")).as("comps")).head()
     }
-    e.unpersist()
     val ccOk = cc.getLong(0) == n && cc.getLong(1) == nBlocks
     Result(prSecs, hitsSecs, ccSecs, prSecs + hitsSecs + ccSecs,
       n, cc.getLong(1), prOk, hitsOk, ccOk)

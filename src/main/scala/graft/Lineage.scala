@@ -1,14 +1,70 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** The generation loop of the iterative operators (PageRank, KCore,
-  * LabelPropagation, ShortestPaths, Walks, dedup Components, Bpe): how a
-  * generation is cut from its lineage, materialized and freed lives in
-  * [[iterate]], and nowhere else.
+/** The frames one computation caches, released newest first when the
+  * scope closes. Newest first because `Dataset.unpersist` does not
+  * cascade: Spark recompiles a dependent cache whose buffers are not yet
+  * loaded, and no older frame can depend on a newer one. */
+final class Scope private[graft] () {
+  private var held = List.empty[Dataset[_]]
+
+  /** Register `ds`, then `persist()` it at the session's default cache
+    * storage level (`spark.sql.defaultCacheStorageLevel`). */
+  def cached[T](ds: Dataset[T]): Dataset[T] = {
+    held = ds :: held
+    ds.persist()
+  }
+
+  /** Free `ds` now, ahead of the scope's close. */
+  def release(ds: Dataset[_]): Unit = {
+    held = held.filterNot(_ eq ds)
+    Lineage.release(ds)
+  }
+
+  /** Release every frame still registered; a closed scope is empty. */
+  def close(): Unit = {
+    val frames = held
+    held = Nil
+    frames.foreach(Lineage.release)
+  }
+}
+
+/** Who frees a cached or checkpointed frame, in one place. The rule:
+  *  - A generation of an iterative loop (PageRank, KCore,
+  *    LabelPropagation, ShortestPaths, Walks, dedup Components, Bpe,
+  *    KCenter) is cut, materialized and freed by [[iterate]]; the caller
+  *    owns only the generation it returns.
+  *  - Every other cache is made by [[Scope.cached]], which registers the
+  *    frame before its first action. Leaving [[scoped]], normally or by a
+  *    throw, releases whatever is still registered; [[Scope.release]]
+  *    frees a frame earlier.
+  *  - A cache that outlives its function registers in a scope its caller
+  *    closes: one passed in, or one [[owned]] hands to the result.
+  *  - A read of a freed cache recomputes it, so a result that must not
+  *    re-run its cached inputs is cut from them (an eager
+  *    `localCheckpoint`) inside the body, before the close.
+  * Nothing else under `src/main/scala` calls `persist`, `cache` or
+  * `unpersist`; ScopeSpec fails on a new call site.
   */
 object Lineage {
+
+  /** Runs `body` with a fresh scope and closes it on the way out. */
+  def scoped[T](body: Scope => T): T = {
+    val scope = new Scope
+    try body(scope) finally scope.close()
+  }
+
+  /** [[scoped]] for caches that outlive `body`: the scope is closed here
+    * only if `body` throws; otherwise `body`'s result owns it and must
+    * close it. */
+  def owned[T](body: Scope => T): T = {
+    val scope = new Scope
+    try body(scope)
+    catch { case t: Throwable => scope.close(); throw t }
+  }
 
   /** Runs up to `n` generations from `seed` and returns the last one.
     *
@@ -69,14 +125,19 @@ object Lineage {
     }
   }
 
-  /** Eagerly free a SUPERSEDED generation. Safe ONLY after every
-    * consumer of `df` has fully materialized: a local checkpoint is not
-    * recomputable — a later read of the freed blocks fails the job.
-    * `Dataset.unpersist()` is a no-op for a checkpointed frame (it is not
-    * in the cache manager), so the checkpointed RDD itself is unpersisted;
-    * a cached frame (e.g. a persisted seed) falls back to `unpersist()`. */
-  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case l: LogicalRDD => l.rdd.unpersist(blocking = false)
-    case _ => df.unpersist()
-  }
+  /** Eagerly free a cached or checkpointed frame; a frame that is
+    * neither is left alone, so a second release is a no-op. Safe ONLY
+    * after every consumer of `df` has fully materialized: a local
+    * checkpoint is not recomputable — a later read of the freed blocks
+    * fails the job. A cached frame leaves the cache manager through
+    * `unpersist()` — also when its plan is a bare LogicalRDD, as for
+    * `spark.read.json` over a Dataset. `unpersist()` is a no-op for a
+    * checkpointed frame (it is not in the cache manager), so the
+    * checkpointed RDD itself is unpersisted. Both are non-blocking. */
+  def release(df: Dataset[_]): Unit =
+    if (df.storageLevel != StorageLevel.NONE) df.unpersist()
+    else df.queryExecution.analyzed match {
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 }

@@ -42,11 +42,8 @@ object Components {
 
     val nEdges = ee.count()
     if (nEdges == 0) return ee.select(col("u").as("id"), col("v").as("component"))
-    if (nEdges <= driverThreshold) {
-      val out = unionFind(ee) // collects ee to the driver eagerly
-      graft.Lineage.release(ee)
-      return out
-    }
+    // unionFind collects ee to the driver eagerly
+    if (nEdges <= driverThreshold) return try unionFind(ee) finally graft.Lineage.release(ee)
 
     val last = graft.Lineage.iterate("components", ee, maxIter, (-1L, -1L))((ee, _, _) => {
       // large-star: for every node u, attach each LARGER neighbor v to

@@ -141,16 +141,15 @@ object Dedup {
 
   private def minhashLshImpl(df: DataFrame, idCol: String, textCol: String,
                              shingleN: Int, bands: Int, rowsPerBand: Int,
-                             estimate: Boolean): DataFrame = {
+                             estimate: Boolean): DataFrame = graft.Lineage.scoped { scope =>
     val k = bands * rowsPerBand
     // docs too short to shingle have no minhash identity — drop them here,
     // or every empty doc would share the all-sentinel signature and
     // band-collide with every other empty doc
-    val sigs = graft.scale.Skew.ensureParallelism(df)
+    val sigs = scope.cached(graft.scale.Skew.ensureParallelism(df)
       .filter(size(TextOps.tokens(col(textCol))) >= shingleN)
       .select(col(idCol).as("id"),
-        minhashSignature(col(textCol), shingleN, k).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        minhashSignature(col(textCol), shingleN, k).as("sig")))
     // band hash = xxhash64 of (band index, band slice), exploded to
     // (bucket, id). Folding the band INTO the hash makes the join key ONE
     // long instead of (band int, bucket long) — same collisions for equal
@@ -185,11 +184,7 @@ object Dedup {
           aggregate(zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
             lit(0), (acc, v) => acc + v).cast("double") / k)
         .select(col("id_a"), col("id_b"), col("estimated_jaccard"))
-    // eagerly materialize the (small) pair result while sigs is cached,
-    // then release the cache — a lazy return could never unpersist safely
-    val out = withEstimate.localCheckpoint()
-    sigs.unpersist()
-    out
+    withEstimate.localCheckpoint()
   }
 
   /** Exact-verify a candidate pair set: recompute the n-gram Jaccard of
@@ -223,7 +218,7 @@ object Dedup {
     * document frequency > dfCap are dropped before the join (skew guard). */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 5, minJaccard: Double = 0.8,
-                        dfCap: Int = 100): DataFrame = {
+                        dfCap: Int = 100): DataFrame = graft.Lineage.scoped { scope =>
     // distinct 8-byte shingle hashes straight from the codegen expression —
     // no per-window string materialization
     val docs = graft.scale.Skew.ensureParallelism(df)
@@ -234,14 +229,13 @@ object Dedup {
       .filter(col("n_shingles") > 0)
     // cache the inverted index: the self-join's two branches and the
     // hot-shingle pass would otherwise recompute the explode lineage 4×
-    val inverted = docs
-      .select(col("id"), col("n_shingles"), explode(col("shingles")).as("shingle"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val inverted = scope.cached(docs
+      .select(col("id"), col("n_shingles"), explode(col("shingles")).as("shingle")))
     val hot = inverted.groupBy("shingle").count().filter(col("count") > dfCap).select("shingle")
     val cold = inverted.join(hot, Seq("shingle"), "left_anti")
     val a = cold.select(col("shingle"), col("id").as("id_a"), col("n_shingles").as("n_a"))
     val b = cold.select(col("shingle"), col("id").as("id_b"), col("n_shingles").as("n_b"))
-    val out = a.join(b, Seq("shingle"))
+    a.join(b, Seq("shingle"))
       .filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
       .agg(count(lit(1)).as("n_common"))
@@ -250,10 +244,7 @@ object Dedup {
           (col("n_a") + col("n_b") - col("n_common")), 4))
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-      // materialize the small pair set, then drop the inverted-index cache
       .localCheckpoint()
-    inverted.unpersist()
-    out
   }
 
   /** Winnowing document fingerprints (Schleimer et al., SIGMOD 2003):
@@ -272,24 +263,21 @@ object Dedup {
     * join (same skew guard as ngramJaccardPairs). */
   def winnowingCandidates(df: DataFrame, idCol: String, textCol: String,
                           shingleN: Int = 5, window: Int = 4,
-                          dfCap: Int = 100): DataFrame = {
+                          dfCap: Int = 100): DataFrame = graft.Lineage.scoped { scope =>
     val docs = graft.scale.Skew.ensureParallelism(df)
       .select(col(idCol).as("id"),
         winnowingFingerprints(col(textCol), shingleN, window).as("fps"))
       .filter(size(col("fps")) > 0)
-    val inverted = docs.select(col("id"), explode(col("fps")).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val inverted = scope.cached(docs.select(col("id"), explode(col("fps")).as("fp")))
     val hot = inverted.groupBy("fp").count().filter(col("count") > dfCap).select("fp")
     val cold = inverted.join(hot, Seq("fp"), "left_anti")
     val a = cold.select(col("fp"), col("id").as("id_a"))
     val b = cold.select(col("fp"), col("id").as("id_b"))
-    val out = a.join(b, Seq("fp"))
+    a.join(b, Seq("fp"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .distinct()
       .localCheckpoint()
-    inverted.unpersist()
-    out
   }
 
   /** Benchmark decontamination (the GPT-3 appendix-C / Pile convention):
@@ -358,24 +346,21 @@ object Dedup {
   def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame,
                          idCol: String, textCol: String,
                          shingleN: Int = 13, window: Int = 1,
-                         fpp: Double = 0.01): DataFrame = {
-    val benchFps = fingerprintStream(benchmark, idCol, textCol, shingleN, window)
-      .select("fp").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nBench = benchFps.count() // sizes the sketch; also materializes the cache
-      val bloom = benchFps.stat.bloomFilter("fp", math.max(nBench, 1L), fpp)
-      val bloomBc = corpus.sparkSession.sparkContext.broadcast(bloom)
-      val mightContain = udf((fp: Long) => bloomBc.value.mightContainLong(fp))
-      fingerprintStream(corpus, idCol, textCol, shingleN, window)
-        .filter(mightContain(col("fp")))
-        .join(broadcast(benchFps), Seq("fp"), "left_semi")
-        .groupBy(col("id"))
-        .agg(count(lit(1)).as("n_matched"))
-        // cut lineage before unpersist: the result must not silently
-        // recompute through a dropped cache
-        .localCheckpoint()
-    } finally benchFps.unpersist()
+                         fpp: Double = 0.01): DataFrame = graft.Lineage.scoped { scope =>
+    val benchFps = scope.cached(fingerprintStream(benchmark, idCol, textCol, shingleN, window)
+      .select("fp").distinct())
+    val nBench = benchFps.count() // sizes the sketch; also materializes the cache
+    val bloom = benchFps.stat.bloomFilter("fp", math.max(nBench, 1L), fpp)
+    val bloomBc = corpus.sparkSession.sparkContext.broadcast(bloom)
+    val mightContain = udf((fp: Long) => bloomBc.value.mightContainLong(fp))
+    fingerprintStream(corpus, idCol, textCol, shingleN, window)
+      .filter(mightContain(col("fp")))
+      .join(broadcast(benchFps), Seq("fp"), "left_semi")
+      .groupBy(col("id"))
+      .agg(count(lit(1)).as("n_matched"))
+      // cut lineage before the scope releases benchFps: the result must
+      // not silently recompute through a dropped cache
+      .localCheckpoint()
   }
 
   /** 64-bit SimHash: sum ±1 per bit over token hashes, sign → bit — one
@@ -399,12 +384,11 @@ object Dedup {
     * beyond hamming 3 is needed, union these candidates with a minhash-LSH
     * set (see queries.TextQueries q35) instead of narrowing the blocks. */
   def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        blocks: Int = 4, maxHamming: Int = 64): DataFrame = {
+                        blocks: Int = 4, maxHamming: Int = 64): DataFrame = graft.Lineage.scoped { scope =>
     val width = 64 / blocks
     // simhash is the expensive part (64-wide zip per token) — compute once
-    val hashed = graft.scale.Skew.ensureParallelism(df)
-      .select(col(idCol).as("id"), simhash(col(textCol)).as("simhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hashed = scope.cached(graft.scale.Skew.ensureParallelism(df)
+      .select(col(idCol).as("id"), simhash(col(textCol)).as("simhash")))
     val blocked = hashed.select(col("id"), col("simhash"),
       posexplode(transform(sequence(lit(0), lit(blocks - 1)),
         b => call_function("shiftright", col("simhash"), (b * width).cast("int"))
@@ -412,7 +396,7 @@ object Dedup {
       .withColumnRenamed("pos", "block").withColumnRenamed("col", "key")
     val a = blocked.select(col("block"), col("key"), col("id").as("id_a"), col("simhash").as("h_a"))
     val b = blocked.select(col("block"), col("key"), col("id").as("id_b"), col("simhash").as("h_b"))
-    val out = a.join(b, Seq("block", "key"))
+    a.join(b, Seq("block", "key"))
       .filter(col("id_a") < col("id_b"))
       // hamming is computable straight off the joined row — filtering here
       // keeps the dropDuplicates shuffle to the (tiny) surviving set rather
@@ -421,10 +405,7 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
       .select(col("id_a"), col("id_b"), col("hamming"))
-      // materialize the small pair set, then drop the simhash cache
       .localCheckpoint()
-    hashed.unpersist()
-    out
   }
 
   /** Directional n-gram containment (Broder's C(A,B) = |A∩B| / |A|) for
@@ -437,7 +418,7 @@ object Dedup {
     * pairs where EITHER direction clears `minContainment`. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3, minContainment: Double = 0.5,
-                       dfCap: Int = 100): DataFrame = {
+                       dfCap: Int = 100): DataFrame = graft.Lineage.scoped { scope =>
     val r4 = (c: org.apache.spark.sql.Column) =>
       graft.functions.StableRound.tieStableRound(c, 4)
     val docs = graft.scale.Skew.ensureParallelism(df)
@@ -446,14 +427,13 @@ object Dedup {
           TextOps.tokens(col(textCol)), shingleN).as("shingles"))
       .withColumn("n_shingles", size(col("shingles")))
       .filter(col("n_shingles") > 0)
-    val inverted = docs
-      .select(col("id"), col("n_shingles"), explode(col("shingles")).as("shingle"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val inverted = scope.cached(docs
+      .select(col("id"), col("n_shingles"), explode(col("shingles")).as("shingle")))
     val hot = inverted.groupBy("shingle").count().filter(col("count") > dfCap).select("shingle")
     val cold = inverted.join(hot, Seq("shingle"), "left_anti")
     val a = cold.select(col("shingle"), col("id").as("id_a"), col("n_shingles").as("n_a"))
     val b = cold.select(col("shingle"), col("id").as("id_b"), col("n_shingles").as("n_b"))
-    val out = a.join(b, Seq("shingle"))
+    a.join(b, Seq("shingle"))
       .filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
       .agg(count(lit(1)).as("n_common"))
@@ -462,7 +442,5 @@ object Dedup {
       .filter(col("cont_ab") >= minContainment || col("cont_ba") >= minContainment)
       .select(col("id_a"), col("id_b"), col("cont_ab"), col("cont_ba"))
       .localCheckpoint()
-    inverted.unpersist()
-    out
   }
 }

@@ -41,7 +41,7 @@ object PrefixJoin {
     * (id_a, id_b, jaccard) with id_a < id_b, jaccard tie-stably rounded
     * to 4 digits (the [[Dedup.verifyJaccardPairs]] contract). */
   def selfJoin(df: DataFrame, idCol: String, textCol: String,
-               shingleN: Int, tau: Double): DataFrame = {
+               shingleN: Int, tau: Double): DataFrame = graft.Lineage.scoped { scope =>
     val docs = graft.scale.Skew.ensureParallelism(df)
       .select(col(idCol).as("id"),
         graft.functions.TextExpressions.distinctShingleHashes(
@@ -50,8 +50,7 @@ object PrefixJoin {
       .filter(col("n") > 0)
     // the inverted index feeds both the df count and the df-attach join —
     // persist so the shingle explode lineage runs once
-    val tok = docs.select(col("id"), col("n"), explode(col("shingles")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tok = scope.cached(docs.select(col("id"), col("n"), explode(col("shingles")).as("sh")))
     val dfreq = tok.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     // prefix length p = n − ⌈τ·n⌉ + 1; the ε guard makes an unlucky
     // upward double rounding of τ·n lengthen the prefix, never shorten it
@@ -70,8 +69,7 @@ object PrefixJoin {
       .filter(col("n_b") >= col("n_a") * lit(tau) - lit(1e-9) &&
               col("n_a") >= col("n_b") * lit(tau) - lit(1e-9))
       .select(col("id_a"), col("id_b")).distinct()
-      .localCheckpoint() // materialize the (small) pair set before tok unpersists
-    tok.unpersist()
+      .localCheckpoint()
     Dedup.verifyJaccardPairs(df, idCol, textCol, cands, shingleN)
       .filter(col("jaccard") >= tau)
   }

@@ -32,7 +32,9 @@ object AnswerCoalesce {
       links: DataFrame,         // node, links array<struct(other,predicateBlob,isSource)>
       backlinks: DataFrame)     // node, predicateBlob, isSource, category, n
 
-  def build(nodes: DataFrame, edges: DataFrame,
+  /** The six artifacts, read off the kept nodes and edges, which are
+    * cached in `scope`: close it once every artifact is written. */
+  def build(scope: graft.Scope, nodes: DataFrame, edges: DataFrame,
             blocklist: Set[String] = Set.empty,
             symmetricPredicates: Set[String] = Biolink.symmetricPredicates): AcFiles = {
 
@@ -40,9 +42,8 @@ object AnswerCoalesce {
       if (blocklist.isEmpty) lit(false)
       else c.isin(blocklist.toSeq: _*) // blocklist is small (ARS list) → isin
 
-    val keptNodes = nodes
-      .filter(!col("id").startsWith("CAID") && !blockCol(col("id")))
-      .cache()
+    val keptNodes = scope.cached(nodes
+      .filter(!col("id").startsWith("CAID") && !blockCol(col("id"))))
 
     val nodeLabels = keptNodes.select(col("id"), col("category"))
     val nodeNames = keptNodes.select(col("id"),
@@ -51,14 +52,13 @@ object AnswerCoalesce {
       .select(explode(col("category")).as("category"))
       .groupBy("category").agg(count(lit(1)).as("n"))
 
-    val keptEdges = edges
+    val keptEdges = scope.cached(edges
       .filter(!col(Biolink.Subject).startsWith("CAID") && !col(Biolink.Object_).startsWith("CAID"))
       .filter(!blockCol(col(Biolink.Subject)) && !blockCol(col(Biolink.Object_)))
       .filter(!col(Biolink.Predicate).isin(FilterPredicates: _*))
       .withColumn("_pred_blob", predicateBlob(edges))
       .withColumn("_symmetric",
-        col(Biolink.Predicate).isin(symmetricPredicates.toSeq: _*))
-      .cache()
+        col(Biolink.Predicate).isin(symmetricPredicates.toSeq: _*)))
 
     val prov = {
       val provCols = Seq(Biolink.PrimaryKnowledgeSource, Biolink.AggregatorKnowledgeSources)

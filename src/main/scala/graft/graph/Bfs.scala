@@ -72,11 +72,11 @@ object Bfs {
     * reachable from `seeds` in at most `maxDepth` hops, where depth is
     * the BFS level (seeds are depth 0). `edges` must have `src`/`dst`
     * string columns; `seeds` a `node` column. */
-  def reach(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")).persist()
-    val seed = seeds.select(col("node")).distinct()
-      .withColumn("depth", lit(0)).persist()
+  def reach(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = graft.Lineage.scoped { scope =>
+    val e = scope.cached(edges.select(col("src"), col("dst")).distinct()
+      .repartition(col("src")))
+    val seed = scope.cached(seeds.select(col("node")).distinct()
+      .withColumn("depth", lit(0)))
     seed.count()
     var fragments = List(seed) // one cached fragment per level, newest first
     var visited = seed.select(col("node"))
@@ -87,31 +87,28 @@ object Bfs {
       level += 1
       // aliases: after level 1 the frontier derives from `e`, so attribute
       // references would be ambiguous in the self-join without them
-      val next = frontier.alias("f")
+      val next = scope.cached(frontier.alias("f")
         .join(e.alias("e"), col("f.node") === col("e.src"))
         .select(col("e.dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
-        .withColumn("depth", lit(level))
-        .persist()
-      if (next.count() == 0L) { next.unpersist(); done = true }
+        .withColumn("depth", lit(level)))
+      if (next.count() == 0L) { scope.release(next); done = true }
       else {
         fragments = next :: fragments
         visited = visited.unionByName(next.select(col("node")))
         frontier = next.select(col("node"))
       }
     }
-    e.unpersist()
-    // collapse the fragment union into ONE eagerly-materialized relation
-    // and release every per-level fragment — repeated invocations (bench
-    // loops, long-lived drivers) must not accumulate cached blocks. The
-    // localCheckpoint fallback's blocks are released by the
+    scope.release(e)
+    // collapse the fragment union into ONE eagerly-materialized relation;
+    // the scope then releases every per-level fragment, so repeated
+    // invocations (bench loops, long-lived drivers) accumulate no cached
+    // blocks. The localCheckpoint fallback's blocks are released by the
     // ContextCleaner when the returned DataFrame is garbage-collected; a
     // RELIABLE checkpoint's files are caller-owned and cleaned on GC
     // only under spark.cleaner.referenceTracking.cleanCheckpoints=true
     // (graft.Sessions sets it)
-    val result = collapse(fragments.reverse.reduce(_ unionByName _))
-    fragments.foreach(_.unpersist())
-    result
+    collapse(fragments.reverse.reduce(_ unionByName _))
   }
 
   /** Unbounded reachability (transitive closure with min depth): runs
@@ -127,14 +124,14 @@ object Bfs {
     * thereby bounded by `checkpointEvery` regardless of graph diameter,
     * which is what a 100 TB closure over a deep hierarchy needs. */
   def closure(edges: DataFrame, seeds: DataFrame,
-              checkpointEvery: Int = 10): DataFrame = {
+              checkpointEvery: Int = 10): DataFrame = graft.Lineage.scoped { scope =>
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")).persist()
-    val seed = seeds.select(col("node")).distinct()
-      .withColumn("depth", lit(0)).persist()
+    val e = scope.cached(edges.select(col("src"), col("dst")).distinct()
+      .repartition(col("src")))
+    val seed = scope.cached(seeds.select(col("node")).distinct()
+      .withColumn("depth", lit(0)))
     seed.count()
-    var acc = seed.toDF() // union of all levels since the last collapse
+    var acc = seed // union of all levels since the last collapse
     var fragments = List(seed) // cached fragments backing `acc`
     var prevCkptFile: Option[String] = None // superseded reliable-checkpoint file
     var visited = seed.select(col("node"))
@@ -143,13 +140,12 @@ object Bfs {
     var done = false
     while (!done) {
       level += 1
-      val next = frontier.alias("f")
+      val next = scope.cached(frontier.alias("f")
         .join(e.alias("e"), col("f.node") === col("e.src"))
         .select(col("e.dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
-        .withColumn("depth", lit(level))
-        .persist()
-      if (next.count() == 0L) { next.unpersist(); done = true }
+        .withColumn("depth", lit(level)))
+      if (next.count() == 0L) { scope.release(next); done = true }
       else {
         fragments = next :: fragments
         acc = acc.unionByName(next)
@@ -159,7 +155,7 @@ object Bfs {
           // collapse: one checkpointed relation replaces the fragment
           // union, truncating lineage AND bounding the anti-join's plan
           val collapsed = collapse(acc) // eager — safe to release
-          fragments.foreach(_.unpersist())
+          fragments.foreach(scope.release)
           fragments = Nil
           // the new checkpoint fully materialized its own copy, so the
           // PREVIOUS collapse's files (read by every level since) are
@@ -174,15 +170,15 @@ object Bfs {
         }
       }
     }
-    e.unpersist()
+    scope.release(e)
     // final collapse: same release discipline as [[reach]] — fragments
     // since the last checkpoint are folded into one materialized relation
-    // and unpersisted, so nothing stays pinned across invocations. The
-    // final checkpoint's files are caller-owned (see [[reach]]); every
-    // intermediate collapse's files were deleted when superseded, and the
-    // LAST intermediate one is deleted here once the final copy exists.
+    // and released with the scope, so nothing stays pinned across
+    // invocations. The final checkpoint's files are caller-owned (see
+    // [[reach]]); every intermediate collapse's files were deleted when
+    // superseded, and the LAST intermediate one is deleted here once the
+    // final copy exists.
     val result = collapse(acc)
-    fragments.foreach(_.unpersist())
     prevCkptFile.foreach(deleteCheckpoint(result, _))
     result
   }

@@ -44,8 +44,8 @@ object Hits {
   /** Returns (node, hub_raw, auth_raw, hub_share, auth_share) after
     * `iterations` exact-integer rounds; shares are the L1-normalized
     * scores rounded tie-stably to 9. Parallel edges collapse. */
-  def run(edges: DataFrame, iterations: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().persist()
+  def run(edges: DataFrame, iterations: Int): DataFrame = graft.Lineage.scoped { scope =>
+    val e = scope.cached(edges.select(col("src"), col("dst")).distinct())
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
 
@@ -75,7 +75,7 @@ object Hits {
             coalesce(col("auth"), lit(0L)).as("auth"))
           .localCheckpoint()
       }
-    val out = scores
+    scores
       .crossJoin(broadcast(scores.agg(
         sum(col("hub")).as("hs"), sum(col("auth")).as("asum"))))
       .select(col("node"), col("hub").as("hub_raw"), col("auth").as("auth_raw"),
@@ -84,7 +84,5 @@ object Hits {
         graft.functions.StableRound.tieStableRound(
           col("auth").cast("double") / col("asum").cast("double"), 9).as("auth_share"))
       .localCheckpoint(eager = false)
-    e.unpersist()
-    out
   }
 }

@@ -24,12 +24,12 @@ object KCore {
   /** `rounds` synchronous peels of the undirected graph (direction
     * ignored, self-loops dropped). Returns (node, deg): the surviving
     * nodes with their degrees in the surviving subgraph. */
-  def run(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def run(edges: DataFrame, k: Int, rounds: Int): DataFrame = graft.Lineage.scoped { scope =>
     val fwd = edges.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
-    val seed = fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
+    val seed = scope.cached(fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .repartition(col("src")).persist()
+      .repartition(col("src")))
     val und = graft.Lineage.iterate("kcore", seed, rounds, seed.count())((und, _, _) => {
       val keep = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)

@@ -24,15 +24,15 @@ object LabelPropagation {
   /** Run `iterations` supersteps over an edge table with string
     * `src`/`dst` columns (direction is ignored — edges are symmetrized).
     * Returns (node, lbl). */
-  def run(edges: DataFrame, iterations: Int): DataFrame = {
+  def run(edges: DataFrame, iterations: Int): DataFrame = graft.Lineage.scoped { scope =>
     val fwd = edges.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
-    val und = fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
+    val und = scope.cached(fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .repartition(col("src")).persist()
-    val seed = und.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).persist()
-    val labels = graft.Lineage.iterate("label_prop", seed, iterations, seed.count())(
+      .repartition(col("src")))
+    val seed = scope.cached(und.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")))
+    graft.Lineage.iterate("label_prop", seed, iterations, seed.count())(
       (labels, _, _) => {
         // neighbour minimum: edge (src, dst) contributes dst's label to src
         val nbrMin = und.join(labels, und("dst") === labels("node"))
@@ -42,7 +42,5 @@ object LabelPropagation {
           .select(col("node"),
             least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("lbl"))
       }, observe = _.count())
-    und.unpersist()
-    labels
   }
 }

@@ -26,13 +26,13 @@ object NodeSimilarity {
     * by more than `maxFeatureDeg` entities are ignored (skew + signal).
     * Returns (s1, s2, n_common, jaccard) with s1 < s2. */
   def jaccard(edges: DataFrame, minCommon: Int,
-              maxFeatureDeg: Int = Int.MaxValue): DataFrame = {
+              maxFeatureDeg: Int = Int.MaxValue): DataFrame = graft.Lineage.scoped { scope =>
     val e0 = edges.select(col("src"), col("feat")).distinct()
-    val e = (if (maxFeatureDeg == Int.MaxValue) e0 else {
+    val e = scope.cached(if (maxFeatureDeg == Int.MaxValue) e0 else {
       val hot = e0.groupBy(col("feat")).agg(count(lit(1)).as("fd"))
         .filter(col("fd") > maxFeatureDeg).select(col("feat"))
       e0.join(broadcast(hot), Seq("feat"), "left_anti")
-    }).persist()
+    })
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val inter = e.select(col("src").as("s1"), col("feat"))
       .join(e.select(col("src").as("s2"), col("feat")), Seq("feat"))
@@ -40,8 +40,7 @@ object NodeSimilarity {
       .groupBy(col("s1"), col("s2"))
       .agg(count(lit(1)).as("n_common"))
       .filter(col("n_common") >= minCommon)
-    // materialize the pair table while e is cached, then release the cache
-    val out = inter
+    inter
       .join(broadcast(deg.select(col("src").as("s1"), col("deg").as("d1"))), Seq("s1"))
       .join(broadcast(deg.select(col("src").as("s2"), col("deg").as("d2"))), Seq("s2"))
       .select(col("s1"), col("s2"), col("n_common"),
@@ -50,7 +49,5 @@ object NodeSimilarity {
             (col("d1") + col("d2") - col("n_common")).cast("double"), 6)
           .as("jaccard"))
       .localCheckpoint()
-    e.unpersist()
-    out
   }
 }

@@ -44,27 +44,26 @@ object PageRank {
   /** Returns (node, rank) after `iterations` power iterations with
     * damping `d`. `edges` needs `src`/`dst` columns; parallel edges are
     * collapsed (a link counts once, as in the classic formulation). */
-  def run(edges: DataFrame, iterations: Int, d: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().persist()
+  def run(edges: DataFrame, iterations: Int, d: Double = 0.85): DataFrame = graft.Lineage.scoped { scope =>
+    val e = scope.cached(edges.select(col("src"), col("dst")).distinct())
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // src-partitioned once; every iteration's contribution join co-locates on it
-    val annotated = e.join(outDeg, "src").repartition(col("src")).persist()
+    val annotated = scope.cached(e.join(outDeg, "src").repartition(col("src")))
 
-    val flagged = nodes.join(
+    val flagged = scope.cached(nodes.join(
         annotated.select(col("src").as("node")).distinct()
           .withColumn("has_out", lit(true)),
         Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("has_out"), lit(false)).as("has_out"))
-      .persist()
+      .select(col("node"), coalesce(col("has_out"), lit(false)).as("has_out")))
     val n = flagged.count() // materializes flagged + annotated; N feeds the literals
-    e.unpersist()
+    scope.release(e)
 
     def danglingOf(r: DataFrame): Double = r.filter(!col("has_out"))
       .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
 
-    val seed = flagged.withColumn("rank", lit(1.0 / n)).persist()
+    val seed = scope.cached(flagged.withColumn("rank", lit(1.0 / n)))
     val ranks = graft.Lineage.iterate("pagerank", seed, iterations, danglingOf(seed))(
       (ranks, dangling, _) => {
         val contribs = annotated
@@ -80,8 +79,6 @@ object PageRank {
       // one action caches every partition of the generation AND returns
       // the next iteration's dangling mass (unused after the last one)
       observe = danglingOf)
-    annotated.unpersist()
-    flagged.unpersist()
     ranks.select(col("node"), col("rank"))
   }
 }

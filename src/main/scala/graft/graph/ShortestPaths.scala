@@ -29,13 +29,13 @@ object ShortestPaths {
     * `edges` (src, dst, w: integer weight — exact arithmetic, no float
     * accumulation drift). Returns (node, dist): the minimum path cost
     * to every node reachable within `rounds` hops, seeds included. */
-  def run(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .repartition(col("src")).persist()
+  def run(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = graft.Lineage.scoped { scope =>
+    val e = scope.cached(edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
+      .repartition(col("src")))
     e.count()
-    val seed = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).persist()
-    val dist = graft.Lineage.iterate("sssp", seed, rounds, seed.count())((dist, _, _) =>
+    val seed = scope.cached(seeds.select(col("node")).distinct()
+      .withColumn("dist", lit(0L)))
+    graft.Lineage.iterate("sssp", seed, rounds, seed.count())((dist, _, _) =>
       // aliases: dist derives from e after round 1, so the self-join
       // needs explicit sides (the Bfs ambiguity note)
       dist.alias("d")
@@ -44,7 +44,5 @@ object ShortestPaths {
         .unionByName(dist)
         .groupBy(col("node")).agg(min(col("dist")).as("dist")),
       observe = _.count())
-    e.unpersist()
-    dist
   }
 }

@@ -32,8 +32,8 @@ object Triangles {
       .distinct()
 
   /** All triangles, one row each, corners id-sorted as (n1 < n2 < n3). */
-  def triangles(edges: DataFrame): DataFrame = {
-    val und = canonical(edges).persist()
+  def triangles(edges: DataFrame): DataFrame = graft.Lineage.scoped { scope =>
+    val und = scope.cached(canonical(edges))
     und.count() // materialize once; three joins below reuse it
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
@@ -46,28 +46,22 @@ object Triangles {
       (col("da") === col("db") && col("a") < col("b"))
     val ka = struct(col("da").as("d"), col("a").as("n"))
     val kb = struct(col("db").as("d"), col("b").as("n"))
-    val oriented = withDeg.select(
+    val oriented = scope.cached(withDeg.select(
       when(aFirst, col("a")).otherwise(col("b")).as("u"),
       when(aFirst, ka).otherwise(kb).as("ku"),
       when(aFirst, col("b")).otherwise(col("a")).as("v"),
-      when(aFirst, kb).otherwise(ka).as("kv"))
-      .persist()
+      when(aFirst, kb).otherwise(ka).as("kv")))
     oriented.count()
     // wedges from the minimum corner u: two out-edges (u,v1), (u,v2) with
     // v1 < v2 in the (deg, id) order, closed by oriented edge v1 → v2
     val e1 = oriented.select(col("u"), col("v").as("v1"), col("kv").as("k1"))
     val e2 = oriented.select(col("u"), col("v").as("v2"), col("kv").as("k2"))
     val close = oriented.select(col("u").as("v1"), col("v").as("v2"))
-    // materialize the (small) triangle set while inputs are cached, then
-    // release the caches — a lazy return could never unpersist safely
-    val tri = e1.join(e2, Seq("u")).filter(col("k1") < col("k2"))
+    e1.join(e2, Seq("u")).filter(col("k1") < col("k2"))
       .join(close, Seq("v1", "v2"), "left_semi")
       .select(array_sort(array(col("u"), col("v1"), col("v2"))).as("t"))
       .select(col("t")(0).as("n1"), col("t")(1).as("n2"), col("t")(2).as("n3"))
       .localCheckpoint()
-    und.unpersist()
-    oriented.unpersist()
-    tri
   }
 
   /** Per-node triangle participation counts (nodes in ≥1 triangle). */

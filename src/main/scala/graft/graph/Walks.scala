@@ -27,10 +27,10 @@ object Walks {
     * integer ordinal fed to the mixing hash. Returns
     * (start, hop1 … hopN). */
   def run(edges: DataFrame, seeds: DataFrame, steps: Int,
-          ord: Column => Column): DataFrame = {
+          ord: Column => Column): DataFrame = graft.Lineage.scoped { scope =>
     import org.apache.spark.sql.expressions.Window
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")).persist()
+    val e = scope.cached(edges.select(col("src"), col("dst")).distinct()
+      .repartition(col("src")))
     e.count()
     // the seed is not materialized on its own (so there is no observation
     // of it): hop 1 reads it inside its own job
@@ -49,7 +49,6 @@ object Walks {
         .withColumn("cur", col("dst"))
         .drop("src", "dst", "rn")
     }, observe = _.count())
-    e.unpersist()
     walks.drop("cur")
   }
 }

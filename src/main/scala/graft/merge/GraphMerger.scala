@@ -2,6 +2,7 @@ package graft.merge
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.{Lineage, Scope}
 import graft.model.Biolink
 
 /** Source-level merge strategies (SURVEY §2.5 A4-A8, §2.4 J4).
@@ -13,17 +14,17 @@ object GraphMerger {
                                mergeStrategy: String = "default")
 
   /** Result of a merge. `nodes`/`edges` read from cached merge
-    * intermediates: the count jobs materialize them once, and every
-    * downstream consumer (bundle write, derived graphs) reuses the cache
-    * instead of re-running the merge aggregation. The caches are
-    * LRU-evictable under memory pressure; long-lived sessions doing many
-    * builds should call [[release]] once a graph is fully consumed. */
+    * intermediates, owned by `caches`: the count jobs materialize them
+    * once, and every downstream consumer (bundle write, derived graphs)
+    * reuses the cache instead of re-running the merge aggregation. The
+    * caches are LRU-evictable under memory pressure; long-lived sessions
+    * doing many builds should call [[release]] once a graph is fully
+    * consumed. */
   final case class MergedGraph(nodes: DataFrame, edges: DataFrame,
-                               mergedNodeCount: Long, mergedEdgeCount: Long,
-                               cachedIntermediates: Seq[org.apache.spark.sql.Dataset[_]] = Nil) {
-    /** Unpersist the merge's cached intermediates (recomputation after
-      * this re-runs the merge aggregation). */
-    def release(): Unit = cachedIntermediates.foreach(_.unpersist())
+                               mergedNodeCount: Long, mergedEdgeCount: Long)(caches: Scope) {
+    /** Free the merge's cached intermediates (recomputation after this
+      * re-runs the merge aggregation). */
+    def release(): Unit = caches.close()
   }
 
   /** Cross-source schema harmonization for list-valued properties: the
@@ -53,21 +54,22 @@ object GraphMerger {
   }
 
   /** U1+A1-A3 — merge the primary sources: union, ordinal-tag in source
-    * order, property-merge nodes by id and edges by composite key. */
-  def mergePrimary(sources: Seq[SourceGraph],
-                   edgeMergingAttributes: Seq[String] = Nil,
-                   counters: Option[MergeEngine.MergeCounters] = None): MergedGraph = {
+    * order, property-merge nodes by id and edges by composite key. The
+    * merged intermediates are cached in `scope`. */
+  private def mergePrimary(scope: Scope, sources: Seq[SourceGraph],
+                           edgeMergingAttributes: Seq[String],
+                           counters: Option[MergeEngine.MergeCounters]): MergedGraph = {
     val nodes = unionAll(MergeEngine.withOrdinal(sources.map(_.nodes)))
     val edges = unionAll(MergeEngine.withOrdinal(sources.map(_.edges)))
-    val mn = MergeEngine.mergeNodes(nodes, counters).cache()
-    val me = MergeEngine.mergeEdges(edges, edgeMergingAttributes, counters).cache()
+    val mn = scope.cached(MergeEngine.mergeNodes(nodes, counters))
+    val me = scope.cached(MergeEngine.mergeEdges(edges, edgeMergingAttributes, counters))
     import org.apache.spark.sql.functions.{sum => fsum}
     val nMergedNodes = mn.agg(fsum("nMerged")).head().getLong(0)
     val nMergedEdges = me.agg(fsum("nMerged")).head().getLong(0)
     MergedGraph(
       MergeEngine.jsonToDf(mn, Some(nodes.schema)),
       MergeEngine.jsonToDf(me, Some(edges.schema)),
-      nMergedNodes, nMergedEdges, cachedIntermediates = Seq(mn, me))
+      nMergedNodes, nMergedEdges)(scope)
   }
 
   /** J4 — connected_edge_subset: keep a secondary source's edges only when
@@ -126,37 +128,36 @@ object GraphMerger {
                  secondary: Seq[SourceGraph] = Nil,
                  dontMerge: Seq[SourceGraph] = Nil,
                  edgeMergingAttributes: Seq[String] = Nil,
-                 counters: Option[MergeEngine.MergeCounters] = None): MergedGraph = {
+                 counters: Option[MergeEngine.MergeCounters] = None): MergedGraph = Lineage.owned { scope =>
     import org.apache.spark.sql.functions.{sum => fsum}
-    val base = mergePrimary(primary, edgeMergingAttributes, counters)
+    val base = mergePrimary(scope, primary, edgeMergingAttributes, counters)
     val primaryIds = base.nodes.select("id")
     val secondaryParts = secondary.map(sg => connectedEdgeSubset(primaryIds, sg))
 
-    val (edges, secEdgesMerged, edgeCaches) =
-      if (secondaryParts.isEmpty) (base.edges, 0L, Nil)
+    val (edges, secEdgesMerged) =
+      if (secondaryParts.isEmpty) (base.edges, 0L)
       else {
         val unioned = unionAll(MergeEngine.withOrdinal(base.edges +: secondaryParts.map(_._2)))
-        val me = MergeEngine.mergeEdges(unioned, edgeMergingAttributes, counters).cache()
+        val me = scope.cached(MergeEngine.mergeEdges(unioned, edgeMergingAttributes, counters))
         val n = me.agg(fsum("nMerged")).head().getLong(0)
-        (MergeEngine.jsonToDf(me, Some(unioned.schema)), n, Seq(me))
+        (MergeEngine.jsonToDf(me, Some(unioned.schema)), n)
       }
     val edgesOut =
       if (dontMerge.isEmpty) edges
       else unionAll(edges +: dontMerge.map(_.edges))
 
     val addedNodeFrames = secondaryParts.map(_._1) ++ dontMerge.map(_.nodes)
-    val (nodes, extraNodesMerged, nodeCaches) =
-      if (addedNodeFrames.isEmpty) (base.nodes, 0L, Nil)
+    val (nodes, extraNodesMerged) =
+      if (addedNodeFrames.isEmpty) (base.nodes, 0L)
       else {
         val unioned = unionAll(MergeEngine.withOrdinal(base.nodes +: addedNodeFrames))
-        val mn = MergeEngine.mergeNodes(unioned, counters).cache()
+        val mn = scope.cached(MergeEngine.mergeNodes(unioned, counters))
         val n = mn.agg(fsum("nMerged")).head().getLong(0)
-        (MergeEngine.jsonToDf(mn, Some(unioned.schema)), n, Seq(mn))
+        (MergeEngine.jsonToDf(mn, Some(unioned.schema)), n)
       }
     MergedGraph(nodes, edgesOut,
       base.mergedNodeCount + extraNodesMerged,
-      base.mergedEdgeCount + secEdgesMerged,
-      cachedIntermediates = base.cachedIntermediates ++ edgeCaches ++ nodeCaches)
+      base.mergedEdgeCount + secEdgesMerged)(scope)
   }
 
   /** J5 — remove nodes not referenced by any edge

@@ -219,22 +219,18 @@ object Normalizer {
     * (1→N) fan out to N nodes; duplicate normalized ids collapse (first
     * wins, like dedup-on-write). */
   def normalizeNodes(rawNodes: DataFrame, nodeMap: DataFrame,
-                     strict: Boolean = true): (DataFrame, NodeNormStats) = {
-    val (out, stats, release) = normalizeNodesCached(rawNodes, nodeMap, strict)
-    release() // plain API: stats computed off one materialization, cache dropped
-    (out, stats)
-  }
+                     strict: Boolean = true): (DataFrame, NodeNormStats) =
+    // plain API: stats computed off one materialization, cache dropped
+    graft.Lineage.scoped(normalizeNodesCached(_, rawNodes, nodeMap, strict))
 
-  /** [[normalizeNodes]] that returns its result PERSISTED
-    * (MEMORY_AND_DISK): the stats pass materializes the map-join +
-    * dropDuplicates once, and every downstream consumer (unconnected-node
-    * filter, parquet write) reuses that one materialization instead of
-    * re-running the join per action — a round-15 job profile (the table
-    * QueryTimer prints) measured the node pipeline executing ~3× per
-    * source without it. Call the returned release() once the result is
-    * fully consumed. */
-  def normalizeNodesCached(rawNodes: DataFrame, nodeMap: DataFrame,
-                           strict: Boolean = true): (DataFrame, NodeNormStats, () => Unit) = {
+  /** [[normalizeNodes]] that returns its result cached in `scope`: the
+    * stats pass materializes the map-join + dropDuplicates once, and every
+    * downstream consumer (unconnected-node filter, parquet write) reuses
+    * that one materialization instead of re-running the join per action —
+    * a round-15 job profile (the table QueryTimer prints) measured the
+    * node pipeline executing ~3× per source without it. */
+  def normalizeNodesCached(scope: graft.Scope, rawNodes: DataFrame, nodeMap: DataFrame,
+                           strict: Boolean = true): (DataFrame, NodeNormStats) = {
     // the reference strips newline characters from every top-level string
     // property of every node, in BOTH modes, BEFORE consulting the
     // normalizer response (orion/normalization.py:235-242 vs :280) —
@@ -291,25 +287,18 @@ object Normalizer {
       if (!strict) Seq(col("_custom_types").as("custom_node_types"))
       else if (hasCustom) Seq(preCustom.as("custom_node_types"))
       else Nil
-    val out = applied.select(Seq(
+    val out = scope.cached(applied.select(Seq(
         col("_final_id").as("id"),
         col("_final_name").as("name"),
         col("_final_cat").as("category"),
         m("equivalent_identifiers"),
         m("information_content")) ++ passthrough ++ extra: _*)
-      .dropDuplicates("id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // a throwing stats action must not leak the persist — the caller only
-    // registers release() after this returns
-    val (postNorm, failures) =
-      try {
-        val p = out.count() // fills the cache
-        // failures are REPORTED in both modes (the reference's
-        // failed_to_normalize list); only strict also drops the rows
-        val f = nodes.join(m, nodes("id") === m("orig_id"), "left_anti").count()
-        (p, f)
-      } catch { case t: Throwable => out.unpersist(); throw t }
-    (out, NodeNormStats(preNorm, postNorm, failures), () => { out.unpersist(); () })
+      .dropDuplicates("id"))
+    val postNorm = out.count() // fills the cache
+    // failures are REPORTED in both modes (the reference's
+    // failed_to_normalize list); only strict also drops the rows
+    val failures = nodes.join(m, nodes("id") === m("orig_id"), "left_anti").count()
+    (out, NodeNormStats(preNorm, postNorm, failures))
   }
 
   /** The reference's `node_normalization_lookup` in LENIENT mode: the
@@ -339,28 +328,24 @@ object Normalizer {
     * identical either way. */
   def normalizeEdges(edges: DataFrame, nodeMap: DataFrame, predicateMap: DataFrame,
                      defaultProvenance: String,
-                     computeStats: Boolean = true): (DataFrame, EdgeNormStats) = {
-    val (out, stats, release) = normalizeEdgesCached(edges, nodeMap, predicateMap,
-      defaultProvenance, computeStats)
-    release() // plain API: stats off one materialization, cache dropped
-    (out, stats)
-  }
+                     computeStats: Boolean = true): (DataFrame, EdgeNormStats) =
+    // plain API: stats off one materialization, cache dropped
+    graft.Lineage.scoped(normalizeEdgesCached(_, edges, nodeMap, predicateMap,
+      defaultProvenance, computeStats))
 
-  /** [[normalizeEdges]] that returns its result PERSISTED
-    * (MEMORY_AND_DISK) and computes the stats in TWO fused aggregation
-    * passes instead of four independent re-executions of the endpoint
-    * joins (failure count, loop count, splits agg, result count — a
-    * round-15 job profile, the table QueryTimer prints, measured the join
-    * pipeline running ~5× per source including the final write). Pass
-    * equivalences:
+  /** [[normalizeEdges]] that returns its result cached in `scope` and
+    * computes the stats in TWO fused aggregation passes instead of four
+    * independent re-executions of the endpoint joins (failure count,
+    * loop count, splits agg, result count — a round-15 job profile, the
+    * table QueryTimer prints, measured the join pipeline running ~5× per
+    * source including the final write). Pass equivalences:
     *  - failures = sourceEdges − distinct `_src_edge_id` surviving the
     *    endpoint joins (unchanged set: the rewrite steps are row-preserving);
     *  - loops ride the same aggregate as a conditional sum;
-    *  - splits = Σ_groups (count−1) = rows − distinct ids of the result.
-    * Call release() once the result is fully consumed. */
-  def normalizeEdgesCached(edges: DataFrame, nodeMap: DataFrame, predicateMap: DataFrame,
-                           defaultProvenance: String,
-                           computeStats: Boolean = true): (DataFrame, EdgeNormStats, () => Unit) = {
+    *  - splits = Σ_groups (count−1) = rows − distinct ids of the result. */
+  def normalizeEdgesCached(scope: graft.Scope, edges: DataFrame, nodeMap: DataFrame,
+                           predicateMap: DataFrame, defaultProvenance: String,
+                           computeStats: Boolean = true): (DataFrame, EdgeNormStats) = {
     val sourceEdges = if (computeStats) edges.count() else 0L
     val withOrd = edges.withColumn("_src_edge_id", monotonically_increasing_id())
 
@@ -396,10 +381,7 @@ object Normalizer {
       .withColumn(Biolink.PrimaryKnowledgeSource, pksCol)
     // stats mode materializes the endpoint joins exactly once; both stat
     // aggregates and the result derive from this cache
-    val rewritten =
-      if (computeStats)
-        rewritten0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else rewritten0
+    val rewritten = if (computeStats) scope.cached(rewritten0) else rewritten0
 
     // N6: subclass self-loop removal (post-normalization ids)
     val loopCond = col(Biolink.Predicate) === Biolink.SubclassOf &&
@@ -409,13 +391,11 @@ object Normalizer {
     // and `rewritten` are row-preserving, so the distinct-id set matches)
     val (edgesFailedDueToNodes, subclassLoopsRemoved) =
       if (!computeStats) (0L, 0L)
-      else try {
+      else {
         val a = rewritten.agg(
           count_distinct(col("_src_edge_id")).as("ids"),
           sum(when(loopCond, 1L)).as("loops")).head()
         (sourceEdges - a.getLong(0), if (a.isNullAt(1)) 0L else a.getLong(1))
-      } catch { // a throwing action must not leak the persist
-        case t: Throwable => rewritten.unpersist(); throw t
       }
     val kept = rewritten.filter(!loopCond)
 
@@ -433,23 +413,18 @@ object Normalizer {
     val result0 = straight.unionByName(inverted)
 
     if (!computeStats)
-      (result0.drop("_src_edge_id"), EdgeNormStats(0, 0, 0, 0, 0), () => ())
+      (result0.drop("_src_edge_id"), EdgeNormStats(0, 0, 0, 0, 0))
     else {
-      val result = result0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val result = scope.cached(result0)
       // second fused pass: result rows + distinct source ids; splits =
       // Σ_groups (count−1) = rows − distinct ids (identical to the former
       // per-id groupBy + sum(greatest(count−1, 0)) since every group ≥ 1)
-      val b =
-        try result.agg(count(lit(1)).as("n"),
-          count_distinct(col("_src_edge_id")).as("d")).head()
-        catch { // a throwing action must not leak either persist
-          case t: Throwable => result.unpersist(); rewritten.unpersist(); throw t
-        }
-      rewritten.unpersist() // result is materialized; the join cache served it
+      val b = result.agg(count(lit(1)).as("n"),
+        count_distinct(col("_src_edge_id")).as("d")).head()
+      scope.release(rewritten) // result is materialized; the join cache served it
       (result.drop("_src_edge_id"),
         EdgeNormStats(sourceEdges, b.getLong(0), b.getLong(0) - b.getLong(1),
-          edgesFailedDueToNodes, subclassLoopsRemoved),
-        () => { result.unpersist(); () })
+          edgesFailedDueToNodes, subclassLoopsRemoved))
     }
   }
 }

@@ -24,23 +24,22 @@ object GraphBundle {
     Files.writeString(path, node.toPrettyString)
 
   def finalizeBundle(spec: GraphSpec, nodes: DataFrame, edges: DataFrame,
-                     outDir: String, gzip: Boolean = true): BundleResult = {
+                     outDir: String, gzip: Boolean = true): BundleResult = graft.Lineage.scoped { scope =>
     val dir = Paths.get(outDir)
     Files.createDirectories(dir)
 
     // The finalize tail consumes each frame several times (jsonl write, QC
     // aggregation, schema aggregation); the inputs are typically
-    // `from_json` views over the merge's cached JSON, so without a persist
+    // `from_json` views over the merge's cached JSON, so without a cache
     // every consumer re-parses the JSON per action. One materialization
-    // here serves them all; released before return.
-    nodes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // here serves them all.
+    scope.cached(nodes)
+    scope.cached(edges)
     val sc = nodes.sparkSession.sparkContext
     def labeled[T](desc: String)(f: => T): T = {
       sc.setJobDescription(desc) // guide §1.5: attribute the finalize phases
       try f finally sc.setJobDescription(null)
     }
-    try {
     // bundle files (directory-of-parts layout; the scalable form of K1/K2)
     labeled("bundle: nodes.jsonl") {
       KgxIO.writeJsonl(nodes, s"$outDir/nodes.jsonl", dedupKeys = Seq("id"), gzip = gzip)
@@ -100,7 +99,6 @@ object GraphBundle {
     }
 
     BundleResult(outDir, qc.nodeCount, qc.edgeCount, buildVersion)
-    } finally { nodes.unpersist(); edges.unpersist() }
   }
 
   /** O5 — publish: promote a build-version directory to a release-version

@@ -106,20 +106,19 @@ object IngestPipeline {
         Seq(StageResult("cached", Stable.name, s"reused $versionDir")))
     }
     val stages = scala.collection.mutable.ArrayBuffer[StageResult]()
-    // normalization caches to drop once the content-versioned parquet exists
-    val releases = scala.collection.mutable.ArrayBuffer[() => Unit]()
+    // Every cache below is released once the content-versioned parquet is
+    // written (the read-back serves every later consumer).
+    graft.Lineage.scoped { scope =>
     val (rawNodes, rawEdges) = loader.parse(spark)
     // The parse result is consumed several times below (stage-memo counts,
     // normalization's own pre/post/failure counts, the parquet write) —
-    // without a persist each consumer RE-RUNS the parse, and raw sources
+    // without a cache each consumer RE-RUNS the parse, and raw sources
     // are the expensive kind (non-splittable archives, gz text, XML). One
-    // scan fills the cache; MEMORY_AND_DISK spills rather than evicting,
-    // so the shape holds for sources larger than executor memory. Released
-    // after the content-versioned parquet is written (the read-back serves
-    // every later consumer).
-    rawNodes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rawEdges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // scan fills the cache; the default MEMORY_AND_DISK level spills
+    // rather than evicting, so the shape holds for sources larger than
+    // executor memory.
+    scope.cached(rawNodes)
+    scope.cached(rawEdges)
     labeled(spark, s"ingest ${loader.sourceId}: parse + count") {
       stages += StageResult("parsing", Stable.name,
         s"nodes=${rawNodes.count()} edges=${rawEdges.count()}")
@@ -131,20 +130,17 @@ object IngestPipeline {
           .getOrElse(Normalizer.predicateMapDf(spark, Nil))
         // cached variants: stats + the downstream consumers (unconnected
         // filter, parquet writes) share ONE materialization of each
-        // normalization pipeline instead of re-running the joins per
-        // action; released in the finally once the parquet is on disk
-        val (nNodes, nodeStats, relN) =
-          Normalizer.normalizeNodesCached(rawNodes, nm, loader.strictNormalization)
-        releases += relN
+        // normalization pipeline instead of re-running the joins per action
+        val (nNodes, nodeStats) =
+          Normalizer.normalizeNodesCached(scope, rawNodes, nm, loader.strictNormalization)
         // lenient mode: failed nodes are KEPT, so edges referencing them
         // must survive on the original ids — the reference's lookup maps
         // a failed id to itself (orion/normalization.py:299-301)
         val edgeMap =
           if (loader.strictNormalization) nm
           else Normalizer.lenientEdgeMap(rawNodes, nm)
-        val (nEdges, edgeStats, relE) = Normalizer.normalizeEdgesCached(rawEdges, edgeMap, pm,
+        val (nEdges, edgeStats) = Normalizer.normalizeEdgesCached(scope, rawEdges, edgeMap, pm,
           s"infores:${loader.sourceId.toLowerCase}")
-        releases += relE
         val finalNodes =
           if (loader.removeUnconnected) GraphMerger.removeUnconnectedNodes(nNodes, nEdges)
           else nNodes
@@ -171,8 +167,6 @@ object IngestPipeline {
     val outNodes = spark.read.parquet(s"$outDir/nodes.parquet")
     val outEdges = spark.read.parquet(s"$outDir/edges.parquet")
     IngestResult(loader.sourceId, buildVersion, outNodes, outEdges, stages.toSeq)
-    } finally {
-      rawNodes.unpersist(); rawEdges.unpersist(); releases.foreach(_.apply())
     }
   }
 

@@ -55,15 +55,13 @@ object MiningQueries {
     * spec-proven on ShortestPathsSpec). Oracle: recursive-CTE path
     * enumeration + min — a different algorithm (all paths, then min)
     * reaching the same fixpoint. */
-  private val q124: Q = (s, dir) => {
-    // persist the edge aggregate: both the seed scan and the engine's own
+  private val q124: Q = (s, dir) => graft.Lineage.scoped { scope =>
+    // cache the edge aggregate: both the seed scan and the engine's own
     // repartition read it, and without the cache the lineitem groupBy
     // lineage would run twice
-    val e = supplyWeightedEdges(s, dir).persist()
+    val e = scope.cached(supplyWeightedEdges(s, dir))
     val seeds = e.filter(col("src").startsWith("P:")).select(col("src").as("node"))
-    val out = graft.graph.ShortestPaths.run(e, seeds, rounds = 3)
-    e.unpersist() // run() localCheckpoints its result — safe to drop here
-    out.orderBy(col("node"))
+    graft.graph.ShortestPaths.run(e, seeds, rounds = 3).orderBy(col("node"))
   }
 
   private val q124Sql =
@@ -447,19 +445,18 @@ object MiningQueries {
     * largely redundant). Source-level sets collapse the corpus to
     * (source, shingle) distinct postings first; the pair join runs on
     * that collapsed index, never on documents. */
-  private val q134: Q = (s, dir) => {
-    val toks = Tables.documents(s, dir)
+  private val q134: Q = (s, dir) => graft.Lineage.scoped { scope =>
+    val toks = scope.cached(Tables.documents(s, dir)
       .select(col("source"),
         explode(graft.functions.TextExpressions.distinctShingleHashes(
           graft.text.TextOps.tokens(col("text")), 3)).as("sh"))
-      .distinct()
-      .persist()
+      .distinct())
     val sized = toks.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val a = toks.join(sized, Seq("source"))
       .select(col("sh"), col("source").as("src_a"), col("n").as("n_a"))
     val b = toks.join(sized, Seq("source"))
       .select(col("sh"), col("source").as("src_b"), col("n").as("n_b"))
-    val out = a.join(b, Seq("sh"))
+    a.join(b, Seq("sh"))
       .filter(col("src_a") < col("src_b"))
       .groupBy(col("src_a"), col("src_b"), col("n_a"), col("n_b"))
       .agg(count(lit(1)).as("inter"))
@@ -468,8 +465,6 @@ object MiningQueries {
           (col("n_a") + col("n_b") - col("inter")).cast("double"), 4).as("jaccard"))
       .orderBy(col("src_a"), col("src_b"))
       .localCheckpoint()
-    toks.unpersist()
-    out
   }
 
   private val q134Sql =
@@ -543,13 +538,11 @@ object MiningQueries {
     * Node ordinal = the numeric id after the 'X:' prefix. Oracle: the
     * three hops unrolled as row_number-argmin CTEs over the identical
     * mixing hash. */
-  private val q136: Q = (s, dir) => {
-    val e = supplyWeightedEdges(s, dir).select(col("src"), col("dst")).persist()
+  private val q136: Q = (s, dir) => graft.Lineage.scoped { scope =>
+    val e = scope.cached(supplyWeightedEdges(s, dir).select(col("src"), col("dst")))
     val seeds = e.filter(col("src").startsWith("P:")).select(col("src").as("node"))
-    val out = graft.graph.Walks.run(e, seeds, steps = 3,
-      ord = c => substring(c, 3, 18).cast("long"))
-    e.unpersist()
-    out.orderBy(col("start"))
+    graft.graph.Walks.run(e, seeds, steps = 3,
+      ord = c => substring(c, 3, 18).cast("long")).orderBy(col("start"))
   }
 
   private val q136Sql = {

@@ -780,7 +780,7 @@ object SinkQueries {
   }
 
   /** Resolve an Automat graph id to its spec — the verbatim reference
-    * YAML when present, an equivalent inline paired spec otherwise. */
+    * YAML when present, [[inlineAutomatSpec]] otherwise. */
   private[queries] def resolveAutomatSpec(graphId: String): graft.pipeline.GraphSpec = {
     val refYaml = new java.io.File("/root/reference/graph_specs/automat-graph-spec.yaml")
     if (refYaml.isFile)
@@ -788,12 +788,21 @@ object SinkQueries {
           java.nio.file.Files.readString(refYaml.toPath))
         .find(_.graphId == graphId)
         .getOrElse(throw new IllegalStateException(s"$graphId not in spec"))
-    else // equivalent inline spec when the reference tree is absent
-      graft.pipeline.GraphSpec(graphId, graphId.stripSuffix("_Automat"),
-        Seq("neo4j"), conflation = false, Nil, Seq(
-          graft.pipeline.GraphSource(graphId.stripSuffix("_Automat")),
-          graft.pipeline.GraphSource("OntologicalHierarchy",
-            mergeStrategy = "connected_edge_subset")))
+    else inlineAutomatSpec(graphId)
+  }
+
+  /** Automat graphs whose primary source id is not the graph id without
+    * its `_Automat` suffix (automat-graph-spec.yaml). */
+  private val automatSourceIds = Map("STRING-DB_Automat" -> "STRING-DB-Human")
+
+  /** The reference spec's paired shape for `graphId`, built without the
+    * reference tree: its primary source plus OntologicalHierarchy as a
+    * connected_edge_subset source. */
+  private[queries] def inlineAutomatSpec(graphId: String): graft.pipeline.GraphSpec = {
+    val name = graphId.stripSuffix("_Automat")
+    graft.pipeline.GraphSpec(graphId, name, Seq("neo4j"), conflation = false, Nil, Seq(
+      graft.pipeline.GraphSource(automatSourceIds.getOrElse(graphId, name)),
+      graft.pipeline.GraphSource("OntologicalHierarchy", mergeStrategy = "connected_edge_subset")))
   }
 
   /** Build the graph through the FULL production pipeline into `out`. */

@@ -35,16 +35,15 @@ object Dbscan {
     * cluster = min core id of the component (−1 for noise). A point is
     * core when ≥ minPts points (itself included) lie within `eps`
     * (squared-L2 ≤ eps²). */
-  def run(points: DataFrame, eps: Long, minPts: Int): DataFrame = {
+  def run(points: DataFrame, eps: Long, minPts: Int): DataFrame = graft.Lineage.scoped { scope =>
     val pts = points.select(col("id").cast("long").as("id"),
       col("x").cast("long").as("x"), col("y").cast("long").as("y"))
     // ε-grid cell — floor division via double floor: |coords| are
     // milli-scaled (≲2²⁰), far inside double exactness, and floor gives
     // true floor semantics for negatives (integer `/` truncates toward 0)
     def cell(c: org.apache.spark.sql.Column) = floor(c.cast("double") / eps).cast("long")
-    val celled = pts
-      .withColumn("cx", cell(col("x"))).withColumn("cy", cell(col("y")))
-      .persist()
+    val celled = scope.cached(pts
+      .withColumn("cx", cell(col("x"))).withColumn("cy", cell(col("y"))))
     celled.count()
     // probe side: each point exploded to its 3×3 neighbor cells; build
     // side: each point in its own cell — every pair within ε shares one
@@ -59,21 +58,19 @@ object Dbscan {
     val d2 = (col("xa") - col("xb")) * (col("xa") - col("xb")) +
       (col("ya") - col("yb")) * (col("ya") - col("yb"))
     // directed ε-neighbor pairs, self excluded (counted back as +1 below)
-    val nbrs = probe.join(build, Seq("cx", "cy"))
+    val nbrs = scope.cached(probe.join(build, Seq("cx", "cy"))
       .filter(col("id_a") =!= col("id_b") && d2 <= lit(eps * eps))
-      .select(col("id_a"), col("id_b"))
-      .persist()
+      .select(col("id_a"), col("id_b")))
     nbrs.count()
     // degree over ALL points (left join, 0-neighbor coalesce): the count
     // includes the point itself, so with minPts=1 an isolated point is a
     // singleton CORE cluster, not noise — deriving core from `nbrs` alone
     // would silently exclude neighborless points from ever being core
-    val core = pts.select(col("id"))
+    val core = scope.cached(pts.select(col("id"))
       .join(nbrs.groupBy(col("id_a").as("id")).agg(count(lit(1)).as("nn")),
         Seq("id"), "left")
       .filter(coalesce(col("nn"), lit(0L)) + 1 >= minPts)
-      .select(col("id"))
-      .persist()
+      .select(col("id")))
     core.count()
     // cluster = connected components over the core-core ε-graph
     val coreEdges = nbrs
@@ -89,7 +86,7 @@ object Dbscan {
       .join(core.withColumnRenamed("id", "id_a"), Seq("id_a"), "left_anti")
       .join(coreClusters.withColumnRenamed("id", "id_b"), Seq("id_b"))
       .groupBy(col("id_a").as("id")).agg(min(col("cluster")).as("cluster"))
-    val out = pts.select(col("id"))
+    pts.select(col("id"))
       .join(coreClusters.withColumn("role", lit("core")), Seq("id"), "left")
       .join(borderClusters.withColumnRenamed("cluster", "bcluster"), Seq("id"), "left")
       .select(col("id"),
@@ -97,7 +94,5 @@ object Dbscan {
           when(col("bcluster").isNotNull, lit("border")).otherwise(lit("noise"))).as("role"),
         coalesce(col("cluster"), col("bcluster"), lit(-1L)).as("cluster"))
       .localCheckpoint()
-    celled.unpersist(); nbrs.unpersist(); core.unpersist()
-    out
   }
 }

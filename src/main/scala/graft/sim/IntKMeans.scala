@@ -39,8 +39,8 @@ object IntKMeans {
     * k clusters, `iterations` full (assign, update) steps, then a final
     * assignment pass. Returns (id, cluster, d2): each point's final
     * centroid id and exact squared distance to it. */
-  def assign(points: DataFrame, k: Int, dims: Int, iterations: Int): DataFrame = {
-    val pts = points.select(col("id").cast("long").as("id"), col("x")).persist()
+  def assign(points: DataFrame, k: Int, dims: Int, iterations: Int): DataFrame = graft.Lineage.scoped { scope =>
+    val pts = scope.cached(points.select(col("id").cast("long").as("id"), col("x")))
     pts.count()
     // init: k smallest ids, centroid id = 0-based rank in that order.
     // k rows — a driver-side take is the broadcast, not a scale concern.
@@ -82,8 +82,6 @@ object IntKMeans {
       // re-seeding) — the oracle's COALESCE twin
       cents = cents.map { case (cid, old) => (cid, sums.getOrElse(cid, old)) }
     }
-    val out = assignTo(cents).localCheckpoint()
-    pts.unpersist()
-    out
+    assignTo(cents).localCheckpoint()
   }
 }

@@ -20,33 +20,24 @@ import org.apache.spark.sql.functions._
   * Scale shape: the per-point rolling min-distance column updates
   * map-side (the new center rides the plan as a literal — no join, no
   * shuffle); each step's argmax is ONE map-combined struct-max
-  * aggregate. k steps = k narrow passes over a persisted table; the
+  * aggregate. k steps = k narrow passes, each over the last step's; the
   * classic trade of the sequential greedy (k passes) for full
   * parallelism within each pass.
   *
-  * Plan growth: `persist` caches DATA but the analyzed plan still
-  * stacks one filter + `least(dmin, d2To(c))` per step, so Catalyst
-  * re-analyzes an O(rank·dims)-node tree every step — fine for
-  * coreset-sized k (tens), measurably quadratic in driver time by a few
-  * hundred steps. Every [[lineageCutEvery]] steps the frame is
-  * `localCheckpoint`ed instead, which resets the plan to a LogicalRDD
-  * leaf (constant per-step analysis cost thereafter) at the price of
-  * recompute-on-failure for that cached slice — the same
-  * bounded-driver-loop discipline as the graph plane's iteration cuts.
+  * Plan growth: each step is one [[graft.Lineage.iterate]] generation
+  * — a lazy `localCheckpoint` that the step's argmax `collect` fills —
+  * so the plan is a LogicalRDD leaf plus one filter and one
+  * `least(dmin, d2To(c))` whatever the rank, and a task serializes one
+  * RDD of lineage, not one per step since the last cut.
   */
 object KCenter {
-
-  /** Steps between lineage cuts — large enough that checkpoint overhead
-    * is amortized, small enough that the analyzed plan never exceeds
-    * ~64 stacked filter/least layers. */
-  val lineageCutEvery = 64
 
   /** Select k centers from `points` (id: long, x: array<long> of length
     * dims). Returns (rank, id, d2): the selection order (1-based), the
     * chosen point, and its min squared distance to all PRIOR centers at
     * selection time (0 for the seed; non-increasing thereafter — the
     * covering-radius sequence). */
-  def select(points: DataFrame, k: Int, dims: Int): DataFrame = {
+  def select(points: DataFrame, k: Int, dims: Int): DataFrame = graft.Lineage.scoped { scope =>
     val spark = points.sparkSession
     import spark.implicits._
     def d2To(cx: Array[Long]) = (0 until dims).map { i =>
@@ -57,42 +48,36 @@ object KCenter {
     val seedId = seed.getAs[Long]("id")
     val seedX = seed.getAs[scala.collection.Seq[Long]]("x").toArray
     var chosen = List((1, seedId, 0L))
+    // The next center, appended to `chosen`: argmax(dmin), ties to the
+    // SMALLEST id — struct max compares dmin first, then -id (max of -id
+    // = min id); x rides along for the next update's literal. None once
+    // the pool is empty (k > |points|).
+    def farthest(pool: DataFrame): Option[(Long, Array[Long])] = {
+      val m = pool.agg(max(struct(col("dmin"), (-col("id")).as("nid"),
+        col("x"))).as("m")).select(col("m.*")).collect().head
+      if (m.isNullAt(m.fieldIndex("nid"))) None
+      else {
+        chosen ::= ((chosen.size + 1, -m.getAs[Long]("nid"), m.getAs[Long]("dmin")))
+        Some((-m.getAs[Long]("nid"), m.getAs[scala.collection.Seq[Long]]("x").toArray))
+      }
+    }
     // chosen centers leave the candidate pool: without the filter, once
     // the covering radius hits 0 (k exceeds the distinct coordinate
     // vectors — duplicate embeddings), the argmax would re-select the
     // smallest-id already-chosen point forever instead of the remaining
     // co-located ones. With it, duplicates are emitted at d2 = 0 until
     // the pool is exhausted, at which point selection stops early.
-    var cur = points.select(col("id").cast("long").as("id"), col("x"))
+    val pool = scope.cached(points.select(col("id").cast("long").as("id"), col("x"))
       .filter(col("id") =!= seedId)
-      .withColumn("dmin", d2To(seedX))
-      .persist()
-    cur.count()
-    var rank = 2
-    var exhausted = false
-    while (rank <= k && !exhausted) {
-      // argmax(dmin), ties to the SMALLEST id: struct max compares dmin
-      // first, then -id (max of -id = min id); x rides along for the
-      // next update's literal
-      val next = cur.agg(max(struct(col("dmin"), (-col("id")).as("nid"),
-        col("x"))).as("m")).select(col("m.*")).collect().head
-      if (next.isNullAt(next.fieldIndex("nid"))) exhausted = true // pool empty: k > |points|
-      else {
-        val nid = -next.getAs[Long]("nid")
-        val nx = next.getAs[scala.collection.Seq[Long]]("x").toArray
-        chosen ::= ((rank, nid, next.getAs[Long]("dmin")))
-        val grown = cur.filter(col("id") =!= nid)
-          .withColumn("dmin", least(col("dmin"), d2To(nx)))
-        // periodic lineage cut: see the plan-growth note in the scaladoc
-        val updated =
-          if (rank % lineageCutEvery == 0) grown.localCheckpoint(true)
-          else { val u = grown.persist(); u.count(); u }
-        cur.unpersist()
-        cur = updated
-      }
-      rank += 1
-    }
-    cur.unpersist()
+      .withColumn("dmin", d2To(seedX)))
+    val second = if (k >= 2) farthest(pool) else None
+    if (k > 2 && second.nonEmpty)
+      graft.Lineage.release(graft.Lineage.iterate("kcenter", pool, k - 2, second)(
+        (pool, center, _) => {
+          val (id, x) = center.get
+          pool.filter(col("id") =!= id).withColumn("dmin", least(col("dmin"), d2To(x)))
+        },
+        observe = farthest, until = (_, center) => center.isEmpty))
     chosen.reverse.toDF("rank", "id", "d2")
   }
 }

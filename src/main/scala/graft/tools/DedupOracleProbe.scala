@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.{Sessions, Tables}
+import graft.{Lineage, Sessions, Tables}
 import graft.dedup.Dedup
 
 /** Dev probe for choosing oracle-safe thresholds for q34/q35: computes the
@@ -14,12 +14,12 @@ object DedupOracleProbe {
     val dirs = if (args.nonEmpty) args.toSeq
                else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-    for (dir <- dirs) {
+    for (dir <- dirs) Lineage.scoped { scope =>
       val docs = Tables.documents(spark, dir)
       println(s"=== $dir (${docs.count()} docs) ===")
       // exact ground truth: all pairs with jaccard >= 0.1 (no dfCap — true jaccard)
-      val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.1, dfCap = Int.MaxValue).cache()
+      val exact = scope.cached(Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+        shingleN = 3, minJaccard = 0.1, dfCap = Int.MaxValue))
       println("exact jaccard histogram (>=0.1):")
       exact.withColumn("bucket", floor(col("jaccard") * 10) / 10)
         .groupBy("bucket").count().orderBy("bucket").collect()
@@ -28,16 +28,16 @@ object DedupOracleProbe {
       // EXACTLY the production configs: q34 = minhash b32×r2; q35 = simhash
       // blocks=4 (default maxHamming) ∪ the q34 minhash set. Probing any
       // other config would validate a pipeline nobody runs.
-      val mh = Dedup.minhashLshCandidates(docs, "doc_id", "text",
+      val mh = scope.cached(Dedup.minhashLshCandidates(docs, "doc_id", "text",
         shingleN = 3, bands = 32, rowsPerBand = 2)
-        .select("id_a", "id_b").cache()
-      val shAll = Dedup.simhashCandidates(docs, "doc_id", "text",
-        blocks = 4, maxHamming = 8).cache()
+        .select("id_a", "id_b"))
+      val shAll = scope.cached(Dedup.simhashCandidates(docs, "doc_id", "text",
+        blocks = 4, maxHamming = 8))
       val sh = shAll.select("id_a", "id_b")
-      val union = sh.union(mh).distinct().cache()
-      val wn = Dedup.winnowingCandidates(docs, "doc_id", "text",
-        shingleN = 5, window = 4, dfCap = 100).cache()
-      val wnUnion = wn.union(mh).distinct().cache()
+      val union = scope.cached(sh.union(mh).distinct())
+      val wn = scope.cached(Dedup.winnowingCandidates(docs, "doc_id", "text",
+        shingleN = 5, window = 4, dfCap = 100))
+      val wnUnion = scope.cached(wn.union(mh).distinct())
       println(s"minhash cands(b32r2): ${mh.count()}, simhash cands(b4): ${sh.count()}, " +
         s"union: ${union.count()}, winnowing cands: ${wn.count()}, wnUnion: ${wnUnion.count()}")
       println("truth-pair hamming histogram (jaccard>=0.8):")
@@ -57,8 +57,6 @@ object DedupOracleProbe {
           f"missSimhash=$missSh%d missUnion(q35)=$missUnion%d " +
           f"missWinnow=$missWn%d missWnUnion(q46)=$missWnUnion%d")
       }
-      exact.unpersist(); mh.unpersist(); sh.unpersist(); union.unpersist()
-      wn.unpersist(); wnUnion.unpersist()
     }
     spark.stop()
   }

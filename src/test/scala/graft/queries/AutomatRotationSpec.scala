@@ -76,6 +76,13 @@ class AutomatRotationSpec extends SparkSpec {
     assert(e.getMessage.contains("rotatable graphs"))
   }
 
+  test("the inline STRING-DB_Automat spec names STRING-DB-Human and is rotatable") {
+    // the spec q162 builds on a host without the reference tree
+    val spec = SinkQueries.inlineAutomatSpec("STRING-DB_Automat")
+    assert(spec.sources.map(_.id) == Seq("STRING-DB-Human", "OntologicalHierarchy"))
+    SinkQueries.validateRotatable(spec)
+  }
+
   test("all 23 production Automat graphs are rotatable") {
     assume(new java.io.File("/root/reference/graph_specs/automat-graph-spec.yaml").isFile,
       "reference graph spec not available")

@@ -60,15 +60,20 @@ class KCenterSpec extends SparkSpec {
   }
 
   test("large k across lineage cuts matches the sequential reference exactly") {
-    // k = 150 > 2 × lineageCutEvery: the selection sequence must be
-    // identical on both sides of every localCheckpoint plan reset
-    assert(KCenter.lineageCutEvery <= 64)
+    // k = 150 steps, each a checkpointed generation: the selection sequence
+    // must match the sequential greedy, and select must free every
+    // generation it made. Suites run one at a time in the forked test JVM
+    // and the ContextCleaner only ever removes entries: compare id sets.
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val n = 160
     // deterministic scatter: x = (i*37 % 211, i*53 % 199) — no two points
     // coincide, ids 0..159
     val data = (0L until n.toLong).map(i => (i, Seq(i * 37 % 211, i * 53 % 199)))
+    val before = persisted()
     val got = KCenter.select(data.toDF("id", "x"), k = 150, dims = 2).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
+    val left = persisted() -- before
+    assert(left.isEmpty, s"RDDs created by select still persisted: $left")
 
     // sequential greedy reference: same seed, argmax(dmin) ties to min id
     val xs = data.toMap
