@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.execution.LogicalRDD
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.graftbridge.ListenerBus
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.util.{ExecutionListenerManager, QueryExecutionListener}
 import org.apache.spark.storage.StorageLevel
 
 /** The frames one computation caches, released newest first when the
@@ -12,11 +16,15 @@ final class Scope private[graft] () {
   private var held = List.empty[Dataset[_]]
 
   /** Register `ds`, then `persist()` it at the session's default cache
-    * storage level (`spark.sql.defaultCacheStorageLevel`). */
-  def cached[T](ds: Dataset[T]): Dataset[T] = {
-    held = ds :: held
-    ds.persist()
-  }
+    * storage level (`spark.sql.defaultCacheStorageLevel`). A frame whose
+    * plan is cached already comes back as it is, unregistered: its cache
+    * belongs to whoever made it. */
+  def cached[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.storageLevel != StorageLevel.NONE) ds
+    else {
+      held = ds :: held
+      ds.persist()
+    }
 
   /** Free `ds` now, ahead of the scope's close. */
   def release(ds: Dataset[_]): Unit = {
@@ -29,6 +37,88 @@ final class Scope private[graft] () {
     val frames = held
     held = Nil
     frames.foreach(Lineage.release)
+  }
+}
+
+/** Aggregates over a frame, computed by the action that runs the frame
+  * anyway. [[Stats.observe]] puts them on the frame as a
+  * `Dataset.observe`; an observed frame registered with [[Scope.cached]]
+  * has them reported once, by the action that fills the cache, and a
+  * later action over the cache leaves them unchanged.
+  *
+  * A read takes the reported values when an action that succeeded
+  * reported them. Otherwise — a read before any action, an action that
+  * failed, or AQE pruning the frame out of the plan that ran (a join whose
+  * other side is empty) — it runs the same aggregates once, as a job
+  * labelled `label`, over the observed frame. Either way it keeps what it
+  * got, so a value never depends on whether the observation fired, and a
+  * read never waits on an observation that has not.
+  *
+  * Observations complete on the listener bus, after their action has
+  * returned, so a read drains the bus before it looks. Spark rejects
+  * distinct aggregates in observed metrics; every aggregate is named. */
+final class Stats private (frame: Dataset[_], observation: Observation,
+                           aggs: Seq[Column], label: String) {
+  private var row: Row = _
+
+  /** The aggregate named `name`; a null (a sum over no rows) reads 0. */
+  def long(name: String): Long = {
+    val r = value
+    val i = r.fieldIndex(name)
+    if (r.isNullAt(i)) 0L else r.getLong(i)
+  }
+
+  private def value: Row = synchronized {
+    if (row == null) row = reported.getOrElse(fallback())
+    row
+  }
+
+  private def reported: Option[Row] = {
+    if (!observation.future.isCompleted) ListenerBus.drain(frame.sparkSession.sparkContext)
+    observation.future.value.flatMap(_.toOption)
+      .filter(r => r.length > 0 && !Stats.FailedActions(observation.name))
+  }
+
+  private def fallback(): Row = {
+    val sc = frame.sparkSession.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try frame.agg(aggs.head, aggs.tail: _*).head()
+    finally sc.setJobDescription(caller)
+  }
+}
+
+object Stats {
+
+  /** `ds` with `aggs` observed on it, and the [[Stats]] that reads them.
+    * Consume the returned frame, not `ds`: only its actions report. */
+  def observe[T](ds: Dataset[T], label: String)(aggs: Column*): (Dataset[T], Stats) = {
+    FailedActions.watch(ds.sparkSession)
+    val observation = Observation()
+    val observed = ds.observe(observation, aggs.head, aggs.tail: _*)
+    (observed, new Stats(observed, observation, aggs, label))
+  }
+
+  /** Names of the observations in plans whose action failed: Spark
+    * completes those with whatever the finished tasks had counted. */
+  private object FailedActions extends QueryExecutionListener {
+    private val names = ConcurrentHashMap.newKeySet[String]()
+    private val watched = java.util.Collections.synchronizedSet(
+      java.util.Collections.newSetFromMap(
+        new java.util.WeakHashMap[ExecutionListenerManager, java.lang.Boolean]()))
+
+    def apply(name: String): Boolean = names.contains(name)
+
+    def watch(spark: SparkSession): Unit =
+      if (watched.add(spark.listenerManager)) spark.listenerManager.register(this)
+
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = ()
+
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+      qe.logical.foreach {
+        case c: CollectMetrics => names.add(c.name)
+        case _ =>
+      }
   }
 }
 

@@ -2,7 +2,7 @@ package graft.merge
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.{Lineage, Scope}
+import graft.{Lineage, Scope, Stats}
 import graft.model.Biolink
 
 /** Source-level merge strategies (SURVEY §2.5 A4-A8, §2.4 J4).
@@ -13,18 +13,32 @@ object GraphMerger {
   final case class SourceGraph(sourceId: String, nodes: DataFrame, edges: DataFrame,
                                mergeStrategy: String = "default")
 
-  /** Result of a merge. `nodes`/`edges` read from cached merge
-    * intermediates, owned by `caches`: the count jobs materialize them
-    * once, and every downstream consumer (bundle write, derived graphs)
-    * reuses the cache instead of re-running the merge aggregation. The
-    * caches are LRU-evictable under memory pressure; long-lived sessions
-    * doing many builds should call [[release]] once a graph is fully
-    * consumed. */
-  final case class MergedGraph(nodes: DataFrame, edges: DataFrame,
-                               mergedNodeCount: Long, mergedEdgeCount: Long)(caches: Scope) {
-    /** Free the merge's cached intermediates (recomputation after this
-      * re-runs the merge aggregation). */
+  /** Result of a merge. `nodes`/`edges` are cached in `caches`: the first
+    * action over them (the bundle write) materializes each once, and
+    * every later consumer (QC, schema, derived graphs) reuses the cache
+    * instead of re-running the merge aggregation. The merge counts ride
+    * that first action; read them after it. The caches are LRU-evictable
+    * under memory pressure; long-lived sessions doing many builds should
+    * call [[release]] once a graph is fully consumed. */
+  final case class MergedGraph(nodes: DataFrame, edges: DataFrame)(
+      nodeMerges: Seq[Stats], edgeMerges: Seq[Stats], caches: Scope) {
+    /** Node rows merged away into another row with the same id. */
+    def mergedNodeCount: Long = nodeMerges.map(_.long("n")).sum
+    /** Edge rows merged away into another row with the same key. */
+    def mergedEdgeCount: Long = edgeMerges.map(_.long("n")).sum
+    /** Free the merge's caches (recomputation after this re-runs the
+      * merge aggregation). */
     def release(): Unit = caches.close()
+  }
+
+  /** `merged` as a typed frame over `schema`, observed for its
+    * merged-away count. */
+  private def observedMerge(merged: Dataset[MergeEngine.MergedEntity],
+                            schema: org.apache.spark.sql.types.StructType,
+                            what: String): (DataFrame, Stats) = {
+    val (observed, merges) = Stats.observe(merged, s"merge: $what merged count")(
+      sum(col("nMerged")).as("n"))
+    (MergeEngine.jsonToDf(observed, Some(schema)), merges)
   }
 
   /** Cross-source schema harmonization for list-valued properties: the
@@ -55,21 +69,16 @@ object GraphMerger {
 
   /** U1+A1-A3 — merge the primary sources: union, ordinal-tag in source
     * order, property-merge nodes by id and edges by composite key. The
-    * merged intermediates are cached in `scope`. */
-  private def mergePrimary(scope: Scope, sources: Seq[SourceGraph],
-                           edgeMergingAttributes: Seq[String],
-                           counters: Option[MergeEngine.MergeCounters]): MergedGraph = {
+    * merged (nodes, edges) are lazy; [[mergeGraph]] caches what it reads
+    * twice. */
+  private def mergePrimary(sources: Seq[SourceGraph], edgeMergingAttributes: Seq[String],
+                           counters: Option[MergeEngine.MergeCounters])
+      : ((DataFrame, Stats), (DataFrame, Stats)) = {
     val nodes = unionAll(MergeEngine.withOrdinal(sources.map(_.nodes)))
     val edges = unionAll(MergeEngine.withOrdinal(sources.map(_.edges)))
-    val mn = scope.cached(MergeEngine.mergeNodes(nodes, counters))
-    val me = scope.cached(MergeEngine.mergeEdges(edges, edgeMergingAttributes, counters))
-    import org.apache.spark.sql.functions.{sum => fsum}
-    val nMergedNodes = mn.agg(fsum("nMerged")).head().getLong(0)
-    val nMergedEdges = me.agg(fsum("nMerged")).head().getLong(0)
-    MergedGraph(
-      MergeEngine.jsonToDf(mn, Some(nodes.schema)),
-      MergeEngine.jsonToDf(me, Some(edges.schema)),
-      nMergedNodes, nMergedEdges)(scope)
+    (observedMerge(MergeEngine.mergeNodes(nodes, counters), nodes.schema, "node"),
+      observedMerge(MergeEngine.mergeEdges(edges, edgeMergingAttributes, counters),
+        edges.schema, "edge"))
   }
 
   /** J4 — connected_edge_subset: keep a secondary source's edges only when
@@ -123,41 +132,44 @@ object GraphMerger {
     *    keeps an ARBITRARY row per id: nondeterministic output digests
     *    and no property union, neither of which matches the reference.
     *  - Merge counts include the second-pass node/edge merges (the
-    *    reference's merge metadata records per-source counts). */
+    *    reference's merge metadata records per-source counts).
+    * Nothing runs here: the first action over the returned frames fills
+    * their caches. */
   def mergeGraph(primary: Seq[SourceGraph],
                  secondary: Seq[SourceGraph] = Nil,
                  dontMerge: Seq[SourceGraph] = Nil,
                  edgeMergingAttributes: Seq[String] = Nil,
                  counters: Option[MergeEngine.MergeCounters] = None): MergedGraph = Lineage.owned { scope =>
-    import org.apache.spark.sql.functions.{sum => fsum}
-    val base = mergePrimary(scope, primary, edgeMergingAttributes, counters)
-    val primaryIds = base.nodes.select("id")
+    val ((mergedNodes, nodeMerges), (mergedEdges, edgeMerges)) =
+      mergePrimary(primary, edgeMergingAttributes, counters)
+    // the connected-edge-subset joins read the primary nodes, and so does
+    // the node merge below
+    val primaryNodes = if (secondary.isEmpty) mergedNodes else scope.cached(mergedNodes)
+    val primaryIds = primaryNodes.select("id")
     val secondaryParts = secondary.map(sg => connectedEdgeSubset(primaryIds, sg))
 
-    val (edges, secEdgesMerged) =
-      if (secondaryParts.isEmpty) (base.edges, 0L)
+    val (edges, secEdgeMerges) =
+      if (secondaryParts.isEmpty) (mergedEdges, Nil)
       else {
-        val unioned = unionAll(MergeEngine.withOrdinal(base.edges +: secondaryParts.map(_._2)))
-        val me = scope.cached(MergeEngine.mergeEdges(unioned, edgeMergingAttributes, counters))
-        val n = me.agg(fsum("nMerged")).head().getLong(0)
-        (MergeEngine.jsonToDf(me, Some(unioned.schema)), n)
+        val unioned = unionAll(MergeEngine.withOrdinal(mergedEdges +: secondaryParts.map(_._2)))
+        val (me, merges) = observedMerge(
+          MergeEngine.mergeEdges(unioned, edgeMergingAttributes, counters), unioned.schema, "edge")
+        (me, Seq(merges))
       }
     val edgesOut =
       if (dontMerge.isEmpty) edges
       else unionAll(edges +: dontMerge.map(_.edges))
 
     val addedNodeFrames = secondaryParts.map(_._1) ++ dontMerge.map(_.nodes)
-    val (nodes, extraNodesMerged) =
-      if (addedNodeFrames.isEmpty) (base.nodes, 0L)
+    val (nodes, extraNodeMerges) =
+      if (addedNodeFrames.isEmpty) (primaryNodes, Nil)
       else {
-        val unioned = unionAll(MergeEngine.withOrdinal(base.nodes +: addedNodeFrames))
-        val mn = scope.cached(MergeEngine.mergeNodes(unioned, counters))
-        val n = mn.agg(fsum("nMerged")).head().getLong(0)
-        (MergeEngine.jsonToDf(mn, Some(unioned.schema)), n)
+        val unioned = unionAll(MergeEngine.withOrdinal(primaryNodes +: addedNodeFrames))
+        val (mn, merges) = observedMerge(MergeEngine.mergeNodes(unioned, counters), unioned.schema, "node")
+        (mn, Seq(merges))
       }
-    MergedGraph(nodes, edgesOut,
-      base.mergedNodeCount + extraNodesMerged,
-      base.mergedEdgeCount + secEdgesMerged)(scope)
+    MergedGraph(scope.cached(nodes), scope.cached(edgesOut))(nodeMerges +: extraNodeMerges,
+      edgeMerges +: secEdgeMerges, scope)
   }
 
   /** J5 — remove nodes not referenced by any edge

@@ -2,6 +2,7 @@ package graft.normalize
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Stats
 import graft.model.Biolink
 
 /** Normalization plane (SURVEY §2.7 N1-N9, §2.4 J1-J3).
@@ -219,33 +220,47 @@ object Normalizer {
     * (1→N) fan out to N nodes; duplicate normalized ids collapse (first
     * wins, like dedup-on-write). */
   def normalizeNodes(rawNodes: DataFrame, nodeMap: DataFrame,
-                     strict: Boolean = true): (DataFrame, NodeNormStats) =
-    // plain API: stats computed off one materialization, cache dropped
-    graft.Lineage.scoped(normalizeNodesCached(_, rawNodes, nodeMap, strict))
+                     strict: Boolean = true): (DataFrame, NodeNormStats) = {
+    val (out, stats) = normalizeNodesDeferred(rawNodes, nodeMap, strict)
+    (out, stats())
+  }
 
-  /** [[normalizeNodes]] that returns its result cached in `scope`: the
-    * stats pass materializes the map-join + dropDuplicates once, and every
-    * downstream consumer (unconnected-node filter, parquet write) reuses
-    * that one materialization instead of re-running the join per action —
-    * a round-15 job profile (the table QueryTimer prints) measured the
-    * node pipeline executing ~3× per source without it. */
-  def normalizeNodesCached(scope: graft.Scope, rawNodes: DataFrame, nodeMap: DataFrame,
-                           strict: Boolean = true): (DataFrame, NodeNormStats) = {
+  /** [[normalizeNodes]] with its stats deferred: they are observed on the
+    * normalization's own frames, so the first action over the result (in
+    * a build, the parquet write) computes them with no job of their own;
+    * read them after that action. Strict mode's failure count is the one
+    * exception: an anti-join action run here. Nothing is cached: a caller
+    * that reads the result more than once caches it. */
+  def normalizeNodesDeferred(rawNodes: DataFrame, nodeMap: DataFrame,
+                             strict: Boolean = true): (DataFrame, () => NodeNormStats) = {
     // the reference strips newline characters from every top-level string
     // property of every node, in BOTH modes, BEFORE consulting the
     // normalizer response (orion/normalization.py:235-242 vs :280) —
     // so ORIGINAL properties are stripped, while map-supplied names/ids
     // pass through untouched; string columns only, arrays untouched,
     // like the `isinstance(value, str)` guard
-    val nodes = rawNodes.select(rawNodes.schema.fields.map { f =>
+    val (nodes, preNorm) = Stats.observe(rawNodes.select(rawNodes.schema.fields.map { f =>
       if (f.dataType == org.apache.spark.sql.types.StringType)
         regexp_replace(col(f.name), "\n", "").as(f.name)
       else col(f.name)
-    }.toSeq: _*)
-    val preNorm = nodes.count()
+    }.toSeq: _*), "normalize nodes: input count")(count(lit(1)).as("n"))
     val m = nodeMap.withColumnRenamed("name", "_norm_name")
-    val joined = nodes.join(m, nodes("id") === m("orig_id"),
-      if (strict) "inner" else "left")
+    // failures are REPORTED in both modes (the reference's
+    // failed_to_normalize list); only strict also drops the rows. In
+    // lenient mode a node row that misses the map leaves exactly one
+    // null-flagged row in the left join, so the count rides the action
+    // that runs it. Strict keeps its inner join, whose build side Spark
+    // picks by size — and that side decides which duplicate the dedup
+    // below keeps — and counts the misses with one anti-join action.
+    val (joined, failures) =
+      if (strict) {
+        val n = nodes.join(m, nodes("id") === m("orig_id"), "left_anti").count()
+        (nodes.join(m, nodes("id") === m("orig_id")), () => n)
+      } else {
+        val (flagged, missed) = Stats.observe(nodes.join(m, nodes("id") === m("orig_id"), "left"),
+          "normalize nodes: failures")(sum(when(m("orig_id").isNull, 1L)).as("n"))
+        (flagged, () => missed.long("n"))
+      }
     val origCat = nodes.columns.find(_ == "category").map(_ => nodes("category"))
       .getOrElse(lit(null).cast("array<string>"))
     // a pre-existing custom_node_types property is PRESERVED (the
@@ -287,18 +302,19 @@ object Normalizer {
       if (!strict) Seq(col("_custom_types").as("custom_node_types"))
       else if (hasCustom) Seq(preCustom.as("custom_node_types"))
       else Nil
-    val out = scope.cached(applied.select(Seq(
+    val (out, postNorm) = Stats.observe(applied.select(Seq(
         col("_final_id").as("id"),
         col("_final_name").as("name"),
         col("_final_cat").as("category"),
         m("equivalent_identifiers"),
         m("information_content")) ++ passthrough ++ extra: _*)
-      .dropDuplicates("id"))
-    val postNorm = out.count() // fills the cache
-    // failures are REPORTED in both modes (the reference's
-    // failed_to_normalize list); only strict also drops the rows
-    val failures = nodes.join(m, nodes("id") === m("orig_id"), "left_anti").count()
-    (out, NodeNormStats(preNorm, postNorm, failures))
+      .dropDuplicates("id"), "normalize nodes: output count")(count(lit(1)).as("n"))
+    // postNorm first: on a read before any action its fallback runs the
+    // pipeline, and that run reports the observations below it
+    (out, () => {
+      val post = postNorm.long("n")
+      NodeNormStats(preNorm.long("n"), post, failures())
+    })
   }
 
   /** The reference's `node_normalization_lookup` in LENIENT mode: the
@@ -323,9 +339,9 @@ object Normalizer {
     else name
 
   /** J1+J2+J3+N5-N8 — full edge normalization.
-    * `computeStats=false` skips the four counting passes (splits/failures/
-    * loops) — use on hot paths where only the output matters; the plan is
-    * identical either way. */
+    * `computeStats=false` skips the stats action and the join cache — use
+    * on hot paths where only the output matters; the output is identical
+    * either way. */
   def normalizeEdges(edges: DataFrame, nodeMap: DataFrame, predicateMap: DataFrame,
                      defaultProvenance: String,
                      computeStats: Boolean = true): (DataFrame, EdgeNormStats) =
@@ -333,21 +349,28 @@ object Normalizer {
     graft.Lineage.scoped(normalizeEdgesCached(_, edges, nodeMap, predicateMap,
       defaultProvenance, computeStats))
 
-  /** [[normalizeEdges]] that returns its result cached in `scope` and
-    * computes the stats in TWO fused aggregation passes instead of four
-    * independent re-executions of the endpoint joins (failure count,
-    * loop count, splits agg, result count — a round-15 job profile, the
-    * table QueryTimer prints, measured the join pipeline running ~5× per
-    * source including the final write). Pass equivalences:
+  /** [[normalizeEdges]] whose endpoint joins are cached in `scope`, with
+    * the stats from ONE aggregation action over that cache instead of
+    * re-executing the joins per stat (a round-15 job profile, the table
+    * QueryTimer prints, measured the join pipeline running ~5× per source
+    * including the final write). The action fills the cache, the result
+    * is a narrow projection of it, and the source count is observed on
+    * the input below the joins, so it rides the same action. The stats:
     *  - failures = sourceEdges − distinct `_src_edge_id` surviving the
-    *    endpoint joins (unchanged set: the rewrite steps are row-preserving);
-    *  - loops ride the same aggregate as a conditional sum;
-    *  - splits = Σ_groups (count−1) = rows − distinct ids of the result. */
+    *    endpoint joins (the rewrite steps are row-preserving);
+    *  - loops = subclass self-loop rows;
+    *  - normalizedEdges = rows kept after the loop filter (the inversion
+    *    split is row-preserving);
+    *  - splits = Σ_groups (count−1) = kept rows − their distinct ids.
+    * The two distinct counts are why this is an action and not an
+    * observation: Spark rejects distinct aggregates in observed metrics. */
   def normalizeEdgesCached(scope: graft.Scope, edges: DataFrame, nodeMap: DataFrame,
                            predicateMap: DataFrame, defaultProvenance: String,
                            computeStats: Boolean = true): (DataFrame, EdgeNormStats) = {
-    val sourceEdges = if (computeStats) edges.count() else 0L
-    val withOrd = edges.withColumn("_src_edge_id", monotonically_increasing_id())
+    val observed =
+      if (computeStats) Some(Stats.observe(edges, "normalize edges: input count")(count(lit(1)).as("n")))
+      else None
+    val withOrd = observed.fold(edges)(_._1).withColumn("_src_edge_id", monotonically_increasing_id())
 
     // J1/J2: subject then object endpoint joins; inner = failed endpoints drop
     val subjMap = nodeMap.select(col("orig_id").as("_s_orig"), col("norm_id").as("_s_norm"))
@@ -379,29 +402,27 @@ object Normalizer {
       .withColumn(Biolink.Object_, col("_o_norm"))
       .withColumn(Biolink.Predicate, col("_norm_pred"))
       .withColumn(Biolink.PrimaryKnowledgeSource, pksCol)
-    // stats mode materializes the endpoint joins exactly once; both stat
-    // aggregates and the result derive from this cache
+    // stats mode materializes the endpoint joins exactly once; the stats
+    // action and every consumer of the result read this cache
     val rewritten = if (computeStats) scope.cached(rewritten0) else rewritten0
 
     // N6: subclass self-loop removal (post-normalization ids)
     val loopCond = col(Biolink.Predicate) === Biolink.SubclassOf &&
       col(Biolink.Subject) === col(Biolink.Object_)
-    // one fused pass over the joined rows: surviving distinct source ids
-    // (→ failure count) + loop rows (the rewrite steps between `joined`
-    // and `rewritten` are row-preserving, so the distinct-id set matches)
-    val (edgesFailedDueToNodes, subclassLoopsRemoved) =
-      if (!computeStats) (0L, 0L)
-      else {
-        val a = rewritten.agg(
-          count_distinct(col("_src_edge_id")).as("ids"),
-          sum(when(loopCond, 1L)).as("loops")).head()
-        (sourceEdges - a.getLong(0), if (a.isNullAt(1)) 0L else a.getLong(1))
-      }
+    val stats = observed.fold(EdgeNormStats(0, 0, 0, 0, 0)) { case (_, source) =>
+      // per source edge first, so one shuffle keyed by its id serves both
+      // distinct counts
+      val a = rewritten.groupBy(col("_src_edge_id"))
+        .agg(count(when(loopCond, 1)).as("loops"), count(when(!loopCond, 1)).as("kept"))
+        .agg(count(lit(1)).as("ids"), sum(col("loops")).as("loops"), sum(col("kept")).as("n"),
+          count(when(col("kept") > 0, 1)).as("d")).head()
+      def long(i: Int) = if (a.isNullAt(i)) 0L else a.getLong(i)
+      EdgeNormStats(source.long("n"), long(2), long(2) - long(3), source.long("n") - long(0), long(1))
+    }
     val kept = rewritten.filter(!loopCond)
 
     // N5: inversion — swap *subject*↔*object* columns where inverted
-    val payloadCols = kept.columns.filter(c =>
-      (!c.startsWith("_") && c != "orig_predicate") || c == "_src_edge_id").toSeq
+    val payloadCols = kept.columns.filter(c => !c.startsWith("_") && c != "orig_predicate").toSeq
     val allCols = payloadCols ++ payloadCols.map(swappedName).filterNot(payloadCols.contains)
     val straight = kept.filter(!col("_inverted"))
       .select(allCols.map(c => (if (payloadCols.contains(c)) col(c) else lit(null)).as(c)): _*)
@@ -410,21 +431,6 @@ object Normalizer {
         val src = swappedName(c)
         (if (payloadCols.contains(src)) col(src) else lit(null)).as(c)
       }: _*)
-    val result0 = straight.unionByName(inverted)
-
-    if (!computeStats)
-      (result0.drop("_src_edge_id"), EdgeNormStats(0, 0, 0, 0, 0))
-    else {
-      val result = scope.cached(result0)
-      // second fused pass: result rows + distinct source ids; splits =
-      // Σ_groups (count−1) = rows − distinct ids (identical to the former
-      // per-id groupBy + sum(greatest(count−1, 0)) since every group ≥ 1)
-      val b = result.agg(count(lit(1)).as("n"),
-        count_distinct(col("_src_edge_id")).as("d")).head()
-      scope.release(rewritten) // result is materialized; the join cache served it
-      (result.drop("_src_edge_id"),
-        EdgeNormStats(sourceEdges, b.getLong(0), b.getLong(0) - b.getLong(1),
-          edgesFailedDueToNodes, subclassLoopsRemoved))
-    }
+    (straight.unionByName(inverted), stats)
   }
 }

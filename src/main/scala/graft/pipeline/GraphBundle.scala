@@ -29,10 +29,9 @@ object GraphBundle {
     Files.createDirectories(dir)
 
     // The finalize tail consumes each frame several times (jsonl write, QC
-    // aggregation, schema aggregation); the inputs are typically
-    // `from_json` views over the merge's cached JSON, so without a cache
-    // every consumer re-parses the JSON per action. One materialization
-    // here serves them all.
+    // aggregation, schema aggregation); without a cache every consumer
+    // re-runs the frame's plan per action. One materialization serves
+    // them all; a merge result arrives cached and is reused as it is.
     scope.cached(nodes)
     scope.cached(edges)
     val sc = nodes.sparkSession.sparkContext

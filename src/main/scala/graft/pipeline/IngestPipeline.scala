@@ -1,8 +1,11 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
+import graft.Stats
 import graft.merge.{GraphMerger, MergeEngine}
 import graft.normalize.Normalizer
 
@@ -105,34 +108,36 @@ object IngestPipeline {
       return IngestResult(loader.sourceId, buildVersion0, nodes, edges,
         Seq(StageResult("cached", Stable.name, s"reused $versionDir")))
     }
-    val stages = scala.collection.mutable.ArrayBuffer[StageResult]()
     // Every cache below is released once the content-versioned parquet is
     // written (the read-back serves every later consumer).
     graft.Lineage.scoped { scope =>
-    val (rawNodes, rawEdges) = loader.parse(spark)
-    // The parse result is consumed several times below (stage-memo counts,
-    // normalization's own pre/post/failure counts, the parquet write) —
-    // without a cache each consumer RE-RUNS the parse, and raw sources
-    // are the expensive kind (non-splittable archives, gz text, XML). One
-    // scan fills the cache; the default MEMORY_AND_DISK level spills
-    // rather than evicting, so the shape holds for sources larger than
-    // executor memory.
-    scope.cached(rawNodes)
-    scope.cached(rawEdges)
-    labeled(spark, s"ingest ${loader.sourceId}: parse + count") {
-      stages += StageResult("parsing", Stable.name,
-        s"nodes=${rawNodes.count()} edges=${rawEdges.count()}")
-    }
+    // the label also covers the readers' schema inference
+    val (parsedNodes, parsedEdges) =
+      labeled(spark, s"ingest ${loader.sourceId}: parse + count")(loader.parse(spark))
+    val nodeMap = loader.nodeNormMap(spark)
+    // The raw counts are observed on the parse and ride the first action
+    // over it. Normalization reads the raw nodes twice (the node join and
+    // either the strict failure count or the lenient edge map): without a
+    // cache each read RE-RUNS the parse, and raw sources are the expensive
+    // kind (non-splittable archives, gz text, XML). One scan fills the
+    // cache; the default MEMORY_AND_DISK level spills rather than
+    // evicting, so the shape holds for sources larger than executor
+    // memory. Every other raw frame has one reader and no cache.
+    val (rawNodes, rawNodeCount) = Stats.observe(parsedNodes,
+      s"ingest ${loader.sourceId}: raw node count")(count(lit(1)).as("n"))
+    val (rawEdges, rawEdgeCount) = Stats.observe(parsedEdges,
+      s"ingest ${loader.sourceId}: raw edge count")(count(lit(1)).as("n"))
+    if (nodeMap.isDefined) scope.cached(rawNodes)
 
-    val (nodes, edges) = loader.nodeNormMap(spark) match {
+    val ((nodes, edges, supplementation), normalization) = nodeMap match {
       case Some(nm) => labeled(spark, s"ingest ${loader.sourceId}: normalize") {
         val pm = loader.predicateNormMap(spark)
           .getOrElse(Normalizer.predicateMapDf(spark, Nil))
-        // cached variants: stats + the downstream consumers (unconnected
-        // filter, parquet writes) share ONE materialization of each
-        // normalization pipeline instead of re-running the joins per action
+        // the observed node counts ride the parquet write, the one action
+        // over the normalized nodes; the edge joins are cached for their
+        // stats action and both writes
         val (nNodes, nodeStats) =
-          Normalizer.normalizeNodesCached(scope, rawNodes, nm, loader.strictNormalization)
+          Normalizer.normalizeNodesDeferred(rawNodes, nm, loader.strictNormalization)
         // lenient mode: failed nodes are KEPT, so edges referencing them
         // must survive on the original ids — the reference's lookup maps
         // a failed id to itself (orion/normalization.py:299-301)
@@ -144,15 +149,15 @@ object IngestPipeline {
         val finalNodes =
           if (loader.removeUnconnected) GraphMerger.removeUnconnectedNodes(nNodes, nEdges)
           else nNodes
-        stages += StageResult("normalization", Stable.name,
-          s"nodes=${nodeStats.postNorm} failures=${nodeStats.failures} " +
-          s"edges=${edgeStats.normalizedEdges} splits=${edgeStats.edgeSplits} " +
-          s"failed_edges=${edgeStats.edgesFailedDueToNodes} loops=${edgeStats.subclassLoopsRemoved}")
-        supplement(spark, loader, finalNodes, nEdges, Some((nm, pm)), stages)
+        (supplement(scope, loader, finalNodes, nEdges, Some((nm, pm))), () => {
+          val ns = nodeStats()
+          s"nodes=${ns.postNorm} failures=${ns.failures} " +
+            s"edges=${edgeStats.normalizedEdges} splits=${edgeStats.edgeSplits} " +
+            s"failed_edges=${edgeStats.edgesFailedDueToNodes} loops=${edgeStats.subclassLoopsRemoved}"
+        })
       }
       case None =>
-        stages += StageResult("normalization", Stable.name, "pre-normalized")
-        supplement(spark, loader, rawNodes, rawEdges, None, stages)
+        (supplement(scope, loader, rawNodes, rawEdges, None), () => "pre-normalized")
     }
 
     val buildVersion = buildVersion0
@@ -162,12 +167,32 @@ object IngestPipeline {
       nodes.write.mode("overwrite").parquet(s"$outDir/nodes.parquet")
       edges.write.mode("overwrite").parquet(s"$outDir/edges.parquet")
     }
-    writeMeta(outDir, loader.sourceId, buildVersion, stages.toSeq)
+    // the writes above reported every deferred stat
+    val stages = Seq(
+      StageResult("parsing", Stable.name,
+        s"nodes=${rawNodeCount.long("n")} edges=${rawEdgeCount.long("n")}"),
+      StageResult("normalization", Stable.name, normalization()),
+      StageResult("supplementation", Stable.name, supplementation()))
+    writeMeta(outDir, loader.sourceId, buildVersion, stages)
     Files.writeString(Paths.get(outDir, "_BUILD_COMPLETE"), buildVersion)
-    val outNodes = spark.read.parquet(s"$outDir/nodes.parquet")
-    val outEdges = spark.read.parquet(s"$outDir/edges.parquet")
-    IngestResult(loader.sourceId, buildVersion, outNodes, outEdges, stages.toSeq)
+    // read back with the schema just written (parquet makes every field
+    // nullable), which spares a footer-reading job per frame
+    val outNodes = spark.read.schema(nullable(nodes.schema)).parquet(s"$outDir/nodes.parquet")
+    val outEdges = spark.read.schema(nullable(edges.schema)).parquet(s"$outDir/edges.parquet")
+    IngestResult(loader.sourceId, buildVersion, outNodes, outEdges, stages)
     }
+  }
+
+  /** `schema` as a parquet file written from it reads back: every field,
+    * array element and map value nullable. */
+  private def nullable(schema: StructType): StructType = {
+    def of(t: DataType): DataType = t match {
+      case s: StructType => nullable(s)
+      case a: ArrayType => ArrayType(of(a.elementType), containsNull = true)
+      case m: MapType => MapType(of(m.keyType), of(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    StructType(schema.fields.map(f => f.copy(dataType = of(f.dataType), nullable = true)))
   }
 
   /** D5 — sequence-variant supplementation stage
@@ -179,17 +204,15 @@ object IngestPipeline {
     * path). Supplemental edge subjects are the already-normalized variant
     * ids (edge_subject_pre_normalized in the reference), expressed here as
     * identity rows appended to the node map before edge normalization. */
-  private def supplement(spark: SparkSession, loader: SourceLoader,
+  private def supplement(scope: graft.Scope, loader: SourceLoader,
                          nodes: DataFrame, edges: DataFrame,
-                         maps: Option[(DataFrame, DataFrame)],
-                         stages: scala.collection.mutable.ArrayBuffer[StageResult])
-      : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions._
+                         maps: Option[(DataFrame, DataFrame)])
+      : (DataFrame, DataFrame, () => String) = {
     import graft.sources.Vcf
-    if (!loader.hasSequenceVariants) {
-      stages += StageResult("supplementation", Stable.name, "not needed")
-      (nodes, edges)
-    } else {
+    if (!loader.hasSequenceVariants) (nodes, edges, () => "not needed")
+    else {
+      // the VCF projection and the union below both read the nodes
+      scope.cached(nodes)
       // localCheckpoint the narrow VCF projection: breaks the lineage back
       // to the node map (the supp normalization joins that map again — a
       // self-join otherwise) and keeps only variant rows in memory
@@ -215,16 +238,20 @@ object IngestPipeline {
           val edgeMap = baseMap.unionByName(subjectIdentity).distinct()
           val (se, seStats) = Normalizer.normalizeEdges(suppEdgesRaw, edgeMap, pm,
             Vcf.snpEffProvenance)
-          (sn, se,
+          (sn, se, () =>
             s"supp_nodes=${snStats.postNorm} supp_node_failures=${snStats.failures} " +
             s"supp_edges=${seStats.normalizedEdges} supp_failed_edges=${seStats.edgesFailedDueToNodes}")
         case None =>
-          (suppNodesRaw, suppEdgesRaw,
-            s"supp_nodes=${suppNodesRaw.count()} supp_edges=${suppEdgesRaw.count()} (unnormalized)")
+          // the counts ride the parquet write of the unioned frames
+          def observed(df: DataFrame, what: String) =
+            Stats.observe(df, s"ingest ${loader.sourceId}: $what count")(count(lit(1)).as("n"))
+          val (sn, snCount) = observed(suppNodesRaw, "supplemental node")
+          val (se, seCount) = observed(suppEdgesRaw, "supplemental edge")
+          (sn, se, () =>
+            s"supp_nodes=${snCount.long("n")} supp_edges=${seCount.long("n")} (unnormalized)")
       }
-      stages += StageResult("supplementation", Stable.name, detail)
       (nodes.unionByName(suppNodes, allowMissingColumns = true),
-        edges.unionByName(suppEdges, allowMissingColumns = true))
+        edges.unionByName(suppEdges, allowMissingColumns = true), detail)
     }
   }
 

@@ -118,8 +118,13 @@ class ScopeSpec extends SparkSpec {
       graft.dedup.Dedup.minhashLshCandidates(docs, "id", "text", shingleN = 2).collect()),
     "Dedup.ngramJaccardPairs" -> (() =>
       graft.dedup.Dedup.ngramJaccardPairs(docs, "id", "text", shingleN = 2).collect()),
-    "GraphMerger.mergeGraph" -> (() => graft.merge.GraphMerger.mergeGraph(
-      Seq(graft.merge.GraphMerger.SourceGraph("s", kgNodes, kgEdges)))),
+    // the merge runs no action itself: its result's first action fails,
+    // and releasing the result frees every cache the merge made
+    "GraphMerger.mergeGraph" -> (() => {
+      val merged = graft.merge.GraphMerger.mergeGraph(
+        Seq(graft.merge.GraphMerger.SourceGraph("s", kgNodes, kgEdges)))
+      try merged.nodes.collect() finally merged.release()
+    }),
     "GraphBundle.finalizeBundle" -> (() => graft.pipeline.GraphBundle.finalizeBundle(
       graft.pipeline.GraphSpec(graphId = "g", sources = Nil), kgNodes, kgEdges,
       Files.createTempDirectory("scope-bundle-").toString)))

@@ -1,10 +1,13 @@
 package graft.pipeline
 
-import graft.SparkSpec
+import graft.{Observe, SparkSpec}
 import graft.merge.GraphMerger
 import graft.derive.DerivedGraphs
+import graft.io.KgxIO
+import graft.normalize.Normalizer
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 /** End-to-end build mirroring tests/test_build_graph_end_to_end.py:
   * inline spec → merge overlapping sources → bundle with sidecars. */
@@ -141,5 +144,115 @@ class BuildGraphEndToEndSpec extends SparkSpec {
       """{"subject":"A","predicate":"biolink:related_to","object":"B"}""").toDS())
     assert(DerivedGraphs.collapsedQualifierEdges(plain)
       .select("predicate").head().getString(0) == "biolink:related_to")
+  }
+
+  /** Four KGX jsonl sources laid out like perfbench's kg_build: normalized
+    * primaries A and B (clique collapse, an inverted, an unmapped and a
+    * subclass predicate, unmapped ids, a 1→2 split), C as
+    * connected_edge_subset and D as dont_merge. */
+  private def kgFixture(dir: Path): (GraphSpec, Map[String, IngestPipeline.SourceLoader]) = {
+    def write(p: Path, lines: Seq[String]): Unit = {
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, lines.mkString("", "\n", "\n"))
+    }
+    def node(id: String) = {
+      val cat = id.takeWhile(_ != ':') match {
+        case "HP" => "biolink:PhenotypicFeature"
+        case "GO" => "biolink:BiologicalProcess"
+        case _ => "biolink:ChemicalEntity"
+      }
+      s"""{"id":"$id","name":"name of $id","category":["$cat"]}"""
+    }
+    def edge(s: String, p: String, o: String) =
+      s"""{"subject":"$s","predicate":"$p","object":"$o","primary_knowledge_source":"infores:fixture"}"""
+    val preds = Seq("biolink:affects", "biolink:treated_by", "biolink:fixture_unmapped",
+      "biolink:interacts_with")
+    def primary(id: String, ks: Range): Seq[Normalizer.NodeNormEntry] = {
+      val forms = ks.flatMap(k => Seq(s"MESH:$k") ++ (if (k % 4 == 0) Seq(s"CHEBI:$k") else Nil))
+      val nodes = forms ++ Seq(s"UNMAPPED:$id:1", s"UNMAPPED:$id:2")
+      val edges = ks.indices.flatMap { i =>
+        val (a, b) = (ks(i), ks((i * 7 + 3) % ks.size))
+        if (a == b) Nil else Seq(edge(s"MESH:$a", preds(i % preds.size), s"MESH:$b"))
+      } ++ Seq(edge(s"MESH:${ks(1)}", "biolink:affects", s"UNMAPPED:$id:1"),
+        edge(s"UNMAPPED:$id:2", "biolink:causes", s"MESH:${ks(2)}"),
+        edge(s"MESH:${ks(3)}", "biolink:subclass_of", s"MESH:${ks(3)}"))
+      write(dir.resolve(s"$id/nodes.jsonl"), nodes.map(node))
+      write(dir.resolve(s"$id/edges.jsonl"), edges)
+      forms.map(f => Normalizer.NodeNormEntry(f, s"CHEBI:${f.dropWhile(_ != ':').tail}",
+        s"label of $f")) :+ Normalizer.NodeNormEntry(s"MESH:${ks(4)}", s"CHEBI:${ks(4) + 1000}")
+    }
+    val maps = Map("SRC_A" -> primary("SRC_A", 1 to 30), "SRC_B" -> primary("SRC_B", 20 to 50))
+    val cEdges = (1 to 12).map(i => edge(s"CHEBI:${i * 4}", "biolink:has_phenotype", s"HP:${i % 5}")) ++
+      (1 to 4).map(i => edge(s"HP:$i", "biolink:related_to", s"HP:${i + 5}"))
+    val dEdges = (1 to 6).map(i => edge(s"GO:${i % 3}", "biolink:affects", s"CHEBI:${i * 8}"))
+    Seq("SRC_C" -> cEdges, "SRC_D" -> dEdges).foreach { case (id, es) =>
+      write(dir.resolve(s"$id/edges.jsonl"), es)
+      write(dir.resolve(s"$id/nodes.jsonl"), es.flatMap { e =>
+        "\"(subject|object)\":\"([^\"]+)\"".r.findAllMatchIn(e).map(_.group(2))
+      }.distinct.map(node))
+    }
+    val predMap = Seq(
+      Normalizer.PredicateNormEntry("biolink:affects", "biolink:affects"),
+      Normalizer.PredicateNormEntry("biolink:interacts_with", "biolink:interacts_with"),
+      Normalizer.PredicateNormEntry("biolink:treated_by", "biolink:treats", inverted = true),
+      Normalizer.PredicateNormEntry("biolink:subclass_of", "biolink:subclass_of"))
+    final class Loader(val sourceId: String) extends IngestPipeline.SourceLoader {
+      def parse(s: SparkSession): (DataFrame, DataFrame) =
+        (KgxIO.readJsonl(s, Seq(dir.resolve(s"$sourceId/nodes.jsonl").toString)),
+          KgxIO.readJsonl(s, Seq(dir.resolve(s"$sourceId/edges.jsonl").toString)))
+      override def nodeNormMapDefined: Boolean = maps.contains(sourceId)
+      override def nodeNormMap(s: SparkSession): Option[DataFrame] =
+        maps.get(sourceId).map(Normalizer.nodeMapDf(s, _))
+      override def predicateNormMap(s: SparkSession): Option[DataFrame] =
+        maps.get(sourceId).map(_ => Normalizer.predicateMapDf(s, predMap))
+    }
+    val spec = GraphSpec("fixture_kg", "fixture KG", sources = Seq(
+      GraphSource("SRC_A"), GraphSource("SRC_B"),
+      GraphSource("SRC_C", mergeStrategy = "connected_edge_subset"),
+      GraphSource("SRC_D", mergeStrategy = "dont_merge")))
+    (spec, spec.sources.map(s => s.id -> new Loader(s.id)).toMap)
+  }
+
+  test("buildGraph runs a pinned number of jobs per label and writes unchanged stage memos") {
+    // the stage-memo and merge counts ride the actions that write the data:
+    // no label runs a job of its own for a count, and no stat falls back
+    val (spec, loaders) = kgFixture(Files.createTempDirectory("kg_fixture"))
+    val out = Files.createTempDirectory("kg_build").toString
+    val sc = spark.sparkContext
+    val group = s"job-pin-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    val report =
+      try Observe.measure(spark)(IngestPipeline.buildGraph(spark, spec, loaders, out))._2
+      finally sc.clearJobGroup()
+    val jobs = report.jobs.filter(_.group.contains(group))
+      .groupBy(_.description).map { case (d, js) => d -> js.size }
+    val perNormalized = Seq(": parse + count" -> 2, ": normalize" -> 10, ": versioned parquet" -> 6)
+    val perPreNormalized = Seq(": parse + count" -> 2, ": versioned parquet" -> 2)
+    assert(jobs === (
+      Seq("SRC_A", "SRC_B").flatMap(id => perNormalized.map { case (l, n) => s"ingest $id$l" -> n }) ++
+      Seq("SRC_C", "SRC_D").flatMap(id => perPreNormalized.map { case (l, n) => s"ingest $id$l" -> n }) ++
+      Seq("bundle: nodes.jsonl" -> 17, "bundle: edges.jsonl" -> 8, "bundle: qc" -> 7,
+        "bundle: schema.json" -> 6)).toMap)
+    assert(jobs.values.sum == 82)
+
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val memos = spec.sources.map { s =>
+      val meta = mapper.readTree(Files.readString(Paths.get(out, "sources", s.id,
+        IngestPipeline.expectedBuildVersion(loaders(s.id)), s"${s.id}.meta.json")))
+      s.id -> meta.get("stages").elements().asScala.map(st =>
+        s"${st.get("stage").asText}: ${st.get("detail").asText}").toSeq
+    }.toMap
+    assert(memos === Map(
+      "SRC_A" -> Seq("parsing: nodes=39 edges=33",
+        "normalization: nodes=31 failures=2 edges=32 splits=2 failed_edges=2 loops=1",
+        "supplementation: not needed"),
+      "SRC_B" -> Seq("parsing: nodes=41 edges=33",
+        "normalization: nodes=32 failures=2 edges=32 splits=2 failed_edges=2 loops=1",
+        "supplementation: not needed"),
+      "SRC_C" -> Seq("parsing: nodes=21 edges=16", "normalization: pre-normalized",
+        "supplementation: not needed"),
+      "SRC_D" -> Seq("parsing: nodes=9 edges=6", "normalization: pre-normalized",
+        "supplementation: not needed")))
   }
 }
