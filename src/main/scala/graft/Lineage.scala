@@ -1,6 +1,8 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.SparkContext
 import org.apache.spark.graftbridge.ListenerBus
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
@@ -11,7 +13,8 @@ import org.apache.spark.storage.StorageLevel
 /** The frames one computation caches, released newest first when the
   * scope closes. Newest first because `Dataset.unpersist` does not
   * cascade: Spark recompiles a dependent cache whose buffers are not yet
-  * loaded, and no older frame can depend on a newer one. */
+  * loaded, and no older frame can depend on a newer one. Tasks of
+  * [[Lineage.concurrently]] may share a scope. */
 final class Scope private[graft] () {
   private var held = List.empty[Dataset[_]]
 
@@ -19,23 +22,23 @@ final class Scope private[graft] () {
     * storage level (`spark.sql.defaultCacheStorageLevel`). A frame whose
     * plan is cached already comes back as it is, unregistered: its cache
     * belongs to whoever made it. */
-  def cached[T](ds: Dataset[T]): Dataset[T] =
+  def cached[T](ds: Dataset[T]): Dataset[T] = synchronized {
     if (ds.storageLevel != StorageLevel.NONE) ds
     else {
       held = ds :: held
       ds.persist()
     }
+  }
 
   /** Free `ds` now, ahead of the scope's close. */
   def release(ds: Dataset[_]): Unit = {
-    held = held.filterNot(_ eq ds)
+    synchronized { held = held.filterNot(_ eq ds) }
     Lineage.release(ds)
   }
 
   /** Release every frame still registered; a closed scope is empty. */
   def close(): Unit = {
-    val frames = held
-    held = Nil
+    val frames = synchronized { val f = held; held = Nil; f }
     frames.foreach(Lineage.release)
   }
 }
@@ -79,13 +82,8 @@ final class Stats private (frame: Dataset[_], observation: Observation,
       .filter(r => r.length > 0 && !Stats.FailedActions(observation.name))
   }
 
-  private def fallback(): Row = {
-    val sc = frame.sparkSession.sparkContext
-    val caller = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(label)
-    try frame.agg(aggs.head, aggs.tail: _*).head()
-    finally sc.setJobDescription(caller)
-  }
+  private def fallback(): Row =
+    Lineage.labeled(frame.sparkSession.sparkContext, label)(frame.agg(aggs.head, aggs.tail: _*).head())
 }
 
 object Stats {
@@ -182,7 +180,6 @@ object Lineage {
       observe: DataFrame => A,
       until: (A, A) => Boolean = (_: A, _: A) => false): DataFrame = {
     val sc = seed.sparkSession.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
     var gen = seed
     var next: DataFrame = null
     try {
@@ -195,11 +192,10 @@ object Lineage {
         var done = false
         while (i < n && !done) {
           i += 1
-          sc.setJobDescription(s"$label $i/$n")
-          val o = try {
+          val o = labeled(sc, s"$label $i/$n") {
             next = step(gen, obs, i).localCheckpoint(eager = false)
             observe(next)
-          } finally sc.setJobDescription(callerDescription)
+          }
           release(gen)
           gen = next
           done = until(obs, o)
@@ -214,6 +210,69 @@ object Lineage {
         throw t
     }
   }
+
+  /** Runs `body` with its jobs described as `desc`, then gives the
+    * calling thread back the description it had. */
+  def labeled[T](sc: SparkContext, desc: String)(body: => T): T = {
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(caller)
+  }
+
+  /** Runs `tasks` at once and returns their results in input order.
+    *
+    * Each task runs on a daemon thread named `graft-concurrent-N`, one of
+    * min(tasks, cores) made for this call; a single task runs inline on
+    * the caller's thread. The threads are made on the caller's thread, so
+    * each starts with a copy of the caller's local properties (job group,
+    * description, scheduler pool, custom keys) and its active session:
+    * Spark keeps both in inheritable thread-locals, and a child's
+    * properties are a clone of its parent's. A thread that runs a second
+    * task carries what the first one left set; a task that sets a
+    * property restores it, as [[labeled]] does. The call waits for every
+    * task, also after one has thrown, and then rethrows the first failure
+    * in input order with the others attached as suppressed. No thread
+    * outlives the call.
+    *
+    * The rule for callers: two concurrent tasks must never both fill the
+    * same cached frame while a [[Stats]] observation sits below it. An
+    * observation reports once, from the first action to finish, so a fill
+    * split between two jobs reports a short count. Fill such a cache
+    * first, with one action, then read it concurrently. */
+  def concurrently[T](tasks: Seq[() => T]): Seq[T] =
+    if (tasks.size <= 1) tasks.map(_())
+    else {
+      val outcomes = new Array[Either[Throwable, T]](tasks.size)
+      val next = new AtomicInteger
+      val workers = Seq.fill(math.min(tasks.size, Runtime.getRuntime.availableProcessors)) {
+        val t = new Thread(() => {
+          var i = next.getAndIncrement()
+          while (i < tasks.size) {
+            outcomes(i) = try Right(tasks(i)()) catch { case e: Throwable => Left(e) }
+            i = next.getAndIncrement()
+          }
+        }, s"graft-concurrent-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      // an interrupt of the caller reaches the tasks; the wait goes on
+      var interrupted = false
+      workers.foreach { w =>
+        while (w.isAlive) try w.join() catch {
+          case _: InterruptedException => interrupted = true; workers.foreach(_.interrupt())
+        }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+      outcomes.collect { case Left(e) => e }.toList match {
+        case first :: rest =>
+          rest.filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
+        case Nil => outcomes.toSeq.collect { case Right(r) => r }
+      }
+    }
+
+  private val threads = new AtomicInteger
 
   /** Eagerly free a cached or checkpointed frame; a frame that is
     * neither is left alone, so a second release is a no-op. Safe ONLY

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.io.KgxIO
+import graft.Lineage
 import graft.derive.MetaKg
 import java.nio.file.{Files, Paths}
 
@@ -24,7 +25,7 @@ object GraphBundle {
     Files.writeString(path, node.toPrettyString)
 
   def finalizeBundle(spec: GraphSpec, nodes: DataFrame, edges: DataFrame,
-                     outDir: String, gzip: Boolean = true): BundleResult = graft.Lineage.scoped { scope =>
+                     outDir: String, gzip: Boolean = true): BundleResult = Lineage.scoped { scope =>
     val dir = Paths.get(outDir)
     Files.createDirectories(dir)
 
@@ -35,11 +36,11 @@ object GraphBundle {
     scope.cached(nodes)
     scope.cached(edges)
     val sc = nodes.sparkSession.sparkContext
-    def labeled[T](desc: String)(f: => T): T = {
-      sc.setJobDescription(desc) // guide §1.5: attribute the finalize phases
-      try f finally sc.setJobDescription(null)
-    }
-    // bundle files (directory-of-parts layout; the scalable form of K1/K2)
+    // guide §1.5: attribute the finalize phases
+    def labeled[T](desc: String)(f: => T): T = Lineage.labeled(sc, desc)(f)
+    // bundle files (directory-of-parts layout; the scalable form of K1/K2).
+    // Both writes read the merge's primary-node cache, which carries the
+    // node-merge observation, so they run one after the other.
     labeled("bundle: nodes.jsonl") {
       KgxIO.writeJsonl(nodes, s"$outDir/nodes.jsonl", dedupKeys = Seq("id"), gzip = gzip)
     }
@@ -47,7 +48,16 @@ object GraphBundle {
       KgxIO.writeJsonl(edges, s"$outDir/edges.jsonl", dedupKeys = Nil, gzip = gzip)
     }
 
-    val qc = labeled("bundle: qc")(MetaKg.qc(nodes, edges))
+    // The writes filled the node and edge caches; the QC aggregation and
+    // schema.json only read them, so they run at once. schema.json is the
+    // published format (ref kgx_metadata.py:230-447): leaf-category
+    // grouping, per-type prefix/attribute/qualifier counts, node/edge
+    // summaries.
+    val Seq(qc: MetaKg.QcResults, _) = Lineage.concurrently(Seq(
+      () => labeled("bundle: qc")(MetaKg.qc(nodes, edges)),
+      () => labeled("bundle: schema.json") {
+        graft.derive.SchemaJson.write(nodes, edges, dir.resolve("schema.json").toString)
+      }))
 
     val srcVersions = spec.sources.map(s => Versioning.sourceBuildVersion(
       s.id, s.sourceVersion.getOrElse("latest"),
@@ -89,13 +99,6 @@ object GraphBundle {
     val warn = qcNode.putArray("warnings")
     qc.warnings.foreach(warn.add)
     writeJson(dir.resolve("qc-results.json"), qcNode)
-
-    // schema.json — published format (ref kgx_metadata.py:230-447):
-    // leaf-category grouping, per-type prefix/attribute/qualifier counts,
-    // node/edge summaries
-    labeled("bundle: schema.json") {
-      graft.derive.SchemaJson.write(nodes, edges, dir.resolve("schema.json").toString)
-    }
 
     BundleResult(outDir, qc.nodeCount, qc.edgeCount, buildVersion)
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
-import graft.Stats
+import graft.{Lineage, Stats}
 import graft.merge.{GraphMerger, MergeEngine}
 import graft.normalize.Normalizer
 
@@ -76,14 +76,6 @@ object IngestPipeline {
     Files.writeString(Paths.get(dir, s"$sourceId.meta.json"), meta.toPrettyString)
   }
 
-  /** Label the Spark jobs a phase launches (guide §1.5): thread-local, so
-    * the UI and QueryTimer's job table can attribute multi-action
-    * pipelines per phase. */
-  private def labeled[T](spark: SparkSession, desc: String)(f: => T): T = {
-    spark.sparkContext.setJobDescription(desc)
-    try f finally spark.sparkContext.setJobDescription(null)
-  }
-
   /** Expected content-hash build version for a loader (pure — computable
     * before any work runs; the memoization key, ref orion/metadata.py:228-239). */
   def expectedBuildVersion(loader: SourceLoader): String =
@@ -110,10 +102,10 @@ object IngestPipeline {
     }
     // Every cache below is released once the content-versioned parquet is
     // written (the read-back serves every later consumer).
-    graft.Lineage.scoped { scope =>
+    Lineage.scoped { scope =>
     // the label also covers the readers' schema inference
     val (parsedNodes, parsedEdges) =
-      labeled(spark, s"ingest ${loader.sourceId}: parse + count")(loader.parse(spark))
+      Lineage.labeled(spark.sparkContext, s"ingest ${loader.sourceId}: parse + count")(loader.parse(spark))
     val nodeMap = loader.nodeNormMap(spark)
     // The raw counts are observed on the parse and ride the first action
     // over it. Normalization reads the raw nodes twice (the node join and
@@ -130,7 +122,7 @@ object IngestPipeline {
     if (nodeMap.isDefined) scope.cached(rawNodes)
 
     val ((nodes, edges, supplementation), normalization) = nodeMap match {
-      case Some(nm) => labeled(spark, s"ingest ${loader.sourceId}: normalize") {
+      case Some(nm) => Lineage.labeled(spark.sparkContext, s"ingest ${loader.sourceId}: normalize") {
         val pm = loader.predicateNormMap(spark)
           .getOrElse(Normalizer.predicateMapDf(spark, Nil))
         // the observed node counts ride the parquet write, the one action
@@ -163,7 +155,7 @@ object IngestPipeline {
     val buildVersion = buildVersion0
     // materialize under the content-versioned dir + completion marker
     val outDir = s"$storageDir/${loader.sourceId}/$buildVersion"
-    labeled(spark, s"ingest ${loader.sourceId}: versioned parquet") {
+    Lineage.labeled(spark.sparkContext, s"ingest ${loader.sourceId}: versioned parquet") {
       nodes.write.mode("overwrite").parquet(s"$outDir/nodes.parquet")
       edges.write.mode("overwrite").parquet(s"$outDir/edges.parquet")
     }
@@ -256,21 +248,28 @@ object IngestPipeline {
   }
 
   /** O2 — build a graph from a spec: run every source, group by merge
-    * strategy, merge, finalize the bundle. */
+    * strategy, merge, finalize the bundle. The sources share no frame, so
+    * they run at once; their results are taken in spec order, which keeps
+    * the merge and the bundle as a serial run makes them. Entries whose
+    * loaders share a versioned directory (a source listed twice) run
+    * once: a serial run reads the first build back for the others, and
+    * two runs at once would write that directory together. */
   def buildGraph(spark: SparkSession, spec: GraphSpec,
                  loaders: Map[String, SourceLoader],
                  outDir: String): GraphBundle.BundleResult = {
-    val ingested = spec.sources.map { s =>
-      val loader = loaders.getOrElse(s.id,
-        throw new IllegalArgumentException(s"no loader for source ${s.id}"))
-      s -> runSource(spark, loader, s"$outDir/sources")
-    }
+    val sourceLoaders = spec.sources.map(s => s -> loaders.getOrElse(s.id,
+      throw new IllegalArgumentException(s"no loader for source ${s.id}")))
+    def versionDir(l: SourceLoader) = (l.sourceId, expectedBuildVersion(l))
+    val runs = sourceLoaders.map(_._2).distinctBy(versionDir)
+    val results = runs.map(versionDir).zip(Lineage.concurrently(
+      runs.map(l => () => runSource(spark, l, s"$outDir/sources")))).toMap
+    val ingested = sourceLoaders.map { case (s, l) => s -> results(versionDir(l)) }
     def graphs(strategy: String) = ingested.collect {
       case (s, r) if s.mergeStrategy == strategy =>
         GraphMerger.SourceGraph(r.sourceId, r.nodes, r.edges, s.mergeStrategy)
     }
     val counters = Some(MergeEngine.counters(spark))
-    val merged = labeled(spark, s"merge ${spec.graphId}") {
+    val merged = Lineage.labeled(spark.sparkContext, s"merge ${spec.graphId}") {
       GraphMerger.mergeGraph(
         primary = graphs("default"),
         secondary = graphs("connected_edge_subset"),

@@ -127,7 +127,25 @@ class ScopeSpec extends SparkSpec {
     }),
     "GraphBundle.finalizeBundle" -> (() => graft.pipeline.GraphBundle.finalizeBundle(
       graft.pipeline.GraphSpec(graphId = "g", sources = Nil), kgNodes, kgEdges,
-      Files.createTempDirectory("scope-bundle-").toString)))
+      Files.createTempDirectory("scope-bundle-").toString)),
+    // the failing source is normalized, so it caches its raw nodes; its
+    // sibling runs at the same time and completes
+    "IngestPipeline.buildGraph" -> (() => graft.pipeline.IngestPipeline.buildGraph(spark,
+      graft.pipeline.GraphSpec(graphId = "g", sources = Seq(
+        graft.pipeline.GraphSource("ok"), graft.pipeline.GraphSource("bad"))),
+      Map("ok" -> new Source("ok", jsonl("""{"id":"N:1","name":"one"}"""), normalized = false),
+        "bad" -> new Source("bad", kgNodes, normalized = true)),
+      Files.createTempDirectory("scope-build-").toString)))
+
+  private final class Source(val sourceId: String, nodes: DataFrame, normalized: Boolean)
+      extends graft.pipeline.IngestPipeline.SourceLoader {
+    def parse(s: org.apache.spark.sql.SparkSession): (DataFrame, DataFrame) = (nodes, kgEdges)
+    override def nodeNormMapDefined: Boolean = normalized
+    override def nodeNormMap(s: org.apache.spark.sql.SparkSession): Option[DataFrame] =
+      if (!normalized) None
+      else Some(graft.normalize.Normalizer.nodeMapDf(s, Seq("N:1", "N:2").map(id =>
+        graft.normalize.Normalizer.NodeNormEntry(id, id))))
+  }
 
   failing.foreach { case (name, run) =>
     test(s"$name leaves no cache behind when an input row fails") {

@@ -168,6 +168,44 @@ class IngestPipelineSpec extends SparkSpec {
     assert(Files.exists(Paths.get(out, "sources", "B")))
   }
 
+  test("buildGraph: a source listed twice runs once and builds what the serial composition builds") {
+    val parses = new java.util.concurrent.atomic.AtomicInteger
+    val a = new IngestPipeline.SourceLoader {
+      private val inner = loader("A", 1 to 10, normalized = true)
+      val sourceId: String = "A"
+      def parse(s: SparkSession): (DataFrame, DataFrame) = { parses.incrementAndGet(); inner.parse(s) }
+      override def nodeNormMap(s: SparkSession): Option[DataFrame] = inner.nodeNormMap(s)
+      override def predicateNormMap(s: SparkSession): Option[DataFrame] = inner.predicateNormMap(s)
+      override def nodeNormMapDefined: Boolean = true
+    }
+    val loaders = Map("A" -> a, "B" -> loader("B", 6 to 15, normalized = true))
+    val spec = GraphSpec(graphId = "TwiceGraph", sources = Seq(
+      GraphSource("A"), GraphSource("B"), GraphSource("A", mergeStrategy = "connected_edge_subset")))
+    val out = Files.createTempDirectory("build_twice").toString
+    val result = IngestPipeline.buildGraph(spark, spec, loaders, out)
+    assert(parses.get == 1)
+    val versions = Files.list(Paths.get(out, "sources", "A"))
+    try assert(versions.count() == 1) finally versions.close()
+
+    // runSource per entry in spec order (the second A reads the first back)
+    // → mergeGraph → finalizeBundle
+    val serialOut = Files.createTempDirectory("build_twice_serial").toString
+    val ingested = spec.sources.map(s => s -> IngestPipeline.runSource(spark, loaders(s.id), s"$serialOut/sources"))
+    assert(ingested.last._2.stages.map(_.stage) == Seq("cached"))
+    def graphs(strategy: String) = ingested.collect {
+      case (s, r) if s.mergeStrategy == strategy => graft.merge.GraphMerger.SourceGraph(r.sourceId, r.nodes, r.edges, strategy)
+    }
+    val merged = graft.merge.GraphMerger.mergeGraph(graphs("default"), graphs("connected_edge_subset"))
+    val serial = try GraphBundle.finalizeBundle(spec, merged.nodes, merged.edges, serialOut)
+      finally merged.release()
+    assert((result.nodeCount, result.edgeCount) == ((serial.nodeCount, serial.edgeCount)))
+    assert(result.nodeCount == 15)
+    Seq("nodes.jsonl", "edges.jsonl").foreach { f =>
+      def rows(dir: String) = spark.read.text(s"$dir/$f").collect().map(_.getString(0)).sorted.toSeq
+      assert(rows(out) == rows(serialOut), f)
+    }
+  }
+
   test("publish: atomic build→release promotion (O5)") {
     val build = Files.createTempDirectory("build_v").toString
     Files.writeString(Paths.get(build, "nodes.jsonl"), "{}\n")
