@@ -69,4 +69,238 @@ class SchemaJsonSpec extends SparkSpec {
     SchemaJson.write(nodes, edges, s"$out/schema.json")
     assert(Files.exists(Paths.get(out, "schema.json")))
   }
+
+  test("bundle sidecars: dangling endpoints, two-leaf and unknown categories, null pks, aggregators, qualifiers") {
+    import spark.implicits._
+    val nodes = spark.read.json(Seq(
+      """{"id":"HGNC:1","name":"g1","category":["biolink:NamedThing","biolink:Gene"],"taxon":"NCBITaxon:9606"}""",
+      // two leaf types: neither category is an ancestor of the other
+      """{"id":"HGNC:2","name":"g2","category":["biolink:Gene","biolink:Disease"]}""",
+      """{"id":"X:1","name":"w","category":["custom:Widget"]}""",
+      """{"id":"MONDO:1","category":["biolink:Disease"]}""",
+      """{"id":"colonless","name":"c","category":["biolink:NamedThing"]}""").toDS())
+    val edges = spark.read.json(Seq(
+      """{"subject":"HGNC:1","predicate":"biolink:gene_associated_with_condition","object":"MONDO:1","primary_knowledge_source":"infores:hgnc","aggregator_knowledge_source":["infores:automat-robokop","infores:not-an-aggregator"],"publications":["PMID:1"],"object_aspect_qualifier":"activity"}""",
+      """{"subject":"HGNC:2","predicate":"biolink:gene_associated_with_condition","object":"MONDO:1","primary_knowledge_source":"infores:ncbigene"}""",
+      // no primary_knowledge_source
+      """{"subject":"X:1","predicate":"biolink:related_to","object":"HGNC:1"}""",
+      """{"subject":"colonless","predicate":"biolink:related_to","object":"HGNC:2","primary_knowledge_source":"infores:hgnc","aggregator_knowledge_source":[]}""",
+      // one endpoint missing from the nodes, then both
+      """{"subject":"HGNC:1","predicate":"biolink:related_to","object":"MISSING:9","primary_knowledge_source":"infores:hgnc"}""",
+      """{"subject":"MISSING:1","predicate":"biolink:affects","object":"MISSING:2","primary_knowledge_source":"infores:ghost"}""").toDS())
+    val spec = graft.pipeline.GraphSpec("sidecar_kg", "sidecar KG",
+      sources = Seq(graft.pipeline.GraphSource("SRC", sourceVersion = Some("v1"))))
+    val out = Files.createTempDirectory("sidecars")
+    val result = graft.pipeline.GraphBundle.finalizeBundle(spec, nodes, edges, out.toString)
+    assert((result.nodeCount, result.edgeCount) == ((5L, 6L)))
+    def text(f: String) = Files.readString(out.resolve(f))
+    // qc-results.json serializes every QcResults field
+    val metadataJson =
+      """{
+      |  "graph_id" : "sidecar_kg",
+      |  "graph_name" : "sidecar KG",
+      |  "build_version" : "44ba85ad2aae9d18",
+      |  "node_count" : 5,
+      |  "edge_count" : 6,
+      |  "sources" : [ {
+      |    "id" : "SRC",
+      |    "build_version" : "1bab8ca95d0651ed",
+      |    "merge_strategy" : "default"
+      |  } ]
+      |}""".stripMargin
+    val qcJson =
+      """{
+      |  "node_count" : 5,
+      |  "edge_count" : 6,
+      |  "edges_missing_nodes" : 3,
+      |  "node_type_counts" : {
+      |    "biolink:Disease" : 2,
+      |    "biolink:Gene" : 2,
+      |    "biolink:NamedThing" : 1,
+      |    "custom:Widget" : 1
+      |  },
+      |  "predicate_counts" : {
+      |    "biolink:affects" : 1,
+      |    "biolink:gene_associated_with_condition" : 2,
+      |    "biolink:related_to" : 3
+      |  },
+      |  "primary_knowledge_source_counts" : {
+      |    "(none)" : 1,
+      |    "infores:ghost" : 1,
+      |    "infores:hgnc" : 3,
+      |    "infores:ncbigene" : 1
+      |  },
+      |  "invalid_node_types" : [ "custom:Widget" ],
+      |  "deprecated_knowledge_sources" : [ "infores:ncbigene" ],
+      |  "invalid_knowledge_sources" : [ "infores:ghost", "infores:not-an-aggregator" ],
+      |  "warnings" : [ "3 edge endpoints missing from nodes", "invalid node types: custom:Widget", "deprecated infores identifier: infores:ncbigene", "invalid infores identifier: infores:ghost", "invalid infores identifier: infores:not-an-aggregator" ]
+      |}""".stripMargin
+    val schemaJson =
+      """{
+      |  "nodes" : [ {
+      |    "category" : [ "biolink:Disease" ],
+      |    "count" : 1,
+      |    "id_prefixes" : {
+      |      "MONDO" : 1
+      |    },
+      |    "attributes" : { }
+      |  }, {
+      |    "category" : [ "biolink:Disease", "biolink:Gene" ],
+      |    "count" : 1,
+      |    "id_prefixes" : {
+      |      "HGNC" : 1
+      |    },
+      |    "attributes" : {
+      |      "name" : 1
+      |    }
+      |  }, {
+      |    "category" : [ "biolink:Gene" ],
+      |    "count" : 1,
+      |    "id_prefixes" : {
+      |      "HGNC" : 1
+      |    },
+      |    "attributes" : {
+      |      "name" : 1,
+      |      "taxon" : 1
+      |    }
+      |  }, {
+      |    "category" : [ "biolink:NamedThing" ],
+      |    "count" : 1,
+      |    "id_prefixes" : {
+      |      "" : 1
+      |    },
+      |    "attributes" : {
+      |      "name" : 1
+      |    }
+      |  }, {
+      |    "category" : [ "custom:Widget" ],
+      |    "count" : 1,
+      |    "id_prefixes" : {
+      |      "X" : 1
+      |    },
+      |    "attributes" : {
+      |      "name" : 1
+      |    }
+      |  } ],
+      |  "nodes_summary" : {
+      |    "total_count" : 5,
+      |    "id_prefixes" : {
+      |      "HGNC" : 2,
+      |      "" : 1,
+      |      "MONDO" : 1,
+      |      "X" : 1
+      |    },
+      |    "attributes" : {
+      |      "name" : 4,
+      |      "taxon" : 1
+      |    }
+      |  },
+      |  "edges" : [ {
+      |    "subject_category" : [ "biolink:Disease", "biolink:Gene" ],
+      |    "predicate" : "biolink:gene_associated_with_condition",
+      |    "object_category" : [ "biolink:Disease" ],
+      |    "count" : 1,
+      |    "primary_knowledge_sources" : {
+      |      "infores:ncbigene" : 1
+      |    },
+      |    "qualifiers" : { },
+      |    "attributes" : { },
+      |    "subject_id_prefixes" : {
+      |      "HGNC" : 1
+      |    },
+      |    "object_id_prefixes" : {
+      |      "MONDO" : 1
+      |    }
+      |  }, {
+      |    "subject_category" : [ "biolink:Gene" ],
+      |    "predicate" : "biolink:gene_associated_with_condition",
+      |    "object_category" : [ "biolink:Disease" ],
+      |    "count" : 1,
+      |    "primary_knowledge_sources" : {
+      |      "infores:hgnc" : 1
+      |    },
+      |    "qualifiers" : {
+      |      "object_aspect_qualifier" : 1
+      |    },
+      |    "attributes" : {
+      |      "aggregator_knowledge_source" : 1,
+      |      "publications" : 1
+      |    },
+      |    "subject_id_prefixes" : {
+      |      "HGNC" : 1
+      |    },
+      |    "object_id_prefixes" : {
+      |      "MONDO" : 1
+      |    }
+      |  }, {
+      |    "subject_category" : [ "biolink:NamedThing" ],
+      |    "predicate" : "biolink:related_to",
+      |    "object_category" : [ "biolink:Disease", "biolink:Gene" ],
+      |    "count" : 1,
+      |    "primary_knowledge_sources" : {
+      |      "infores:hgnc" : 1
+      |    },
+      |    "qualifiers" : { },
+      |    "attributes" : {
+      |      "aggregator_knowledge_source" : 1
+      |    },
+      |    "subject_id_prefixes" : {
+      |      "" : 1
+      |    },
+      |    "object_id_prefixes" : {
+      |      "HGNC" : 1
+      |    }
+      |  }, {
+      |    "subject_category" : [ "custom:Widget" ],
+      |    "predicate" : "biolink:related_to",
+      |    "object_category" : [ "biolink:Gene" ],
+      |    "count" : 1,
+      |    "primary_knowledge_sources" : {
+      |      "(none)" : 1
+      |    },
+      |    "qualifiers" : { },
+      |    "attributes" : { },
+      |    "subject_id_prefixes" : {
+      |      "X" : 1
+      |    },
+      |    "object_id_prefixes" : {
+      |      "HGNC" : 1
+      |    }
+      |  } ],
+      |  "edges_summary" : {
+      |    "total_count" : 4,
+      |    "predicates" : {
+      |      "biolink:gene_associated_with_condition" : 2,
+      |      "biolink:related_to" : 2
+      |    },
+      |    "primary_knowledge_sources" : {
+      |      "infores:hgnc" : 2,
+      |      "(none)" : 1,
+      |      "infores:ncbigene" : 1
+      |    },
+      |    "predicates_by_knowledge_source" : {
+      |      "(none)" : {
+      |        "biolink:related_to" : 1
+      |      },
+      |      "infores:hgnc" : {
+      |        "biolink:gene_associated_with_condition" : 1,
+      |        "biolink:related_to" : 1
+      |      },
+      |      "infores:ncbigene" : {
+      |        "biolink:gene_associated_with_condition" : 1
+      |      }
+      |    },
+      |    "qualifiers" : {
+      |      "object_aspect_qualifier" : 1
+      |    },
+      |    "attributes" : {
+      |      "aggregator_knowledge_source" : 2,
+      |      "publications" : 1
+      |    }
+      |  }
+      |}""".stripMargin
+    assert(text("graph-metadata.json") == metadataJson)
+    assert(text("qc-results.json") == qcJson)
+    assert(text("schema.json") == schemaJson)
+  }
 }

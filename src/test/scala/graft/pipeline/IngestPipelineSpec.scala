@@ -137,7 +137,7 @@ class IngestPipelineSpec extends SparkSpec {
     val r = IngestPipeline.runSource(spark, l, dir)
     assert(r.stages.map(_.stage) == Seq("parsing", "normalization", "supplementation"))
     val suppDetail = r.stages.last.detail
-    assert(suppDetail.contains("supp_edges=1"), suppDetail)
+    assert(suppDetail == "supp_nodes=1 supp_node_failures=0 supp_edges=1 supp_failed_edges=0")
     // the supplemental variant→gene edge landed in the source graph,
     // subject pre-normalized, object through the node map
     val supp = r.edges.filter(col("primary_knowledge_source") === "infores:snpeff")
