@@ -1,12 +1,12 @@
 package graft.derive
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.Biolink
 
-/** Meta-KG + QC aggregation plane (SURVEY §2.5 A10-A13, §2.8 D3/D6).
-  * References: orion/meta_kg.py:50-187, orion/kgx_validation.py:25-213,
-  * orion/kgx_metadata.py:295-447.
+/** Meta-KG aggregation plane (SURVEY §2.5 A10-A11, §2.8 D3).
+  * Reference: orion/meta_kg.py:50-187. The bundle's QC and schema.json
+  * statistics are [[BundleStats]].
   */
 object MetaKg {
 
@@ -49,82 +49,6 @@ object MetaKg {
       .groupBy(col("node_type"))
       .agg(count(lit(1)).as("n_nodes"),
         array_sort(collect_set(col("prefix"))).as("id_prefixes"))
-
-  final case class QcResults(
-      nodeCount: Long, edgeCount: Long,
-      nodeTypeCounts: Map[String, Long],
-      predicateCounts: Map[String, Long],
-      primaryKsCounts: Map[String, Long],
-      edgesMissingNodes: Long,
-      invalidNodeTypes: Seq[String],
-      deprecatedKnowledgeSources: Seq[String],
-      invalidKnowledgeSources: Seq[String],
-      warnings: Seq[String])
-
-  /** D6 — graph QC (ref orion/kgx_validation.py:25-213): exact counts (QC
-    * is exact in the reference — no approx_count_distinct), dangling-edge
-    * anti-join, leaf-type counts, invalid-node-type check
-    * (biolink_utils.py:202-233 get_valid_node_types) and infores-catalog
-    * status for every knowledge source (deprecated/invalid → warnings). */
-  def qc(nodes: DataFrame, edges: DataFrame,
-         infores: graft.model.InforesCatalog = graft.model.InforesCatalog.vendored): QcResults = {
-    // ONE aggregation pass per side instead of six (count / type counts /
-    // predicate counts / pks counts / aggregator-ks set as separate
-    // actions): every fact family explodes into tagged (kind, item) rows
-    // and a single groupBy counts them all — the driver-side regrouping
-    // below reproduces the former per-family maps exactly (incl. the
-    // "(none)" null spellings). Each action is a full scan at production
-    // scale, so the fusion is 6 scans → 2.
-    def fact(kind: String, item: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      struct(lit(kind).as("kind"), item.cast("string").as("item"))
-    val emptyFacts = typedlit(Seq.empty[(String, String)])
-      .cast("array<struct<kind:string,item:string>>")
-    val nodeFacts = nodes.select(explode(concat(
-        array(fact("_cnt", lit(null))),
-        coalesce(transform(graft.model.BiolinkModel.leafCategories(col("category")),
-          t => fact("type", t)), emptyFacts))).as("f"))
-      .groupBy(col("f.kind").as("kind"), col("f.item").as("item")).count().collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val hasPks = edges.columns.contains(Biolink.PrimaryKnowledgeSource)
-    val hasAggKs = edges.columns.contains(Biolink.AggregatorKnowledgeSources)
-    val edgeFacts = edges.select(explode(concat(Seq(
-        array(fact("_cnt", lit(null)), fact("pred", col(Biolink.Predicate)))) ++
-        (if (hasPks) Seq(array(fact("pks", col(Biolink.PrimaryKnowledgeSource)))) else Nil) ++
-        (if (hasAggKs) Seq(coalesce(transform(col(Biolink.AggregatorKnowledgeSources),
-          k => fact("aggks", k)), emptyFacts)) else Nil): _*)).as("f"))
-      .groupBy(col("f.kind").as("kind"), col("f.item").as("item")).count().collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val nodeCount = nodeFacts.collect { case ("_cnt", _, n) => n }.sum
-    val edgeCount = edgeFacts.collect { case ("_cnt", _, n) => n }.sum
-    val typeCounts = nodeFacts.collect {
-      case ("type", t, n) => Option(t).getOrElse("(none)") -> n
-    }.toMap
-    val invalidTypes = typeCounts.keys
-      .filterNot(t => t == "(none)" || graft.model.BiolinkModel.isKnownCategory(t))
-      .toSeq.sorted
-    val predCounts = edgeFacts.collect { case ("pred", p, n) => p -> n }.toMap
-    val pksCounts =
-      if (hasPks) edgeFacts.collect {
-        case ("pks", k, n) => Option(k).getOrElse("(none)") -> n
-      }.toMap
-      else Map.empty[String, Long]
-    val aggKs: Seq[String] =
-      edgeFacts.collect { case ("aggks", k, _) if k != null => k }.toSeq
-    val allKs = (pksCounts.keys.filterNot(_ == "(none)") ++ aggKs).toSet
-    val deprecatedKs = infores.deprecated(allKs)
-    val invalidKs = infores.invalid(allKs)
-    val ids = nodes.select(col("id"))
-    val missing = edges
-      .select(explode(array(col(Biolink.Subject), col(Biolink.Object_))).as("id"))
-      .join(ids, Seq("id"), "left_anti").count()
-    val warnings =
-      (if (missing > 0) Seq(s"$missing edge endpoints missing from nodes") else Nil) ++
-      (if (invalidTypes.nonEmpty) Seq(s"invalid node types: ${invalidTypes.mkString(", ")}") else Nil) ++
-      deprecatedKs.map(ks => s"deprecated infores identifier: $ks") ++
-      invalidKs.map(ks => s"invalid infores identifier: $ks")
-    QcResults(nodeCount, edgeCount, typeCounts, predCounts, pksCounts, missing,
-      invalidTypes, deprecatedKs, invalidKs, warnings)
-  }
 
   /** D3 — the meta-KG file trio (ref orion/meta_kg.py:14-16,23-218):
     * meta_knowledge_graph.json (TRAPI nodes/edges), testing_data.json
@@ -173,20 +97,5 @@ object MetaKg {
       java.nio.file.Paths.get(outDir, "testing_data.json"), testing.toPrettyString)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outDir, "example_edges.jsonl"), exampleLines.toString)
-  }
-
-  /** A12-style schema summary: per (node type set) prefix/attribute counts,
-    * per (s,p,o) triple counts — compact maps for schema.json. */
-  def schemaSummary(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val types = nodeTypes(nodes)
-    val subjT = types.select(col("id").as("_sid"), col("node_type").as("subject_type"))
-    val objT = types.select(col("id").as("_oid"), col("node_type").as("object_type"))
-    edges
-      .join(subjT, edges(Biolink.Subject) === col("_sid"))
-      .join(objT, edges(Biolink.Object_) === col("_oid"))
-      .groupBy(col("subject_type"), col(Biolink.Predicate), col("object_type"))
-      .agg(count(lit(1)).as("n"),
-        count_distinct(col(Biolink.Subject)).as("n_subjects"),
-        count_distinct(col(Biolink.Object_)).as("n_objects"))
   }
 }

@@ -62,33 +62,25 @@ object KgxIO {
       lit(0))
   }
 
-  /** K1 — dedup-on-write counters: (distinct entities, repeats dropped). */
-  def repeatCount(df: DataFrame, keyCols: Seq[String]): (Long, Long) = {
-    val agg = df.agg(count(lit(1)).as("n"),
-      count_distinct(struct(keyCols.map(col): _*)).as("d")).head()
-    val (n, d) = (agg.getLong(0), agg.getLong(1))
-    (d, n - d)
-  }
-
-  /** K1/K2 — write a node or edge DataFrame as KGX jsonl, optionally
-    * gzipped, dropping duplicate ids like the reference writer. Output is a
+  /** K1/K2 — write a node or edge DataFrame as gzipped KGX jsonl,
+    * dropping duplicate ids like the reference writer. Output is a
     * directory of part files (the scalable layout); use writeSingleFile for
     * byte-compatible single-file bundles. */
-  def writeJsonl(df: DataFrame, path: String, dedupKeys: Seq[String] = Seq("id"),
-                 gzip: Boolean = true): Unit = {
+  def writeJsonl(df: DataFrame, path: String, dedupKeys: Seq[String] = Seq("id")): Unit = {
     val deduped =
       if (dedupKeys.nonEmpty && dedupKeys.forall(df.columns.contains)) df.dropDuplicates(dedupKeys)
       else df
-    val w = deduped.write.mode(SaveMode.Overwrite)
+    deduped.write.mode(SaveMode.Overwrite)
       .option("ignoreNullFields", "true")
-    (if (gzip) w.option("compression", "gzip") else w).json(path)
+      .option("compression", "gzip")
+      .json(path)
   }
 
-  /** Single-file jsonl[.gz] for KGX bundle compatibility (coalesce(1) —
+  /** Single-file jsonl.gz for KGX bundle compatibility (coalesce(1) —
     * only for final export, never intermediates). */
-  def writeSingleFile(df: DataFrame, file: String, gzip: Boolean = true): Unit = {
+  def writeSingleFile(df: DataFrame, file: String): Unit = {
     val tmp = file + ".spark-tmp"
-    writeJsonl(df.coalesce(1), tmp, dedupKeys = Nil, gzip = gzip)
+    writeJsonl(df.coalesce(1), tmp, dedupKeys = Nil)
     val dir = new java.io.File(tmp)
     val dest = new java.io.File(file)
     if (dest.exists()) dest.delete()
@@ -99,8 +91,4 @@ object KgxIO {
     }
     dir.listFiles().foreach(_.delete()); dir.delete()
   }
-
-  /** Parquet intermediates (columnar, splittable — SURVEY §1.3). */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
 }

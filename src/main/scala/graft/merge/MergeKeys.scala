@@ -78,9 +78,7 @@ object MergeKeys {
   def edgeId(df: DataFrame, customAttributes: Seq[String] = Nil): Column =
     lower(xxh64Hex(edgeKeyInput(df, customAttributes)))
 
-  /** UUIDv5 in the reference's ORION namespace (ref orion/merging.py:13,97-99). */
-  private val OrionNamespace = java.util.UUID.fromString("e2a5b21f-4e4d-4a6e-b64a-1f3c78e2a9d0")
-
+  /** UUIDv5 (RFC 4122) of `name` in `namespace` (ref orion/merging.py:97-99). */
   def uuid5(namespace: java.util.UUID, name: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-1")
     val nsBytes = java.nio.ByteBuffer.allocate(16)
@@ -93,10 +91,4 @@ object MergeKeys {
     val bb = java.nio.ByteBuffer.wrap(d, 0, 16)
     new java.util.UUID(bb.getLong, bb.getLong).toString
   }
-
-  val uuid5Udf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((s: String) => uuid5(OrionNamespace, s))
-
-  def edgeUuid(df: DataFrame, customAttributes: Seq[String] = Nil): Column =
-    uuid5Udf(edgeKeyInput(df, customAttributes))
 }

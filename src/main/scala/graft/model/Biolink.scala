@@ -53,11 +53,6 @@ object Biolink {
     "equivalent_identifiers", "synonym", "category",
     "aggregator_knowledge_source", "publications", "xref")
 
-  val requiredEdgeProps: Seq[String] =
-    Seq(Subject, Object_, Predicate, PrimaryKnowledgeSource)
-
-  val requiredNodeProps: Seq[String] = Seq("id", "name", "category")
-
   /** Keys never property-merged (merge key members + id),
     * ref orion/merging.py:66. */
   val mergeSkipKeys: Set[String] =
@@ -67,30 +62,6 @@ object Biolink {
     * expansion (ref orion/redundant_kg.py:28-31) — the full vendored slice
     * lives in [[BiolinkModel.predicateAncestors]] (~70 predicates). */
   val predicateAncestors: Map[String, Seq[String]] = BiolinkModel.predicateAncestors
-
-  private val legacyPredicateAncestors: Map[String, Seq[String]] = Map(
-    "biolink:related_to" -> Seq("biolink:related_to"),
-    "biolink:affects" -> Seq("biolink:affects", "biolink:related_to"),
-    "biolink:regulates" -> Seq("biolink:regulates", "biolink:affects", "biolink:related_to"),
-    "biolink:causes" -> Seq("biolink:causes", "biolink:contributes_to", "biolink:affects", "biolink:related_to"),
-    "biolink:contributes_to" -> Seq("biolink:contributes_to", "biolink:affects", "biolink:related_to"),
-    "biolink:treats" -> Seq("biolink:treats", "biolink:treats_or_applied_or_studied_to_treat", "biolink:related_to"),
-    "biolink:treats_or_applied_or_studied_to_treat" -> Seq("biolink:treats_or_applied_or_studied_to_treat", "biolink:related_to"),
-    "biolink:interacts_with" -> Seq("biolink:interacts_with", "biolink:related_to"),
-    "biolink:physically_interacts_with" -> Seq("biolink:physically_interacts_with", "biolink:interacts_with", "biolink:related_to"),
-    "biolink:directly_physically_interacts_with" -> Seq("biolink:directly_physically_interacts_with", "biolink:physically_interacts_with", "biolink:interacts_with", "biolink:related_to"),
-    "biolink:subclass_of" -> Seq("biolink:subclass_of", "biolink:related_to"),
-    "biolink:has_phenotype" -> Seq("biolink:has_phenotype", "biolink:related_to"),
-    "biolink:expressed_in" -> Seq("biolink:expressed_in", "biolink:related_to"),
-    "biolink:located_in" -> Seq("biolink:located_in", "biolink:related_to"),
-    "biolink:gene_associated_with_condition" -> Seq("biolink:gene_associated_with_condition", "biolink:condition_associated_with_gene", "biolink:related_to"),
-  )
-
-  /** Predicate → inverse (ref orion/biolink_utils.py:68-80). Directed map
-    * derived from [[BiolinkModel.inversePairs]]; symmetric predicates
-    * invert to themselves via [[BiolinkModel.invertPredicate]]. */
-  val predicateInverses: Map[String, String] =
-    BiolinkModel.inversePairs.toMap
 
   /** Symmetric predicates (ref orion/biolink_utils.py:158-164). */
   val symmetricPredicates: Set[String] = BiolinkModel.symmetricPredicates
@@ -114,17 +85,4 @@ object Biolink {
     "decreased" -> Seq("decreased"),
     "downregulated" -> Seq("downregulated", "decreased"),
   )
-
-  /** The fixed qualifier ordering of the collapsed-qualifiers grammar
-    * (ref orion/collapse_qualifiers.py:55-171). */
-  val collapseGrammarOrder: Seq[String] = Seq(
-    "species_context_qualifier", "disease_context_qualifier",
-    "subject_form_or_variant_qualifier", "subject_part_qualifier",
-    "subject_derivative_qualifier", "subject_context_qualifier",
-    "subject_direction_qualifier", "subject_aspect_qualifier",
-    "qualified_predicate",
-    "object_direction_qualifier", "object_aspect_qualifier",
-    "object_form_or_variant_qualifier", "object_part_qualifier",
-    "object_derivative_qualifier", "object_context_qualifier",
-    "causal_mechanism_qualifier", "anatomical_context_qualifier")
 }

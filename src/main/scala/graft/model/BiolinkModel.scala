@@ -194,7 +194,6 @@ object BiolinkModel {
   /** Every category the model knows (sorted) — the biolink-compliant set
     * lenient normalization checks node types against. */
   val knownCategories: Seq[String] = categoryParents.keys.toSeq.sorted
-  def isKnownPredicate(p: String): Boolean = predicateParents.contains(p)
 
   /** Symmetric predicates (invert to themselves, biolink_utils.py:73-76). */
   val symmetricPredicates: Set[String] = Set(

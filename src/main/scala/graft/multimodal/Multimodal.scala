@@ -30,17 +30,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Canonical media schema: opaque payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true),
-      StructField("codec", StringType, nullable = true))), nullable = true)))
-
   /** STUB decode for payloads in formats [[decodePixels]] does not cover
     * (audio/video codecs, exotic images): deterministic
     * pseudo-features from the payload bytes so the pipeline

@@ -213,7 +213,10 @@ object IngestPipeline {
       val (suppNodesRaw, suppEdgesRaw) = Vcf.annotatedVcfToKgx(annotated)
       val (suppNodes, suppEdges, detail) = maps match {
         case Some((nm, pm)) =>
-          val (sn, snStats) = Normalizer.normalizeNodes(suppNodesRaw, nm, loader.strictNormalization)
+          // normalized like the main path: the node stats ride the parquet
+          // write, and the edge joins stay cached in the source's scope
+          // until that write has run
+          val (sn, snStats) = Normalizer.normalizeNodesDeferred(suppNodesRaw, nm, loader.strictNormalization)
           val subjectIdentity = suppEdgesRaw
             .select(col(graft.model.Biolink.Subject).as("orig_id")).distinct()
             .withColumn("norm_id", col("orig_id"))
@@ -228,11 +231,13 @@ object IngestPipeline {
             if (loader.strictNormalization) nm.select(col("orig_id"), col("norm_id"))
             else Normalizer.lenientEdgeMap(suppNodesRaw, nm)
           val edgeMap = baseMap.unionByName(subjectIdentity).distinct()
-          val (se, seStats) = Normalizer.normalizeEdges(suppEdgesRaw, edgeMap, pm,
+          val (se, seStats) = Normalizer.normalizeEdgesCached(scope, suppEdgesRaw, edgeMap, pm,
             Vcf.snpEffProvenance)
-          (sn, se, () =>
-            s"supp_nodes=${snStats.postNorm} supp_node_failures=${snStats.failures} " +
-            s"supp_edges=${seStats.normalizedEdges} supp_failed_edges=${seStats.edgesFailedDueToNodes}")
+          (sn, se, () => {
+            val ns = snStats()
+            s"supp_nodes=${ns.postNorm} supp_node_failures=${ns.failures} " +
+              s"supp_edges=${seStats.normalizedEdges} supp_failed_edges=${seStats.edgesFailedDueToNodes}"
+          })
         case None =>
           // the counts ride the parquet write of the unioned frames
           def observed(df: DataFrame, what: String) =

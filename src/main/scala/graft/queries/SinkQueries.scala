@@ -138,7 +138,7 @@ object SinkQueries {
   private val q154: Q = (s, _) => {
     val edges = kgxEdges(s)
     new java.io.File(s"$sinkOut/q154").mkdirs()
-    KgxIO.writeSingleFile(edges, s"$sinkOut/q154/edges.jsonl.gz", gzip = true)
+    KgxIO.writeSingleFile(edges, s"$sinkOut/q154/edges.jsonl.gz")
     edges.select(
       col("subject"), col("predicate"), col("object"),
       coalesce(col("p_value"), lit(-1.0)).as("p_value"),
@@ -403,7 +403,7 @@ object SinkQueries {
         sourceVersion = Some("v1"), parsingVersion = Some("1.0"),
         normalizationVersion = Some("1.0"))))
     graft.pipeline.GraphBundle.finalizeBundle(spec, nodes, edges, s"$sinkOut/q157/bundle")
-    val qc = graft.derive.MetaKg.qc(nodes, edges)
+    val (qc, _) = graft.derive.BundleStats(nodes, edges)
     val buildVersion = graft.pipeline.Versioning.graphBuildVersion(
       Seq(graft.pipeline.Versioning.sourceBuildVersion("kgx_fixture", "v1", "1.0", "1.0")))
     val rows: Seq[(String, String, Long)] =

@@ -32,15 +32,6 @@ object Skew {
       .groupBy(col(key), col("_salt")).agg(count(lit(1)).as("_partial"))
       .groupBy(col(key)).agg(sum(col("_partial")).as("count"))
 
-  /** Key-frequency probe: sample-based hot-key detection, the decision
-    * input for salting (frequency > threshold → salt). */
-  def hotKeys(df: DataFrame, key: String, threshold: Long,
-              sampleFraction: Double = 0.01): DataFrame =
-    df.sample(withReplacement = false, sampleFraction, seed = 42)
-      .groupBy(col(key)).count()
-      .filter(col("count") > (threshold * sampleFraction).toLong)
-      .select(col(key))
-
   /** Widen under-partitioned input before an expensive per-row expression
     * (interpreted higher-order functions, hashing sweeps). A small parquet
     * table arrives as ONE split and would pin the whole sweep to one core;

@@ -24,8 +24,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dotProduct(a, b)
 
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Single-pass codegen cosine; accumulation order matches the
     * dot/(‖a‖·‖b‖) composition exactly. */
   def cosine(a: Column, b: Column): Column =

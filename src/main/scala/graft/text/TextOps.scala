@@ -86,11 +86,6 @@ object TextOps {
             i => array_join(slice(toks, i + 1, lit(n)), " ")))), 1)
   }
 
-  /** Rolling-hash document sketch: min-k of shingle hashes (winnowing-style
-    * compact fingerprint; k smallest xxhash64 values of the shingle set). */
-  def minKSketch(text: Column, n: Int, k: Int): Column =
-    slice(array_sort(transform(array_distinct(shingles(text, n)), s => xxhash64(s))), 1, k)
-
   /** Duplicate word-n-gram fraction (a Gopher-style repetition signal):
     * 1 - distinct/total n-grams; 0.0 when the doc has < n+1 tokens (a
     * single n-gram can't repeat). Pure expression — scan-local. */

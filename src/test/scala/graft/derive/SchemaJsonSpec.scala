@@ -1,10 +1,11 @@
 package graft.derive
 
 import graft.SparkSpec
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-/** Published schema.json serialization (kgx_metadata.py:230-447): leaf
-  * grouping, count-sorted maps, qualifier/attribute split, summaries. */
+/** The bundle statistics: published schema.json serialization
+  * (kgx_metadata.py:230-447) with its leaf grouping, count-sorted maps,
+  * qualifier/attribute split and summaries, and the QC results. */
 class SchemaJsonSpec extends SparkSpec {
 
   test("leaf-category grouping + qualifier/attribute split + summaries") {
@@ -18,7 +19,7 @@ class SchemaJsonSpec extends SparkSpec {
       """{"subject":"HGNC:1","predicate":"biolink:gene_associated_with_condition","object":"MONDO:1","primary_knowledge_source":"infores:test","publications":["PMID:1"],"object_aspect_qualifier":"activity"}""",
       """{"subject":"HGNC:2","predicate":"biolink:gene_associated_with_condition","object":"MONDO:1","primary_knowledge_source":"infores:test"}""").toDS())
 
-    val root = SchemaJson.build(nodes, edges)
+    val (_, root) = BundleStats(nodes, edges)
 
     // node groups: {Gene} ×2 and {Disease} ×1 (ancestors leaf-dropped)
     val nodesArr = root.get("nodes")
@@ -60,14 +61,11 @@ class SchemaJsonSpec extends SparkSpec {
     val edges = spark.read.json(Seq(
       """{"subject":"X:1","predicate":"biolink:related_to","object":"HGNC:1","primary_knowledge_source":"infores:ncbigene"}""",
       """{"subject":"HGNC:1","predicate":"biolink:related_to","object":"X:1","primary_knowledge_source":"infores:not-in-registry"}""").toDS())
-    val qc = MetaKg.qc(nodes, edges)
+    val (qc, _) = BundleStats(nodes, edges)
     assert(qc.invalidNodeTypes == Seq("custom:Widget"))
     assert(qc.deprecatedKnowledgeSources == Seq("infores:ncbigene"))
     assert(qc.invalidKnowledgeSources == Seq("infores:not-in-registry"))
     assert(qc.warnings.exists(_.contains("deprecated infores identifier: infores:ncbigene")))
-    val out = Files.createTempDirectory("schema-spec").toString
-    SchemaJson.write(nodes, edges, s"$out/schema.json")
-    assert(Files.exists(Paths.get(out, "schema.json")))
   }
 
   test("bundle sidecars: dangling endpoints, two-leaf and unknown categories, null pks, aggregators, qualifiers") {
