@@ -1,10 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 import org.apache.spark.sql.graftbridge.CatalystBridge
 
 /** Custom Catalyst expressions for the similarity-search hot path
@@ -86,12 +89,115 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
     copy(left = l, right = r)
 }
 
+/** Product quantization against codebooks passed as a literal child of
+  * type array<array<array<float>>>: subspace × centroid × component, the
+  * same number of centroids in every subspace. Each row is one loop over
+  * subspaces and centroids. The subvector of subspace s is the part of
+  * elements [s·subDim, (s+1)·subDim) the vector has, what `slice` gives;
+  * its dot with a centroid sums float products in double from 0.0, left
+  * to right, as [[DotProduct]] does. */
+abstract class PqExpression extends VectorBinaryExpression with CodegenFallback {
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(FloatType | DoubleType, _), ArrayType(ArrayType(ArrayType(FloatType, _), _), _))
+        if right.foldable => TypeCheckSuccess
+    case _ => TypeCheckFailure(s"$prettyName takes an array<float|double> vector and literal " +
+      s"array<array<array<float>>> codebooks, not ${left.dataType.simpleString} and " +
+      right.dataType.simpleString)
+  }
+
+  /** centroids(s)(c), read once from the literal. */
+  @transient protected lazy val centroids: Array[Array[Array[Float]]] = {
+    val books = right.eval().asInstanceOf[ArrayData]
+    Array.tabulate(books.numElements()) { s =>
+      val cs = books.getArray(s)
+      Array.tabulate(cs.numElements())(c => cs.getArray(c).toFloatArray())
+    }
+  }
+  @transient protected lazy val subDim: Int = centroids.head.head.length
+
+  protected def subDot(v: ArrayData, s: Int, c: Array[Float]): Double = {
+    val from = s * subDim
+    val n = math.min(c.length, v.numElements() - from)
+    var acc = 0.0; var i = 0
+    while (i < n) { acc += read(left, v, from + i) * c(i); i += 1 }
+    acc
+  }
+}
+
+/** PQ codes of a vector: per subspace, the first centroid index of the
+  * largest x·c − ‖c‖²/2 (the L2-nearest), under SQL ordering, where NaN
+  * is above every number. A null vector gives m null codes. */
+case class PqCodes(left: Expression, right: Expression) extends PqExpression {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
+  override def nullable: Boolean = false
+  override def prettyName: String = "pq_codes"
+
+  @transient private lazy val halfNorms: Array[Array[Double]] =
+    centroids.map(_.map(c => c.map(x => x.toDouble * x).sum / 2.0))
+
+  override def eval(input: InternalRow): Any = left.eval(input) match {
+    case null => new GenericArrayData(new Array[Any](centroids.length))
+    case v: ArrayData =>
+      val codes = new Array[Int](centroids.length)
+      var s = 0
+      while (s < codes.length) {
+        val cs = centroids(s); val hn = halfNorms(s)
+        var best = 0; var bestScore = subDot(v, s, cs(0)) - hn(0)
+        var c = 1
+        while (c < cs.length) {
+          val score = subDot(v, s, cs(c)) - hn(c)
+          if (score != bestScore && java.lang.Double.compare(score, bestScore) > 0) {
+            best = c; bestScore = score
+          }
+          c += 1
+        }
+        codes(s) = best; s += 1
+      }
+      ArrayData.toArrayData(codes)
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** The ADC lookup table of a query vector, flattened: entry s·k + c is
+  * dot(q_s, centroid c of subspace s). */
+case class AdcTable(left: Expression, right: Expression) extends PqExpression {
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "adc_table"
+
+  override def nullSafeEval(q: Any, books: Any): Any = {
+    val v = q.asInstanceOf[ArrayData]
+    val k = centroids.head.length
+    val table = new Array[Double](centroids.length * k)
+    var s = 0
+    while (s < centroids.length) {
+      var c = 0
+      while (c < k) { table(s * k + c) = subDot(v, s, centroids(s)(c)); c += 1 }
+      s += 1
+    }
+    ArrayData.toArrayData(table)
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
 object VectorExpressions {
   /** Column API over the codegen expressions. */
   def dotProduct(a: Column, b: Column): Column =
     CatalystBridge.column(DotProduct(CatalystBridge.expression(a), CatalystBridge.expression(b)))
   def cosineSimilarity(a: Column, b: Column): Column =
     CatalystBridge.column(CosineSimilarity(CatalystBridge.expression(a), CatalystBridge.expression(b)))
+
+  /** `centroids(s)(c)` as the codebook literal of [[PqCodes]] and [[AdcTable]]. */
+  private def codebooks(centroids: Array[Array[Array[Float]]]): Expression = {
+    require(centroids.nonEmpty && centroids.map(_.length).distinct.length == 1 && centroids.head.nonEmpty,
+      "codebooks need the same number of centroids, at least one, in every subspace")
+    Literal.create(centroids, ArrayType(ArrayType(ArrayType(FloatType, false), false), false))
+  }
+  def pqCodes(vec: Column, centroids: Array[Array[Array[Float]]]): Column =
+    CatalystBridge.column(PqCodes(CatalystBridge.expression(vec), codebooks(centroids)))
+  def adcTable(vec: Column, centroids: Array[Array[Array[Float]]]): Column =
+    CatalystBridge.column(AdcTable(CatalystBridge.expression(vec), codebooks(centroids)))
 
   /** Expose the expressions to SQL (`SELECT cosine_similarity(a, b)`) —
     * the SparkSessionExtensions-style registration point. */

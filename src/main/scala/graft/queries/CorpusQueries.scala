@@ -210,24 +210,6 @@ object CorpusQueries {
               md5(string_agg(tok, ' ' ORDER BY pos)) AS digest
        FROM a GROUP BY 1, 2 ORDER BY doc_id, chunk_id"""
 
-  /** Exact full-precision DOT top-k — the truth PQ-ADC approximates
-    * (ADC estimates the dot, so judging it against cosine ranking would
-    * confound quantization error with the norm term). */
-  private def exactDotTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", graft.functions.VectorExpressions
-        .dotProduct(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
-  }
-
   /** q66 — product-quantization ADC ANN (m=16 subspaces × k=16 codes =
     * 64 bits/vector, 32× compression on 64-d float32) judged against
     * exact dot top-k; pinned-measurement oracle (values from
@@ -238,7 +220,7 @@ object CorpusQueries {
     val emb = Tables.embeddings(s, dir)
     val queries = emb.filter(col("vec_id") < 50)
     val index = graft.sim.Pq.train(emb, m = 16, k = 16)
-    val exact = exactDotTopK(queries, emb, k = 5)
+    val exact = graft.sim.Similarity.exactDotTopK(queries, emb, k = 5)
     val ann = graft.sim.Pq.adcTopK(queries, emb, index, k = 5)
     graft.sim.Similarity.recallReport(exact, ann, recall1Min = 0.15, overlapMin = 0.2)
       .orderBy(col("metric"))

@@ -2,6 +2,8 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Lineage
+import graft.functions.VectorExpressions
 
 /** Product quantization ANN (Jégou et al., "Product quantization for
   * nearest neighbor search", TPAMI 2011) — the heavy-compression leg of
@@ -12,16 +14,17 @@ import org.apache.spark.sql.functions._
   * same shape as Ivf.train), and a vector is stored as `m` code bytes:
   * 64 float32 dims (256 B) → 8 B at m=8/k=256, a 32× compression. Search
   * is ADC (asymmetric distance computation): the query stays full-
-  * precision, its per-subspace dot products with every centroid form m
-  * lookup tables of k entries, and a corpus row's score is m table
-  * lookups + a fixed-order sum — no per-row float dot against the full
-  * vector.
+  * precision, and its dot products with every centroid of every subspace
+  * form one flattened table of m·k doubles, entry s·k + c, built once per
+  * query on the broadcast side. A (corpus row, query) pair's score is m
+  * lookups `q_table[s·k + code_s]` summed s = 0..m-1 left to right — no
+  * dot product per pair.
   *
   * Scale shape: the corpus carries only its code arrays (the 32×-smaller
   * column is the point — at 100 TB the full-precision embeddings never
-  * re-scan); queries are bounded and broadcast; the scan is
-  * embarrassingly parallel with a per-query top-k window. Codebooks are
-  * plan literals like the IVF centroids.
+  * re-scan); queries are bounded and broadcast with their tables; the scan
+  * is embarrassingly parallel with a per-query top-k window. Codebooks are
+  * one plan literal, the child of the encode and table expressions.
   */
 object Pq {
 
@@ -31,14 +34,14 @@ object Pq {
 
   /** Seeded per-subspace Lloyd's on a bounded sample (same sampling
     * policy as Ivf.train: blind fraction+limit first, exact fraction only
-    * for provably small corpora). */
+    * for provably small corpora). Its driver actions run as "pq: train". */
   def train(corpus: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 10,
             vecCol: String = "embedding", sampleCap: Int = 10000,
             seed: Long = 42L, sampleFraction: Double = 0.01): PqIndex = {
     val vecs = corpus.select(col(vecCol))
-    val blind = vecs.sample(withReplacement = false, math.min(1.0, sampleFraction), seed)
-      .limit(sampleCap).collect()
-    val rows =
+    val rows = Lineage.labeled(corpus.sparkSession.sparkContext, "pq: train") {
+      val blind = vecs.sample(withReplacement = false, math.min(1.0, sampleFraction), seed)
+        .limit(sampleCap).collect()
       if (blind.length >= sampleCap) blind
       else {
         val n = corpus.count()
@@ -46,6 +49,7 @@ object Pq {
         else vecs.sample(withReplacement = false, math.min(1.0, sampleCap * 1.2 / n), seed)
           .limit(sampleCap).collect()
       }
+    }
     val sample = rows.map(_.getSeq[Float](0).toArray)
     require(sample.nonEmpty, "empty corpus")
     val dim = sample.head.length
@@ -84,47 +88,27 @@ object Pq {
     best
   }
 
-  private def centroidLit(c: Array[Float]): Column = array(c.map(lit(_)): _*)
-
-  /** Per-subspace L2-nearest centroid index: argmin ‖x_s − c‖² =
-    * argmax (x_s·c − ‖c‖²/2) — the dot rides the codegen expression, the
-    * half-norm is a literal. */
-  private def subCode(vec: Column, index: PqIndex, s: Int): Column = {
-    val sub = slice(vec, s * index.subDim + 1, index.subDim)
-    val scores = array(index.centroids(s).map { c =>
-      val halfNorm = c.map(x => x.toDouble * x).sum / 2.0
-      graft.functions.VectorExpressions.dotProduct(sub, centroidLit(c)) - lit(halfNorm)
-    }: _*)
-    (array_position(scores, array_max(scores)) - 1).cast("int")
-  }
-
-  /** m-byte PQ code array for a vector. */
+  /** m-byte PQ code array for a vector: per subspace, the first index of
+    * the L2-nearest centroid, argmin ‖x_s − c‖² = argmax (x_s·c − ‖c‖²/2).
+    * One [[graft.functions.PqCodes]] loop per row. */
   def encode(vec: Column, index: PqIndex): Column =
-    array((0 until index.m).map(s => subCode(vec, index, s)): _*)
+    VectorExpressions.pqCodes(vec, index.centroids)
 
-  /** ADC score of a corpus code array against one full-precision query
-    * vector column: Σ_s table_s[code_s], tables built as expressions from
-    * the query subvectors and the centroid literals. Fixed summation
-    * order s = 0..m-1. */
-  private def adcScore(qVec: Column, codes: Column, index: PqIndex): Column =
-    (0 until index.m).map { s =>
-      val sub = slice(qVec, s * index.subDim + 1, index.subDim)
-      val table = array(index.centroids(s).map(c =>
-        graft.functions.VectorExpressions.dotProduct(sub, centroidLit(c))): _*)
-      element_at(table, element_at(codes, s + 1) + 1)
-    }.reduce(_ + _)
-
-  /** PQ-ADC top-k: corpus encoded once (m code bytes per row), bounded
-    * query set broadcast, rank by ADC dot approximation. */
+  /** PQ-ADC top-k: corpus encoded once (m code bytes per row), each query's
+    * flattened m·k table built once on the broadcast side, and a pair's
+    * score the sum of its m table entries, s = 0..m-1 left to right. */
   def adcTopK(queries: DataFrame, corpus: DataFrame, index: PqIndex, k: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      encode(col(vecCol), index).as("codes"))
+    val stride = index.centroids.head.length
+    val q = queries.select(col(idCol).as("query_id"),
+      VectorExpressions.adcTable(col(vecCol), index.centroids).as("q_table"))
+    val c = corpus.select(col(idCol).as("neighbor_id"), encode(col(vecCol), index).as("codes"))
+    val score = (0 until index.m).map(s =>
+      element_at(col("q_table"), element_at(col("codes"), s + 1) + (s * stride + 1))).reduce(_ + _)
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", adcScore(col("q_vec"), col("codes"), index))
+      .withColumn("score", score)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))

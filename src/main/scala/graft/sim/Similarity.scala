@@ -49,6 +49,25 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
   }
 
+  /** Exact full-precision dot top-k, the truth PQ-ADC approximates (ADC
+    * estimates the dot, so judging it against cosine ranking would
+    * confound quantization error with the norm term). Raw scores, ranked
+    * by score descending, then neighbor id; self excluded. */
+  def exactDotTopK(queries: DataFrame, corpus: DataFrame, k: Int,
+                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
+    val scored = c.crossJoin(broadcast(q))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("score", dot(col("q_vec"), col("c_vec")))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+  }
+
   /** Deterministic random hyperplanes: h planes × dim, seeded. */
   def hyperplanes(h: Int, dim: Int, seed: Long = 42L): Seq[Array[Double]] = {
     val rnd = new scala.util.Random(seed)

@@ -14,21 +14,10 @@ object PqProbe {
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
     val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    import org.apache.spark.sql.expressions.Window
     for (dir <- sfs; (m, k) <- Seq((8, 16), (8, 64), (16, 16))) {
       val emb = graft.Tables.embeddings(spark, dir)
       val queries = emb.filter(col("vec_id") < 50)
-      val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
-      val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("neighbor_id").asc)
-      val exact = c.crossJoin(broadcast(q))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("score", graft.functions.VectorExpressions
-          .dotProduct(col("q_vec"), col("c_vec")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+      val exact = Similarity.exactDotTopK(queries, emb, k = 5)
       val index = Pq.train(emb, m = m, k = k)
       val ann = Pq.adcTopK(queries, emb, index, k = 5)
       val rows = Similarity.recallReport(exact, ann, 0.0, 0.0)

@@ -18,6 +18,17 @@ class PqSpec extends SparkSpec {
     intercept[IllegalArgumentException] { Pq.train(emb, m = 7) } // 64 % 7 != 0
   }
 
+  test("train's driver actions run as \"pq: train\", and the caller's description comes back") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val (_, report) = graft.Observe.measure(spark)(Pq.train(emb, m = 8, k = 16))
+      assert(report.jobs.nonEmpty)
+      assert(report.jobs.map(_.description).distinct == Seq("pq: train"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
+  }
+
   test("encode emits m codes in [0, k)") {
     val index = Pq.train(emb, m = 8, k = 16)
     val codes = emb.select(Pq.encode(col("embedding"), index).as("c"))
@@ -32,16 +43,7 @@ class PqSpec extends SparkSpec {
     val rows = top.collect()
     assert(rows.length == 20 * 5)
     assert(rows.forall(r => r.getLong(0) != r.getLong(1)))
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
-    val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    val exact = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", graft.functions.VectorExpressions
-        .dotProduct(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
+    val exact = Similarity.exactDotTopK(queries, emb, k = 5)
       .select(col("query_id"), col("neighbor_id"))
     val overlap = exact.join(top.select(col("query_id"), col("neighbor_id")),
       Seq("query_id", "neighbor_id")).count()
@@ -168,5 +170,29 @@ class PqSpec extends SparkSpec {
       (4L, Array(-1f, 0.5f, 0f, 3f)), (5L, null), (6L, Array(1f))))
     assert(sparkCodes(index, corpus)(1L) == Seq(Some(0), Some(1)))
     assertScalarAdc(index, corpus, corpus, k = 5)
+  }
+
+  test("adcTopK scores a pair with m lookups into its query's table, and no dot product") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ElementAt}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import graft.functions.{DotProduct, PqExpression}
+    val index = Pq.train(emb, m = 16, k = 16)
+    val plan = Pq.adcTopK(emb.filter(col("vec_id") < 5), emb, index, k = 5)
+      .queryExecution.optimizedPlan
+    val join = plan.collectFirst { case j: Join => j }.getOrElse(fail(s"no join in\n$plan"))
+    def atOrAbove(p: LogicalPlan): Seq[LogicalPlan] =
+      if (p eq join) Seq(p) else p +: p.children.flatMap(atOrAbove)
+    val perPair = atOrAbove(plan).flatMap(_.expressions)
+    assert(!perPair.exists(_.exists {
+      case _: DotProduct | _: PqExpression => true
+      case _ => false
+    }), s"a dot product or PQ loop runs per pair:\n$plan")
+    val scores = perPair.flatMap(_.collect { case a: Alias if a.name == "score" => a.child })
+      .filter(_.references.exists(_.name == "q_table"))
+    assert(scores.length == 1, s"one score expression over q_table expected:\n$plan")
+    val lookups = scores.head.collect {
+      case ElementAt(t: AttributeReference, _, _, _) if t.name == "q_table" => t
+    }
+    assert(lookups.length == index.m, s"${lookups.length} table lookups, expected ${index.m}")
   }
 }
