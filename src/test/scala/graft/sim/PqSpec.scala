@@ -82,8 +82,10 @@ class PqSpec extends SparkSpec {
         index.centroids(s).map(c => dot(q, s * index.subDim, c))))
 
     def score(t: Option[Array[Array[Double]]], code: Seq[Option[Int]]): Option[Double] =
-      for (t <- t; cs <- code.foldLeft(Option(Seq.empty[Int]))((acc, c) => for (a <- acc; c <- c) yield a :+ c))
-        yield cs.indices.tail.foldLeft(t(0)(cs(0)))((acc, s) => acc + t(s)(cs(s)))
+      t.filter(_ => code.forall(_.isDefined)).map { t =>
+        val cs = code.flatten
+        cs.indices.tail.foldLeft(t(0)(cs(0)))((acc, s) => acc + t(s)(cs(s)))
+      }
 
     private def round6(x: Double): Double = math.floor(x * 1e6 + 0.5).toLong.toDouble / 1e6
 
