@@ -146,7 +146,9 @@ case class PqCodes(left: Expression, right: Expression) extends PqExpression {
         var c = 1
         while (c < cs.length) {
           val score = subDot(v, s, cs(c)) - hn(c)
-          if (score != bestScore && java.lang.Double.compare(score, bestScore) > 0) {
+          // no score is −0.0 (every sum starts from 0.0, and x − x is 0.0),
+          // so Double.compare is SQL's ordering here: NaN above every number
+          if (java.lang.Double.compare(score, bestScore) > 0) {
             best = c; bestScore = score
           }
           c += 1

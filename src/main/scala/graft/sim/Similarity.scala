@@ -32,35 +32,30 @@ object Similarity {
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
     * vectors (excluding itself when ids collide). */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      // tie-stable rounding (StableRound scaladoc): both engines compute
-      // the sequential double dot product bit-identically
-      .withColumn("score",
-        graft.functions.StableRound.tieStableRound(cosine(col("q_vec"), col("c_vec")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
-  }
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    // tie-stable rounding (StableRound scaladoc): both engines compute
+    // the sequential double dot product bit-identically
+    topKBy(queries, corpus, k, idCol, vecCol)((q, c) =>
+      graft.functions.StableRound.tieStableRound(cosine(q, c), 6))
 
-  /** Exact full-precision dot top-k, the truth PQ-ADC approximates (ADC
-    * estimates the dot, so judging it against cosine ranking would
-    * confound quantization error with the norm term). Raw scores, ranked
-    * by score descending, then neighbor id; self excluded. */
-  def exactDotTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  /** Exact full-precision dot top-k over `vec_id`/`embedding`, the truth
+    * PQ-ADC approximates (ADC estimates the dot, so judging it against
+    * cosine ranking would confound quantization error with the norm term).
+    * Raw scores; self excluded. */
+  def exactDotTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    topKBy(queries, corpus, k, "vec_id", "embedding")(dot)
+
+  /** Exhaustive top-k: every corpus row scored against every broadcast
+    * query by `score(q_vec, c_vec)`, self excluded, ranked by score
+    * descending, then neighbor id. */
+  private def topKBy(queries: DataFrame, corpus: DataFrame, k: Int, idCol: String, vecCol: String)
+                    (score: (Column, Column) => Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", dot(col("q_vec"), col("c_vec")))
+      .withColumn("score", score(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))

@@ -163,15 +163,21 @@ class PqSpec extends SparkSpec {
 
   test("a subvector equally close to two centroids codes to the first of them") {
     // x·c − ‖c‖²/2 for x = (1, 1): subspace 0 scores 0.5, 0.5, 0.0;
-    // subspace 1 scores 0.0, 1.0, 1.0 — every product is exact
+    // subspace 1 scores 0.0, 1.0, 1.0 — every product is exact.
+    // Row 7's subspace 0, x = (∞, 0), scores ∞, NaN, ∞: NaN is the largest
+    // under SQL ordering, so its code is 1. It is a corpus row only, so
+    // every score stays finite.
     val index = Pq.PqIndex(m = 2, k = 3, subDim = 2, centroids = Array(
       Array(Array(1f, 0f), Array(0f, 1f), Array(2f, 2f)),
       Array(Array(0f, 0f), Array(1f, 1f), Array(1f, 1f))))
     val corpus = frame(Seq(
       (1L, Array(1f, 1f, 1f, 1f)), (2L, Array(1f, 1f, 1f, 1f)), (3L, Array(0f, 1f, 2f, 0f)),
-      (4L, Array(-1f, 0.5f, 0f, 3f)), (5L, null), (6L, Array(1f))))
-    assert(sparkCodes(index, corpus)(1L) == Seq(Some(0), Some(1)))
-    assertScalarAdc(index, corpus, corpus, k = 5)
+      (4L, Array(-1f, 0.5f, 0f, 3f)), (5L, null), (6L, Array(1f)),
+      (7L, Array(Float.PositiveInfinity, 0f, 0f, 0f))))
+    val codes = sparkCodes(index, corpus)
+    assert(codes(1L) == Seq(Some(0), Some(1)))
+    assert(codes(7L) == Seq(Some(1), Some(0)))
+    assertScalarAdc(index, corpus, corpus.filter(col("vec_id") =!= 7L), k = 5)
   }
 
   test("adcTopK scores a pair with m lookups into its query's table, and no dot product") {
