@@ -32,18 +32,22 @@ object Components {
     val spark = pairs.sparkSession
     import spark.implicits._
 
+    val sc = spark.sparkContext
     // canonical big→small directed edges
-    val ee = pairs.select(
-        greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("u"),
-        least(col("id_a").cast("long"), col("id_b").cast("long")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-
-    val nEdges = ee.count()
+    val (ee, nEdges) = graft.Lineage.labeled(sc, "components: prepare") {
+      val ee = pairs.select(
+          greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("u"),
+          least(col("id_a").cast("long"), col("id_b").cast("long")).as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+        .localCheckpoint()
+      (ee, ee.count())
+    }
     if (nEdges == 0) return ee.select(col("u").as("id"), col("v").as("component"))
     // unionFind collects ee to the driver eagerly
-    if (nEdges <= driverThreshold) return try unionFind(ee) finally graft.Lineage.release(ee)
+    if (nEdges <= driverThreshold)
+      return try graft.Lineage.labeled(sc, "components: union-find")(unionFind(ee))
+      finally graft.Lineage.release(ee)
 
     val last = graft.Lineage.iterate("components", ee, maxIter, (-1L, -1L))((ee, _, _) => {
       // large-star: for every node u, attach each LARGER neighbor v to

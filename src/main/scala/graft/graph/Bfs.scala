@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * independently (AQE sizes the shuffles, and a small frontier is
   * broadcast automatically).
   *
-  * Scale shape: the edge table is hash-partitioned by `src` ONCE and
-  * persisted, so every level's join shuffles only the frontier (≤ the
-  * reachable set) against co-located edges. Each level persists ONLY its
+  * Scale shape: the edge table is hash-partitioned by `src` and
+  * deduplicated in ONE exchange ([[Edges.directed]]) and persisted, so
+  * every level's join shuffles only the frontier (≤ the reachable set)
+  * against co-located edges. Each level persists ONLY its
   * own fragment (the newly reached nodes) and materializes it with a
   * single `count()` — the action that decides termination is the same
   * one that fills the cache, so there is no separate emptiness probe and
@@ -73,11 +74,9 @@ object Bfs {
     * the BFS level (seeds are depth 0). `edges` must have `src`/`dst`
     * string columns; `seeds` a `node` column. */
   def reach(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = graft.Lineage.scoped { scope =>
-    val e = scope.cached(edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")))
+    val e = scope.cached(Edges.directed(edges))
     val seed = scope.cached(seeds.select(col("node")).distinct()
       .withColumn("depth", lit(0)))
-    seed.count()
     var fragments = List(seed) // one cached fragment per level, newest first
     var visited = seed.select(col("node"))
     var frontier = seed.select(col("node"))
@@ -126,11 +125,9 @@ object Bfs {
   def closure(edges: DataFrame, seeds: DataFrame,
               checkpointEvery: Int = 10): DataFrame = graft.Lineage.scoped { scope =>
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val e = scope.cached(edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")))
+    val e = scope.cached(Edges.directed(edges))
     val seed = scope.cached(seeds.select(col("node")).distinct()
       .withColumn("depth", lit(0)))
-    seed.count()
     var acc = seed // union of all levels since the last collapse
     var fragments = List(seed) // cached fragments backing `acc`
     var prevCkptFile: Option[String] = None // superseded reliable-checkpoint file

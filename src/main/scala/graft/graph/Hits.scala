@@ -45,7 +45,7 @@ object Hits {
     * `iterations` exact-integer rounds; shares are the L1-normalized
     * scores rounded tie-stably to 9. Parallel edges collapse. */
   def run(edges: DataFrame, iterations: Int): DataFrame = graft.Lineage.scoped { scope =>
-    val e = scope.cached(edges.select(col("src"), col("dst")).distinct())
+    val e = scope.cached(Edges.directed(edges))
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
 

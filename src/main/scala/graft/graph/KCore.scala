@@ -25,27 +25,23 @@ object KCore {
     * ignored, self-loops dropped). Returns (node, deg): the surviving
     * nodes with their degrees in the surviving subgraph. */
   def run(edges: DataFrame, k: Int, rounds: Int): DataFrame = graft.Lineage.scoped { scope =>
-    val fwd = edges.filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"))
-    val seed = scope.cached(fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src")))
-    val und = graft.Lineage.iterate("kcore", seed, rounds, seed.count())((und, _, _) => {
+    // src-partitioned, and filled by round 1's action
+    val seed = scope.cached(Edges.undirected(edges))
+    val und = graft.Lineage.iterate("kcore", seed, rounds, 0L)((und, _, _) => {
       val keep = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src").as("node"))
       // dst-semi first, src-semi LAST: the final join leaves the surviving
-      // edge list hash-partitioned on `src`, which the next round's
-      // groupBy(src) and src-side semi-join reuse without an exchange (the
-      // checkpoint preserves the physical partitioning)
+      // edge list hash-partitioned on `src`, as the seed is, which the
+      // next round's groupBy(src) and src-side semi-join reuse without an
+      // exchange (the checkpoint preserves the physical partitioning)
       und
         .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
         .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .select(col("src"), col("dst"))
     }, observe = _.count())
-    val out = und.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    val out = graft.Lineage.labeled(edges.sparkSession.sparkContext, "kcore: degrees")(
+      und.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")).localCheckpoint())
     graft.Lineage.release(und)
     out
   }

@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   * oracle pins.
   *
   * Scale shape: the undirected edge list is hash-partitioned by `src`
-  * once and persisted; each superstep shuffles only the (node, label)
-  * table — O(V) rows — against the co-located edges, then a map-side
-  * partial min-aggregate collapses neighbour candidates before the final
-  * shuffle. Each superstep is one [[graft.Lineage.iterate]] generation,
-  * so the plan does not grow with `iterations`.
+  * and deduplicated in one exchange ([[Edges.undirected]]) and persisted,
+  * and superstep 1's action fills it; each superstep shuffles only the
+  * (node, label) table — O(V) rows — against the co-located edges, then
+  * a map-side partial min-aggregate collapses neighbour candidates
+  * before the final shuffle. Each superstep is one
+  * [[graft.Lineage.iterate]] generation, so the plan does not grow with
+  * `iterations`.
   */
 object LabelPropagation {
 
@@ -25,14 +27,10 @@ object LabelPropagation {
     * `src`/`dst` columns (direction is ignored — edges are symmetrized).
     * Returns (node, lbl). */
   def run(edges: DataFrame, iterations: Int): DataFrame = graft.Lineage.scoped { scope =>
-    val fwd = edges.filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"))
-    val und = scope.cached(fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("src")))
+    val und = scope.cached(Edges.undirected(edges))
     val seed = scope.cached(und.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node")))
-    graft.Lineage.iterate("label_prop", seed, iterations, seed.count())(
+    graft.Lineage.iterate("label_prop", seed, iterations, 0L)(
       (labels, _, _) => {
         // neighbour minimum: edge (src, dst) contributes dst's label to src
         val nbrMin = und.join(labels, und("dst") === labels("node"))

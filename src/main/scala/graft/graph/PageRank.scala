@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Fixed-iteration PageRank as DataFrame joins — the power-iteration
@@ -11,19 +12,25 @@ import org.apache.spark.sql.functions._
   * where `dangling = Σ r(u) over nodes with no out-edges`. With the
   * uniform initial rank 1/N this keeps Σ r(v) = 1 every iteration.
   *
-  * Scale shape: per iteration, ONE shuffle and ONE job — contributions
-  * are computed by joining ranks to the (src-partitioned, persisted)
-  * out-degree-annotated edge list and hash-aggregating on `dst`, and the
-  * NEXT iteration's dangling scalar rides the same action that
-  * materializes the new rank vector into the cache (`filter(!has_out)
-  * .agg(sum(rank)).head()` over the fresh persist computes every
-  * partition exactly once and returns the scalar) — there is no separate
-  * per-iteration dangling job and no bare `count()` lineage-cut action.
-  * The dangling SET is static (nodes with no out-edges), flagged once up
-  * front. Each iteration is one [[graft.Lineage.iterate]] generation,
-  * with the dangling scalar as its observation; a fixed iteration count
-  * (the common production choice — convergence-εs are replaced by a
-  * budget) keeps the run bounded.
+  * Scale shape: the preparation is one exchange of the edges and one of
+  * the node flags, filled by one labelled aggregate ("pagerank:
+  * prepare"). The src-partitioned distinct edge list ([[Edges.directed]])
+  * takes its out-degree from a window over `src`, which needs no exchange
+  * of its own; `has_out` is one `max` per node over (src, true) ∪
+  * (dst, false); and the aggregate that fills both caches returns N and
+  * the number of dangling nodes, whose seed mass is that count over N.
+  * Per iteration, ONE shuffle and ONE job — contributions are computed by
+  * joining ranks to the persisted out-degree-annotated edge list and
+  * hash-aggregating on `dst`, and the NEXT iteration's dangling scalar
+  * rides the same action that materializes the new rank vector into the
+  * cache (`filter(!has_out).agg(sum(rank)).head()` over the fresh persist
+  * computes every partition exactly once and returns the scalar) — there
+  * is no separate per-iteration dangling job and no bare `count()`
+  * lineage-cut action. The dangling SET is static (nodes with no
+  * out-edges). Each iteration is one [[graft.Lineage.iterate]]
+  * generation, with the dangling scalar as its observation; a fixed
+  * iteration count (the common production choice — convergence-εs are
+  * replaced by a budget) keeps the run bounded.
   *
   * Two rejected alternatives, both measured at sf0.1: (a) a broadcast
   * 1-row-aggregate that fuses the scalar into the update job —
@@ -45,26 +52,20 @@ object PageRank {
     * damping `d`. `edges` needs `src`/`dst` columns; parallel edges are
     * collapsed (a link counts once, as in the classic formulation). */
   def run(edges: DataFrame, iterations: Int, d: Double = 0.85): DataFrame = graft.Lineage.scoped { scope =>
-    val e = scope.cached(edges.select(col("src"), col("dst")).distinct())
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // src-partitioned once; every iteration's contribution join co-locates on it
-    val annotated = scope.cached(e.join(outDeg, "src").repartition(col("src")))
-
-    val flagged = scope.cached(nodes.join(
-        annotated.select(col("src").as("node")).distinct()
-          .withColumn("has_out", lit(true)),
-        Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("has_out"), lit(false)).as("has_out")))
-    val n = flagged.count() // materializes flagged + annotated; N feeds the literals
-    scope.release(e)
+    val annotated = scope.cached(outDegrees(Edges.directed(edges)))
+    val flagged = scope.cached(annotated.select(col("src").as("node"), lit(true).as("has_out"))
+      .unionByName(annotated.select(col("dst").as("node"), lit(false).as("has_out")))
+      .groupBy(col("node")).agg(max(col("has_out")).as("has_out")))
+    // fills both caches; N feeds the literals
+    val prep = graft.Lineage.labeled(edges.sparkSession.sparkContext, "pagerank: prepare")(
+      flagged.agg(count(lit(1)), count(when(!col("has_out"), true))).head())
+    val n = prep.getLong(0)
 
     def danglingOf(r: DataFrame): Double = r.filter(!col("has_out"))
       .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
 
-    val seed = scope.cached(flagged.withColumn("rank", lit(1.0 / n)))
-    val ranks = graft.Lineage.iterate("pagerank", seed, iterations, danglingOf(seed))(
+    val seed = flagged.withColumn("rank", lit(1.0 / n))
+    val ranks = graft.Lineage.iterate("pagerank", seed, iterations, prep.getLong(1) * (1.0 / n))(
       (ranks, dangling, _) => {
         val contribs = annotated
           .join(ranks, annotated("src") === ranks("node"))
@@ -81,4 +82,9 @@ object PageRank {
       observe = danglingOf)
     ranks.select(col("node"), col("rank"))
   }
+
+  /** `e` with each edge's source out-degree, from a window over `src`: on
+    * an edge list partitioned by `src` it needs no exchange. */
+  private[graph] def outDegrees(e: DataFrame): DataFrame =
+    e.withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
 }

@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * Each round is one equi-join of the current distance table against
   * the edge list plus a min-groupBy — both shuffles on the node key,
-  * and the edge table is hash-partitioned by `src` ONCE and persisted
-  * so per-round work reuses its layout. A FIXED round count keeps the
-  * result deterministic and oracle-expressible (a recursive-CTE path
+  * and the edge table is hash-partitioned by `src` ONCE and persisted,
+  * filled by round 1's action, so per-round work reuses its layout. A
+  * FIXED round count keeps the result deterministic and
+  * oracle-expressible (a recursive-CTE path
   * enumeration reaches the same fixpoint on inputs whose longest
   * shortest path fits in the budget); rounds ≥ longest-path length ⇒
   * exact fixpoint, extra rounds are idempotent. Each round is one
@@ -32,10 +33,9 @@ object ShortestPaths {
   def run(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = graft.Lineage.scoped { scope =>
     val e = scope.cached(edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .repartition(col("src")))
-    e.count()
     val seed = scope.cached(seeds.select(col("node")).distinct()
       .withColumn("dist", lit(0L)))
-    graft.Lineage.iterate("sssp", seed, rounds, seed.count())((dist, _, _) =>
+    graft.Lineage.iterate("sssp", seed, rounds, 0L)((dist, _, _) =>
       // aliases: dist derives from e after round 1, so the self-join
       // needs explicit sides (the Bfs ambiguity note)
       dist.alias("d")

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * counts, and engines, which is what makes a cross-engine oracle (and
   * a reproducible training corpus) possible.
   *
-  * Scale shape: the edge list is src-partitioned and persisted once;
+  * Scale shape: the edge list is src-partitioned and deduplicated in one
+  * exchange ([[Edges.directed]]) and persisted, filled by hop 1's action;
   * each hop is one equi-join of the walk frontier against it plus a
   * per-walk argmin (window keyed by the walk id — walks are
   * independent, so the partition is the natural parallel unit and never
@@ -29,9 +30,7 @@ object Walks {
   def run(edges: DataFrame, seeds: DataFrame, steps: Int,
           ord: Column => Column): DataFrame = graft.Lineage.scoped { scope =>
     import org.apache.spark.sql.expressions.Window
-    val e = scope.cached(edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")))
-    e.count()
+    val e = scope.cached(Edges.directed(edges))
     // the seed is not materialized on its own (so there is no observation
     // of it): hop 1 reads it inside its own job
     val seed = seeds.select(col("node").as("start")).distinct()

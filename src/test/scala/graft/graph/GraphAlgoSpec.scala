@@ -3,10 +3,14 @@ package graft.graph
 import graft.{Observe, SparkSpec}
 import graft.dedup.Components
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-class GraphAlgoSpec extends SparkSpec {
+class GraphAlgoSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   //  a → b → c → d,  a → c,  e isolated-source → f
@@ -89,6 +93,33 @@ class GraphAlgoSpec extends SparkSpec {
     assert(left.isEmpty, s"superseded generations or seeds not freed: $left")
   }
 
+  test("prepared edge lists plan one exchange and stay partitioned by src") {
+    // partitioning by src satisfies the distinct's clustering on (src, dst),
+    // so the dedup runs in place; distinct-then-repartition plans two
+    // exchanges. PageRank's out-degree window reuses the layout.
+    def shape(df: DataFrame): (Int, Partitioning) = {
+      val plan = df.queryExecution.executedPlan
+      (collect(plan) { case x: ShuffleExchangeExec => x }.size, stripAQEPlan(plan).outputPartitioning)
+    }
+    val bySrc: PartialFunction[Partitioning, Boolean] = {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == "src"
+      case _ => false
+    }
+    val noisy = edges.unionAll(Seq(("a", "b"), ("c", "c"), ("b", "a")).toDF("src", "dst"))
+    for ((name, df) <- Seq("directed" -> Edges.directed(noisy), "undirected" -> Edges.undirected(noisy),
+                           "pagerank out-degree" -> PageRank.outDegrees(Edges.directed(noisy)))) {
+      val (exchanges, partitioning) = shape(df)
+      assert(exchanges == 1, s"$name plans $exchanges exchanges")
+      assert(bySrc(partitioning), s"$name is partitioned as $partitioning")
+    }
+    assert(Edges.directed(noisy).as[(String, String)].collect().toSet ==
+      Set(("a", "b"), ("b", "c"), ("c", "d"), ("a", "c"), ("e", "f"), ("c", "c"), ("b", "a")))
+    val und = Edges.undirected(noisy).as[(String, String)].collect()
+    assert(und.length == und.toSet.size)
+    assert(und.toSet == Set(("a", "b"), ("b", "c"), ("c", "d"), ("a", "c"), ("e", "f"))
+      .flatMap { case (s, d) => Set((s, d), (d, s)) })
+  }
+
   test("iterative operators run a pinned number of jobs at 3 iterations") {
     // each generation is one lazy checkpoint filled by one action; a change
     // to how generations are cut or materialized shows up here as a count
@@ -112,8 +143,8 @@ class GraphAlgoSpec extends SparkSpec {
         n => pmod(xxhash64(n), lit(1000003L))).count()),
       "components" -> jobsOf(Components.connectedComponents(ids, maxIter = 3,
         driverThreshold = 0L).count()))
-    assert(jobs === Map("pagerank" -> 33, "kcore" -> 23, "label_prop" -> 21, "sssp" -> 21,
-      "walks" -> 19, "components" -> 23))
+    assert(jobs === Map("pagerank" -> 24, "kcore" -> 22, "label_prop" -> 22, "sssp" -> 17,
+      "walks" -> 16, "components" -> 23))
   }
 
   test("bfs reach/closure use a RELIABLE checkpoint when a dir is configured") {
