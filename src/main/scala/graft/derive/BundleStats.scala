@@ -59,7 +59,8 @@ object BundleStats {
     * is. */
   def apply(nodes: DataFrame, edges: DataFrame): (QcResults, ObjectNode) = {
     val noFacts = typedlit(Seq.empty[(String, String)]).cast("array<struct<kind:string,item:string>>")
-    val leaves = BiolinkModel.leafCategories(col("category"))
+    // a node without a category is a NamedThing, as KGX writes it
+    val leaves = BiolinkModel.leafCategories(coalesce(col("category"), array(lit(Biolink.NamedThing))))
     val cats = array_join(array_sort(leaves), "|")
 
     // nodes: prefix "p", attribute "a" and leaf type "t" facts by cats

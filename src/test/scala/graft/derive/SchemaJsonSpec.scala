@@ -301,4 +301,31 @@ class SchemaJsonSpec extends SparkSpec {
     assert(text("qc-results.json") == qcJson)
     assert(text("schema.json") == schemaJson)
   }
+
+  test("a node without a category is keyed and counted as biolink:NamedThing") {
+    import spark.implicits._
+    val nodes = spark.read.json(Seq(
+      """{"id":"HGNC:1","name":"g","category":["biolink:Gene"]}""",
+      """{"id":"X:1","name":"x"}""").toDS())
+    val edges = spark.read.json(Seq(
+      """{"subject":"HGNC:1","predicate":"biolink:related_to","object":"X:1","primary_knowledge_source":"infores:hgnc"}""").toDS())
+    val spec = graft.pipeline.GraphSpec("no_category_kg", "no category KG",
+      sources = Seq(graft.pipeline.GraphSource("SRC", sourceVersion = Some("v1"))))
+    val out = Files.createTempDirectory("no-category")
+    graft.pipeline.GraphBundle.finalizeBundle(spec, nodes, edges, out.toString)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def read(f: String) = json.readTree(out.resolve(f).toFile)
+    val qc = read("qc-results.json")
+    assert(qc.get("node_type_counts").toString == """{"biolink:Gene":1,"biolink:NamedThing":1}""")
+    assert(qc.get("invalid_node_types").size() == 0)
+    val schema = read("schema.json")
+    val groups = (0 until schema.get("nodes").size()).map(schema.get("nodes").get(_))
+      .map(n => n.get("category").toString -> n.get("id_prefixes").toString)
+    assert(groups == Seq("""["biolink:Gene"]""" -> """{"HGNC":1}""",
+      """["biolink:NamedThing"]""" -> """{"X":1}"""))
+    val edge = schema.get("edges").get(0)
+    assert(schema.get("edges").size() == 1)
+    assert(edge.get("subject_category").toString == """["biolink:Gene"]""")
+    assert(edge.get("object_category").toString == """["biolink:NamedThing"]""")
+  }
 }
