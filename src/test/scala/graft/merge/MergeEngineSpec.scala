@@ -189,6 +189,95 @@ class MergeEngineSpec extends SparkSpec {
     assert(merged.mergedNodeCount == 0)
   }
 
+  /** Two primaries, a connected_edge_subset source and a dont_merge
+    * source that share node ids and edge keys, as (nodes, edges) JSON
+    * lines. Every column keeps one JSON type across the four sources. */
+  private val fourSources: Seq[(String, Seq[String], Seq[String])] = {
+    def node(id: String, name: String, cat: String, syn: Seq[String], desc: String = null) =
+      s"""{"id":"$id","name":"$name","category":["$cat"],"synonym":${syn.map(s => s""""$s"""").mkString("[", ",", "]")}""" +
+        Option(desc).map(d => s""","description":"$d"""").getOrElse("") + "}"
+    def edge(s: String, o: String, ks: String, pubs: Seq[String], level: String = null,
+             sources: Seq[(String, String)] = Nil) =
+      s"""{"subject":"$s","predicate":"biolink:affects","object":"$o","primary_knowledge_source":"$ks",""" +
+        s""""publications":${pubs.map(p => s""""$p"""").mkString("[", ",", "]")}""" +
+        Option(level).map(l => s""","knowledge_level":"$l"""").getOrElse("") +
+        (if (sources.isEmpty) "" else sources.map { case (id, role) =>
+          s"""{"resource_id":"$id","resource_role":"$role"}""" }.mkString(""","sources":[""", ",", "]")) + "}"
+    val pks = "primary_knowledge_source"
+    Seq(
+      ("P1", Seq(node("N:1", "one", "biolink:Gene", Seq("s1"), desc = ""),
+                 node("N:2", "two", "biolink:Gene", Seq("s2"), desc = "d2")),
+             Seq(edge("N:1", "N:2", "infores:a", Seq("PMID:1"), level = "kl_a",
+                   sources = Seq("infores:a" -> pks)),
+                 edge("N:2", "N:3", "infores:a", Seq("PMID:2")))),
+      // N:1's name collides (both truthy: the first wins); its empty
+      // description is filled; E(N:1→N:2) merges lists and sources
+      ("P2", Seq(node("N:1", "uno", "biolink:Protein", Seq("s1b", "s1"), desc = "desc1"),
+                 node("N:3", "three", "biolink:Gene", Nil, desc = "d3")),
+             Seq(edge("N:1", "N:2", "infores:a", Seq("PMID:3", "PMID:1"), level = "kl_b",
+                   sources = Seq("infores:a" -> pks, "infores:agg" -> "aggregator_knowledge_source")),
+                 edge("N:3", "N:1", "infores:b", Seq("PMID:6")))),
+      // kept: the E(N:1→N:2) duplicate and N:2→N:4 (backfills N:4);
+      // dropped: N:5→N:6; N:1 is a primary id, so it is not backfilled
+      ("S", Seq(node("N:4", "four", "biolink:Gene", Seq("s4")),
+                node("N:5", "five", "biolink:Gene", Nil),
+                node("N:6", "six", "biolink:Gene", Nil),
+                node("N:1", "ein", "biolink:Gene", Seq("s1s"))),
+            Seq(edge("N:1", "N:2", "infores:a", Seq("PMID:4"),
+                  sources = Seq("infores:s" -> "supporting_data_source")),
+                edge("N:2", "N:4", "infores:s", Nil),
+                edge("N:5", "N:6", "infores:s", Nil))),
+      // nodes merge; edges append verbatim, the E(N:1→N:2) key included
+      ("D", Seq(node("N:1", "eins", "biolink:Gene", Seq("s1d")),
+                node("N:4", "vier", "biolink:Gene", Seq("s4d"), desc = "d4"),
+                node("N:7", "seven", "biolink:Gene", Nil)),
+            Seq(edge("N:1", "N:2", "infores:a", Seq("PMID:5")),
+                edge("N:7", "N:1", "infores:d", Nil))))
+  }
+
+  private def fourSourceMerge(): GraphMerger.MergedGraph = {
+    import spark.implicits._
+    val graphs = fourSources.map { case (id, ns, es) =>
+      GraphMerger.SourceGraph(id, spark.read.json(ns.toDS()), spark.read.json(es.toDS()))
+    }
+    GraphMerger.mergeGraph(primary = graphs.take(2), secondary = Seq(graphs(2)),
+      dontMerge = Seq(graphs(3)))
+  }
+
+  /** Each row of `df` as canonical (sorted-key) JSON, sorted. */
+  private def canonicalRows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import spark.implicits._
+    df.select(to_json(struct(df.columns.map(col): _*), Map("ignoreNullFields" -> "true")))
+      .as[String].collect().toSeq.map(j => PropertyMerge.canonicalJson(mapper.readTree(j))).sorted
+  }
+
+  test("mergeGraph equals one PropertyMerge fold per key over every source in order") {
+    val merged = fourSourceMerge()
+    try {
+      def field(json: String, name: String) = mapper.readTree(json).path(name).asText()
+      // the expected graph, without Spark: connected_edge_subset against
+      // the primaries' ids, then one left fold per key in source order
+      val Seq((_, p1n, p1e), (_, p2n, p2e), (_, sn, se), (_, dn, de)) = fourSources
+      val primaryIds = (p1n ++ p2n).map(field(_, "id")).toSet
+      val keptSecondary = se.filter(e => primaryIds(field(e, "subject")) || primaryIds(field(e, "object")))
+      val backfill = keptSecondary.flatMap(e => Seq(field(e, "subject"), field(e, "object"))).toSet -- primaryIds
+      def fold(rows: Seq[String], key: String => Any): (Seq[String], Long) = {
+        val groups = rows.groupBy(key).values.toSeq
+        (groups.map(g => PropertyMerge.mergeAll(g, PropertyMerge.Warnings())), groups.map(_.size - 1L).sum)
+      }
+      val (nodes, nodeMerges) = fold(p1n ++ p2n ++ sn.filter(n => backfill(field(n, "id"))) ++ dn,
+        field(_, "id"))
+      val (edges, edgeMerges) = fold(p1e ++ p2e ++ keptSecondary,
+        e => Seq("subject", "predicate", "object", "primary_knowledge_source").map(field(e, _)))
+      def canonical(rows: Seq[String]) = rows.map(j => PropertyMerge.canonicalJson(mapper.readTree(j))).sorted
+
+      assert(canonicalRows(merged.nodes) == canonical(nodes))
+      assert(canonicalRows(merged.edges) == canonical(edges ++ de))
+      assert((merged.mergedNodeCount, merged.mergedEdgeCount) == ((nodeMerges, edgeMerges)))
+      assert((nodeMerges, edgeMerges) == ((3L, 2L)))
+    } finally merged.release()
+  }
+
   test("remove unconnected nodes (kgx_file_normalizer.py:419-439)") {
     import spark.implicits._
     val nodes = spark.read.json(Seq(
