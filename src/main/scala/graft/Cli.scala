@@ -39,11 +39,9 @@ object Cli {
         GraphSpec(graphId = "merged", sources = Nil), merged.nodes, merged.edges, out)
       finally merged.release()
     case "redundant" =>
-      KgxIO.writeJsonl(DerivedGraphs.redundantEdges(spark.read.json(args(1))),
-        args(2), dedupKeys = Nil)
+      KgxIO.writeJsonl(DerivedGraphs.redundantEdges(spark.read.json(args(1))), args(2))
     case "collapse" =>
-      KgxIO.writeJsonl(DerivedGraphs.collapsedQualifierEdges(spark.read.json(args(1))),
-        args(2), dedupKeys = Nil)
+      KgxIO.writeJsonl(DerivedGraphs.collapsedQualifierEdges(spark.read.json(args(1))), args(2))
     case "meta-kg" =>
       val (nodes, edges) = (spark.read.json(args(1)), spark.read.json(args(2)))
       MetaKg.writeMetaKgFiles(nodes, edges, args(3))
@@ -73,8 +71,9 @@ object Cli {
       // (registered parsers: graft.parsers.Registry)
       val Array(_, sourceId, dataDir, out) = args
       val g = graft.parsers.Registry(sourceId)(spark, dataDir)
-      KgxIO.writeJsonl(g.nodes, s"$out/source_nodes.jsonl", dedupKeys = Seq("id"))
-      KgxIO.writeJsonl(g.edges, s"$out/source_edges.jsonl", dedupKeys = Nil)
+      // a parser may emit an id more than once; a KGX node file holds one row per id
+      KgxIO.writeJsonl(g.nodes.dropDuplicates("id"), s"$out/source_nodes.jsonl")
+      KgxIO.writeJsonl(g.edges, s"$out/source_edges.jsonl")
     case "sources" =>
       println(graft.parsers.Registry.all.keys.toSeq.sorted.mkString("\n"))
     case "curate" =>

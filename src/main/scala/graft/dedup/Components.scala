@@ -24,8 +24,9 @@ object Components {
     *
     * Two physical paths behind one contract:
     *  - pair set fits in the driver (≤ driverThreshold edges, the same idea
-    *    as Spark's broadcast threshold): collect + union-find, O(α) — a
-    *    dedup pair graph is usually tiny relative to its corpus;
+    *    as Spark's broadcast threshold): one collect of at most
+    *    driverThreshold + 1 edges, then union-find, O(α) — a dedup pair
+    *    graph is usually tiny relative to its corpus;
     *  - otherwise: distributed large-star/small-star contraction. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           driverThreshold: Long = 1L << 20): DataFrame = {
@@ -34,21 +35,19 @@ object Components {
 
     val sc = spark.sparkContext
     // canonical big→small directed edges
-    val (ee, nEdges) = graft.Lineage.labeled(sc, "components: prepare") {
-      val ee = pairs.select(
-          greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("u"),
-          least(col("id_a").cast("long"), col("id_b").cast("long")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint()
-      (ee, ee.count())
-    }
-    if (nEdges == 0) return ee.select(col("u").as("id"), col("v").as("component"))
-    // unionFind collects ee to the driver eagerly
-    if (nEdges <= driverThreshold)
-      return try graft.Lineage.labeled(sc, "components: union-find")(unionFind(ee))
-      finally graft.Lineage.release(ee)
+    val edges = pairs.select(
+        greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("u"),
+        least(col("id_a").cast("long"), col("id_b").cast("long")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+    // one bounded collect picks the path: at most `bound` rows are the
+    // whole edge list, and union-find runs on them as they are
+    val bound = math.max(0L, math.min(driverThreshold, Int.MaxValue - 1L))
+    val head = graft.Lineage.labeled(sc, "components: union-find")(
+      edges.limit(bound.toInt + 1).as[(Long, Long)].collect())
+    if (head.length <= bound) return unionFind(spark, head)
 
+    val ee = graft.Lineage.labeled(sc, "components: prepare")(edges.localCheckpoint())
     val last = graft.Lineage.iterate("components", ee, maxIter, (-1L, -1L))((ee, _, _) => {
       // large-star: for every node u, attach each LARGER neighbor v to
       // m = min(Γ(u) ∪ {u}); preserves connectivity, shrinks tall chains
@@ -84,10 +83,8 @@ object Components {
   /** Driver-side union-find over a bounded, already-deduped edge list.
     * Union-by-min keeps the smallest id as the root, so the root IS the
     * component label the distributed path would produce. */
-  private def unionFind(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  private def unionFind(spark: org.apache.spark.sql.SparkSession, es: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val es = edges.as[(Long, Long)].collect()
     val parent = new java.util.HashMap[Long, Long](es.length * 2)
     def find(x: Long): Long = {
       var r = x

@@ -8,8 +8,10 @@ import org.apache.spark.sql.functions._
   * Reference: stream-parsed jsonl (orion/utils.py:468-475), dedup-on-write
   * via an in-memory id set (orion/kgx_file_writer.py:64-93), gzip bundles
   * (orion/kgx_bundle.py:75-102). Spark-first: `spark.read.json` (gz is
-  * transparent, splittable parquet for intermediates), `dropDuplicates`
-  * replaces the RAM-bound id set, compression is a writer option.
+  * transparent, splittable parquet for intermediates), compression is a
+  * writer option. The writer does not dedup: a merged bundle's ids are
+  * unique already (the merge folds each id to one row), and a caller
+  * that writes unmerged rows applies `dropDuplicates("id")` itself.
   */
 object KgxIO {
 
@@ -62,25 +64,21 @@ object KgxIO {
       lit(0))
   }
 
-  /** K1/K2 — write a node or edge DataFrame as gzipped KGX jsonl,
-    * dropping duplicate ids like the reference writer. Output is a
-    * directory of part files (the scalable layout); use writeSingleFile for
-    * byte-compatible single-file bundles. */
-  def writeJsonl(df: DataFrame, path: String, dedupKeys: Seq[String] = Seq("id")): Unit = {
-    val deduped =
-      if (dedupKeys.nonEmpty && dedupKeys.forall(df.columns.contains)) df.dropDuplicates(dedupKeys)
-      else df
-    deduped.write.mode(SaveMode.Overwrite)
+  /** K1/K2 — write a node or edge DataFrame as gzipped KGX jsonl, as it
+    * is: a caller whose ids may repeat drops the duplicates first. Output
+    * is a directory of part files (the scalable layout); use
+    * writeSingleFile for byte-compatible single-file bundles. */
+  def writeJsonl(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite)
       .option("ignoreNullFields", "true")
       .option("compression", "gzip")
       .json(path)
-  }
 
   /** Single-file jsonl.gz for KGX bundle compatibility (coalesce(1) —
     * only for final export, never intermediates). */
   def writeSingleFile(df: DataFrame, file: String): Unit = {
     val tmp = file + ".spark-tmp"
-    writeJsonl(df.coalesce(1), tmp, dedupKeys = Nil)
+    writeJsonl(df.coalesce(1), tmp)
     val dir = new java.io.File(tmp)
     val dest = new java.io.File(file)
     if (dest.exists()) dest.delete()

@@ -21,24 +21,24 @@ object GraphMerger {
     * under memory pressure; long-lived sessions doing many builds should
     * call [[release]] once a graph is fully consumed. */
   final case class MergedGraph(nodes: DataFrame, edges: DataFrame)(
-      nodeMerges: Seq[Stats], edgeMerges: Seq[Stats], caches: Scope) {
+      nodeMerges: Stats, edgeMerges: Stats, caches: Scope) {
     /** Node rows merged away into another row with the same id. */
-    def mergedNodeCount: Long = nodeMerges.map(_.long("n")).sum
+    def mergedNodeCount: Long = nodeMerges.long("n")
     /** Edge rows merged away into another row with the same key. */
-    def mergedEdgeCount: Long = edgeMerges.map(_.long("n")).sum
+    def mergedEdgeCount: Long = edgeMerges.long("n")
     /** Free the merge's caches (recomputation after this re-runs the
       * merge aggregation). */
     def release(): Unit = caches.close()
   }
 
-  /** `merged` as a typed frame over `schema`, observed for its
-    * merged-away count. */
-  private def observedMerge(merged: Dataset[MergeEngine.MergedEntity],
-                            schema: org.apache.spark.sql.types.StructType,
-                            what: String): (DataFrame, Stats) = {
-    val (observed, merges) = Stats.observe(merged, s"merge: $what merged count")(
+  /** `frames` unioned in source order, ordinal-tagged and merged by
+    * `merge`, as a typed frame observed for its merged-away count. */
+  private def observedMerge(frames: Seq[DataFrame], what: String)(
+      merge: DataFrame => Dataset[MergeEngine.MergedEntity]): (DataFrame, Stats) = {
+    val unioned = unionAll(MergeEngine.withOrdinal(frames))
+    val (observed, merges) = Stats.observe(merge(unioned), s"merge: $what merged count")(
       sum(col("nMerged")).as("n"))
-    (MergeEngine.jsonToDf(observed, Some(schema)), merges)
+    (MergeEngine.jsonToDf(observed, Some(unioned.schema)), merges)
   }
 
   /** Cross-source schema harmonization for list-valued properties: the
@@ -65,20 +65,6 @@ object GraphMerger {
         else d
       }
     dfs.map(harmonize).reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** U1+A1-A3 — merge the primary sources: union, ordinal-tag in source
-    * order, property-merge nodes by id and edges by composite key. The
-    * merged (nodes, edges) are lazy; [[mergeGraph]] caches what it reads
-    * twice. */
-  private def mergePrimary(sources: Seq[SourceGraph], edgeMergingAttributes: Seq[String],
-                           counters: Option[MergeEngine.MergeCounters])
-      : ((DataFrame, Stats), (DataFrame, Stats)) = {
-    val nodes = unionAll(MergeEngine.withOrdinal(sources.map(_.nodes)))
-    val edges = unionAll(MergeEngine.withOrdinal(sources.map(_.edges)))
-    (observedMerge(MergeEngine.mergeNodes(nodes, counters), nodes.schema, "node"),
-      observedMerge(MergeEngine.mergeEdges(edges, edgeMergingAttributes, counters),
-        edges.schema, "edge"))
   }
 
   /** J4 — connected_edge_subset: keep a secondary source's edges only when
@@ -110,28 +96,31 @@ object GraphMerger {
     (nodesToAdd, kept)
   }
 
-  /** A8 — dont_merge: nodes participate in the node merge, edge files are
-    * appended verbatim (ref orion/kgx_file_merger.py:164-172).
+  /** U1+A1-A3, J4, A8 — merge a build's sources: primaries, then
+    * connected_edge_subset sources, then dont_merge sources (ref
+    * orion/kgx_file_merger.py:129-172). Nodes and edges each go through
+    * ONE union, ordinal-tagged in that source order, and one property
+    * merge: nodes by id, edges by composite key. PropertyMerge.mergeAll
+    * is a left fold, so this equals the reference's merger, which folds
+    * each source into the result of the ones before it.
     *
     * Fidelity details, each matching the reference:
     *  - The primary node-id set is FROZEN before any secondary source is
     *    processed (ref kgx_file_merger.py:129-137 computes
-    *    `primary_node_ids` once): a later connected_edge_subset source
-    *    does NOT keep edges merely for touching an earlier secondary's
-    *    backfill nodes.
-    *  - Kept secondary edges route through the edge property merge
-    *    against the primary result (ref kgx_file_merger.py:148-150 calls
-    *    `edge_graph_merger.merge_edge`), so a secondary edge sharing its
-    *    composite key with a primary edge is merged, not duplicated.
-    *    Only dont_merge edges append verbatim.
-    *  - Secondary/dont_merge node additions go through a second
-    *    ordinal-tagged property merge against the primary result — the
-    *    same first-truthy-wins fold the primary sources got, in source
-    *    order (primary result, then secondary backfills, then dont_merge
-    *    sources). An earlier version used dropDuplicates("id"), which
-    *    keeps an ARBITRARY row per id: nondeterministic output digests
-    *    and no property union, neither of which matches the reference.
-    *  - Merge counts include the second-pass node/edge merges (the
+    *    `primary_node_ids` once): it is the primaries' own ids, so a
+    *    later connected_edge_subset source does NOT keep edges merely for
+    *    touching an earlier secondary's backfill nodes.
+    *  - Kept secondary edges join the edge property merge (ref
+    *    kgx_file_merger.py:148-150 calls `edge_graph_merger.merge_edge`),
+    *    so a secondary edge sharing its composite key with a primary edge
+    *    is merged, not duplicated. Only dont_merge edges append verbatim,
+    *    without KgxIO's `_file_rank` helper column.
+    *  - Backfill and dont_merge nodes join the node merge: the same
+    *    first-truthy-wins fold the primaries get, not dropDuplicates("id"),
+    *    which keeps an ARBITRARY row per id and unions no properties.
+    *  - A column that any source holds as a list is a list for every
+    *    source ([[unionAll]] sees all of them at once).
+    *  - The merge counts total every source's merged-away rows (the
     *    reference's merge metadata records per-source counts).
     * Nothing runs here: the first action over the returned frames fills
     * their caches. */
@@ -140,36 +129,17 @@ object GraphMerger {
                  dontMerge: Seq[SourceGraph] = Nil,
                  edgeMergingAttributes: Seq[String] = Nil,
                  counters: Option[MergeEngine.MergeCounters] = None): MergedGraph = Lineage.owned { scope =>
-    val ((mergedNodes, nodeMerges), (mergedEdges, edgeMerges)) =
-      mergePrimary(primary, edgeMergingAttributes, counters)
-    // the connected-edge-subset joins read the primary nodes, and so does
-    // the node merge below
-    val primaryNodes = if (secondary.isEmpty) mergedNodes else scope.cached(mergedNodes)
-    val primaryIds = primaryNodes.select("id")
+    val primaryIds = primary.map(_.nodes.select("id")).reduce(_.unionByName(_))
     val secondaryParts = secondary.map(sg => connectedEdgeSubset(primaryIds, sg))
-
-    val (edges, secEdgeMerges) =
-      if (secondaryParts.isEmpty) (mergedEdges, Nil)
-      else {
-        val unioned = unionAll(MergeEngine.withOrdinal(mergedEdges +: secondaryParts.map(_._2)))
-        val (me, merges) = observedMerge(
-          MergeEngine.mergeEdges(unioned, edgeMergingAttributes, counters), unioned.schema, "edge")
-        (me, Seq(merges))
-      }
+    val (nodes, nodeMerges) = observedMerge(
+      primary.map(_.nodes) ++ secondaryParts.map(_._1) ++ dontMerge.map(_.nodes), "node")(
+      MergeEngine.mergeNodes(_, counters))
+    val (edges, edgeMerges) = observedMerge(primary.map(_.edges) ++ secondaryParts.map(_._2), "edge")(
+      MergeEngine.mergeEdges(_, edgeMergingAttributes, counters))
     val edgesOut =
       if (dontMerge.isEmpty) edges
-      else unionAll(edges +: dontMerge.map(_.edges))
-
-    val addedNodeFrames = secondaryParts.map(_._1) ++ dontMerge.map(_.nodes)
-    val (nodes, extraNodeMerges) =
-      if (addedNodeFrames.isEmpty) (primaryNodes, Nil)
-      else {
-        val unioned = unionAll(MergeEngine.withOrdinal(primaryNodes +: addedNodeFrames))
-        val (mn, merges) = observedMerge(MergeEngine.mergeNodes(unioned, counters), unioned.schema, "node")
-        (mn, Seq(merges))
-      }
-    MergedGraph(scope.cached(nodes), scope.cached(edgesOut))(nodeMerges +: extraNodeMerges,
-      edgeMerges +: secEdgeMerges, scope)
+      else unionAll(edges +: dontMerge.map(_.edges.drop("_file_rank")))
+    MergedGraph(scope.cached(nodes), scope.cached(edgesOut))(nodeMerges, edgeMerges, scope)
   }
 
   /** J5 — remove nodes not referenced by any edge

@@ -24,6 +24,9 @@ object GraphBundle {
   private def writeJson(path: java.nio.file.Path, node: ObjectNode): Unit =
     Files.writeString(path, node.toPrettyString)
 
+  /** Write the bundle of `nodes` and `edges` under `outDir`. Precondition:
+    * node ids are unique, as in a [[graft.merge.GraphMerger.mergeGraph]]
+    * result; the rows are written as given. */
   def finalizeBundle(spec: GraphSpec, nodes: DataFrame, edges: DataFrame,
                      outDir: String): BundleResult = Lineage.scoped { scope =>
     val dir = Paths.get(outDir)
@@ -38,15 +41,11 @@ object GraphBundle {
     val sc = nodes.sparkSession.sparkContext
     // guide §1.5: attribute the finalize phases
     def labeled[T](desc: String)(f: => T): T = Lineage.labeled(sc, desc)(f)
-    // bundle files (directory-of-parts layout; the scalable form of K1/K2).
-    // Both writes read the merge's primary-node cache, which carries the
-    // node-merge observation, so they run one after the other.
-    labeled("bundle: nodes.jsonl") {
-      KgxIO.writeJsonl(nodes, s"$outDir/nodes.jsonl", dedupKeys = Seq("id"))
-    }
-    labeled("bundle: edges.jsonl") {
-      KgxIO.writeJsonl(edges, s"$outDir/edges.jsonl", dedupKeys = Nil)
-    }
+    // bundle files (directory-of-parts layout; the scalable form of K1/K2),
+    // each written straight from its cache. Node ids are unique, as in a
+    // merge result (BundleStats' precondition too), so no dedup runs here.
+    labeled("bundle: nodes.jsonl")(KgxIO.writeJsonl(nodes, s"$outDir/nodes.jsonl"))
+    labeled("bundle: edges.jsonl")(KgxIO.writeJsonl(edges, s"$outDir/edges.jsonl"))
 
     // QC and the published schema.json (ref kgx_metadata.py:230-447) from
     // one node and one edge aggregation over the caches the writes filled.

@@ -142,9 +142,10 @@ class GraphAlgoSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "walks" -> jobsOf(Walks.run(edges, seeds, steps = 3,
         n => pmod(xxhash64(n), lit(1000003L))).count()),
       "components" -> jobsOf(Components.connectedComponents(ids, maxIter = 3,
-        driverThreshold = 0L).count()))
+        driverThreshold = 0L).count()),
+      "components (union-find)" -> jobsOf(Components.connectedComponents(ids).count()))
     assert(jobs === Map("pagerank" -> 24, "kcore" -> 22, "label_prop" -> 22, "sssp" -> 17,
-      "walks" -> 16, "components" -> 23))
+      "walks" -> 16, "components" -> 21, "components (union-find)" -> 4))
   }
 
   test("bfs reach/closure use a RELIABLE checkpoint when a dir is configured") {

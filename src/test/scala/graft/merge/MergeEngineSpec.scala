@@ -151,7 +151,7 @@ class MergeEngineSpec extends SparkSpec {
     assert(addNodes.select("id").as[String].collect().toSet == Set("NODE:3", "NODE:4"))
   }
 
-  test("mergeGraph freezes primary ids, merges secondary edges, counts second pass (kgx_file_merger.py:129-150)") {
+  test("mergeGraph freezes primary ids, merges secondary edges, counts every source (kgx_file_merger.py:129-150)") {
     import spark.implicits._
     val primNodes = spark.read.json(Seq(
       """{"id":"NODE:1","name":"one"}""", """{"id":"NODE:2","name":"two"}""").toDS())
@@ -184,7 +184,7 @@ class MergeEngineSpec extends SparkSpec {
     // nodes: 1,2 primary + 3 backfilled from secA; NODE:4 never enters
     // (its edge was dropped, and backfill only adds kept-edge endpoints)
     assert(merged.nodes.select("id").as[String].collect().toSet == Set("NODE:1", "NODE:2", "NODE:3"))
-    // counts cover the second pass: 1 edge pair merged, 0 extra node merges
+    // counts cover the secondary sources: 1 edge pair merged, 0 node merges
     assert(merged.mergedEdgeCount == 1)
     assert(merged.mergedNodeCount == 0)
   }
@@ -276,6 +276,104 @@ class MergeEngineSpec extends SparkSpec {
       assert((merged.mergedNodeCount, merged.mergedEdgeCount) == ((nodeMerges, edgeMerges)))
       assert((nodeMerges, edgeMerges) == ((3L, 2L)))
     } finally merged.release()
+  }
+
+  test("a column that any source holds as a list is a list for every source") {
+    import spark.implicits._
+    def graph(id: String, line: String) =
+      GraphMerger.SourceGraph(id, spark.read.json(Seq(line).toDS()),
+        spark.read.json(Seq("""{"subject":"N:1","predicate":"p","object":"N:1"}""").toDS()))
+    val merged = GraphMerger.mergeGraph(
+      primary = Seq(graph("P1", """{"id":"N:1","provided_by":"a"}"""),
+                    graph("P2", """{"id":"N:1","provided_by":"b"}""")),
+      dontMerge = Seq(graph("D", """{"id":"N:1","provided_by":["c"]}""")))
+    try {
+      // every source's value is a list before the fold, so the primaries'
+      // scalars union instead of colliding. The former two-pass merge
+      // folded the primaries as scalars first (keeping "a", dropping "b")
+      // and gave [a, c]; it gave [a, b, c] only when the list-valued
+      // source was a primary.
+      assert(merged.nodes.select("provided_by").as[Seq[String]].collect().toSeq == Seq(Seq("a", "b", "c")))
+      assert(merged.mergedNodeCount == 2)
+    } finally merged.release()
+  }
+
+  test("merged nodes and edges each plan one merge aggregate; the nodes.jsonl write plans no dedup") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val merged = fourSourceMerge()
+    try {
+      // the analyzed plan: the cache does not stand in for the merge there
+      def mergeAggregates(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.collect {
+        case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[CollectList])) => a
+      }.size
+      assert(mergeAggregates(merged.nodes) == 1, "node merge aggregates")
+      assert(mergeAggregates(merged.edges) == 1, "edge merge aggregates")
+
+      val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          writes.add(qe.executedPlan)
+        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      val out = java.nio.file.Files.createTempDirectory("merge-plan").toString
+      spark.listenerManager.register(listener)
+      try {
+        graft.pipeline.GraphBundle.finalizeBundle(graft.pipeline.GraphSpec("g"),
+          merged.nodes, merged.edges, out)
+        org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      // Spark plans the whole write adaptively: the command sits in a query stage
+      val helper = new AdaptiveSparkPlanHelper {}
+      val nodesWrite = writes.asScala.toSeq.flatMap(helper.collect(_) {
+        case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+          if c.outputPath.getName == "nodes.jsonl" => w
+      })
+      assert(nodesWrite.size == 1, s"nodes.jsonl writes: ${nodesWrite.size}")
+      // the merge cache's scan has no children here, so nothing under it counts
+      val above = helper.collect(nodesWrite.head) {
+        case p @ (_: ShuffleExchangeExec | _: SortAggregateExec) => p.nodeName
+      }
+      assert(above.isEmpty, s"nodes.jsonl plans ${above.mkString(", ")} above the merge cache")
+    } finally merged.release()
+  }
+
+  test("a dont_merge source read through readJsonl publishes no _file_rank column") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("dont-merge-rank")
+    def read(name: String, lines: Seq[String]) = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.writeString(f, lines.mkString("", "\n", "\n"))
+      graft.io.KgxIO.readJsonl(spark, Seq(f.toString))
+    }
+    val primary = GraphMerger.SourceGraph("P",
+      read("p-nodes.jsonl", Seq("""{"id":"N:1","category":["biolink:Gene"]}""")),
+      read("p-edges.jsonl", Seq("""{"subject":"N:1","predicate":"biolink:affects","object":"N:1"}""")))
+    val dontMerge = GraphMerger.SourceGraph("D",
+      read("d-nodes.jsonl", Seq("""{"id":"N:2","category":["biolink:Gene"]}""")),
+      read("d-edges.jsonl", Seq("""{"subject":"N:2","predicate":"biolink:affects","object":"N:1"}""")),
+      "dont_merge")
+    val merged = GraphMerger.mergeGraph(Seq(primary), dontMerge = Seq(dontMerge))
+    val out = dir.resolve("bundle")
+    try graft.pipeline.GraphBundle.finalizeBundle(graft.pipeline.GraphSpec("g"),
+      merged.nodes, merged.edges, out.toString)
+    finally merged.release()
+    val edgeLines = java.nio.file.Files.list(out.resolve("edges.jsonl")).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("part-")).flatMap { p =>
+        val in = new java.util.zip.GZIPInputStream(java.nio.file.Files.newInputStream(p))
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList finally in.close()
+      }
+    assert(edgeLines.size == 2)
+    assert(!edgeLines.exists(_.contains("_file_rank")), edgeLines.mkString("\n"))
+    assert(!java.nio.file.Files.readString(out.resolve("schema.json")).contains("_file_rank"))
   }
 
   test("remove unconnected nodes (kgx_file_normalizer.py:419-439)") {

@@ -231,8 +231,8 @@ class BuildGraphEndToEndSpec extends SparkSpec {
     assert(jobs === (
       Seq("SRC_A", "SRC_B").flatMap(id => perNormalized.map { case (l, n) => s"ingest $id$l" -> n }) ++
       Seq("SRC_C", "SRC_D").flatMap(id => perPreNormalized.map { case (l, n) => s"ingest $id$l" -> n }) ++
-      Seq("bundle: nodes.jsonl" -> 17, "bundle: edges.jsonl" -> 8, "bundle: qc + schema.json" -> 6)).toMap)
-    assert(jobs.values.sum == 75)
+      Seq("bundle: nodes.jsonl" -> 8, "bundle: edges.jsonl" -> 5, "bundle: qc + schema.json" -> 6)).toMap)
+    assert(jobs.values.sum == 63)
 
     import scala.jdk.CollectionConverters._
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
