@@ -244,11 +244,14 @@ class MergeEngineSpec extends SparkSpec {
       dontMerge = Seq(graphs(3)))
   }
 
-  /** Each row of `df` as canonical (sorted-key) JSON, sorted. */
+  /** JSON rows as canonical (sorted-key) JSON, sorted. */
+  private def canonical(rows: Seq[String]): Seq[String] =
+    rows.map(j => PropertyMerge.canonicalJson(mapper.readTree(j))).sorted
+
   private def canonicalRows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     import spark.implicits._
-    df.select(to_json(struct(df.columns.map(col): _*), Map("ignoreNullFields" -> "true")))
-      .as[String].collect().toSeq.map(j => PropertyMerge.canonicalJson(mapper.readTree(j))).sorted
+    canonical(df.select(to_json(struct(df.columns.map(col): _*), Map("ignoreNullFields" -> "true")))
+      .as[String].collect().toSeq)
   }
 
   test("mergeGraph equals one PropertyMerge fold per key over every source in order") {
@@ -269,7 +272,6 @@ class MergeEngineSpec extends SparkSpec {
         field(_, "id"))
       val (edges, edgeMerges) = fold(p1e ++ p2e ++ keptSecondary,
         e => Seq("subject", "predicate", "object", "primary_knowledge_source").map(field(e, _)))
-      def canonical(rows: Seq[String]) = rows.map(j => PropertyMerge.canonicalJson(mapper.readTree(j))).sorted
 
       assert(canonicalRows(merged.nodes) == canonical(nodes))
       assert(canonicalRows(merged.edges) == canonical(edges ++ de))
