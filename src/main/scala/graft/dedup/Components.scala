@@ -24,30 +24,34 @@ object Components {
     *
     * Two physical paths behind one contract:
     *  - pair set fits in the driver (≤ driverThreshold edges, the same idea
-    *    as Spark's broadcast threshold): one collect of at most
-    *    driverThreshold + 1 edges, then union-find, O(α) — a dedup pair
-    *    graph is usually tiny relative to its corpus;
-    *  - otherwise: distributed large-star/small-star contraction. */
+    *    as Spark's broadcast threshold): union-find, O(α), over one
+    *    collect of at most driverThreshold + 1 edges — a dedup pair graph
+    *    is usually tiny relative to its corpus;
+    *  - otherwise: distributed large-star/small-star contraction over the
+    *    edges that collect cut. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           driverThreshold: Long = 1L << 20): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
 
     val sc = spark.sparkContext
-    // canonical big→small directed edges
-    val edges = pairs.select(
+    // canonical big→small directed edges, cut lazily: the collect below
+    // fills the cut, and Spark's local checkpoint fills any partition that
+    // collect did not read, so no path computes the edges twice
+    val ee = graft.Lineage.labeled(sc, "components: prepare")(pairs.select(
         greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("u"),
         least(col("id_a").cast("long"), col("id_b").cast("long")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
+      .localCheckpoint(eager = false))
     // one bounded collect picks the path: at most `bound` rows are the
     // whole edge list, and union-find runs on them as they are
     val bound = math.max(0L, math.min(driverThreshold, Int.MaxValue - 1L))
     val head = graft.Lineage.labeled(sc, "components: union-find")(
-      edges.limit(bound.toInt + 1).as[(Long, Long)].collect())
-    if (head.length <= bound) return unionFind(spark, head)
+      ee.limit(bound.toInt + 1).as[(Long, Long)].collect())
+    if (head.length <= bound)
+      return try unionFind(spark, head) finally graft.Lineage.release(ee)
 
-    val ee = graft.Lineage.labeled(sc, "components: prepare")(edges.localCheckpoint())
     val last = graft.Lineage.iterate("components", ee, maxIter, (-1L, -1L))((ee, _, _) => {
       // large-star: for every node u, attach each LARGER neighbor v to
       // m = min(Γ(u) ∪ {u}); preserves connectivity, shrinks tall chains
