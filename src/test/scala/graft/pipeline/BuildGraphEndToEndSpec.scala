@@ -309,6 +309,62 @@ class BuildGraphEndToEndSpec extends SparkSpec {
     assert(differing.isEmpty, s"files differ from the serial build: ${differing.toSeq.sorted}")
   }
 
+  /** The bundle's `nodes.jsonl`/`edges.jsonl` lines, sorted, and its
+    * top-level sidecars' bytes. */
+  private def bundleContent(dir: Path): Map[String, Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    def lines(part: Path): Seq[String] = {
+      val in = new java.util.zip.GZIPInputStream(Files.newInputStream(part))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList finally in.close()
+    }
+    def listed(p: Path): List[Path] = {
+      val s = Files.list(p)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    val (dirs, files) = listed(dir).filterNot(_.getFileName.toString.startsWith(".")).partition(Files.isDirectory(_))
+    files.map(f => f.getFileName.toString -> Seq(Files.readString(f))).toMap ++
+      dirs.filter(d => d.getFileName.toString.endsWith(".jsonl")).map { d =>
+        d.getFileName.toString ->
+          listed(d).filter(_.getFileName.toString.startsWith("part-")).flatMap(lines).sorted
+      }
+  }
+
+  test("buildGraph writes the same bundle whatever the join strategy, partition count or AQE") {
+    // a duplicated normalized id keeps its first input row: the pick must
+    // not follow a broadcast side, a partition layout or a replanning
+    val (spec, loaders) = kgFixture(Files.createTempDirectory("kg_fixture"))
+    val settings = Seq(
+      "default" -> Map.empty[String, String],
+      "broadcast off" -> Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+      "7 uncoalesced partitions" -> Map("spark.sql.shuffle.partitions" -> "7",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false"),
+      "AQE off" -> Map("spark.sql.adaptive.enabled" -> "false"))
+    val bundles = settings.map { case (name, conf) =>
+      val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      val out = Files.createTempDirectory("kg_perturbed")
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try IngestPipeline.buildGraph(spark, spec, loaders, out.toString)
+      finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      name -> bundleContent(out)
+    }
+    val (_, reference) = bundles.head
+    Seq("nodes.jsonl", "edges.jsonl", "graph-metadata.json", "qc-results.json", "schema.json")
+      .foreach(f => assert(reference.contains(f), f))
+    // the fixture's first input row for CHEBI:12 is MESH:12's
+    assert(reference("nodes.jsonl").exists(l => l.contains("\"id\":\"CHEBI:12\"") &&
+      l.contains("\"name\":\"label of MESH:12\"")))
+    bundles.tail.foreach { case (name, content) =>
+      val differing = reference.keys.filter(k => content.get(k) != reference.get(k)).toSeq.sorted
+      val lines = differing.flatMap(k => (reference(k).toSet -- content.getOrElse(k, Nil)).map(l => s"$k: $l"))
+      assert(content.keySet == reference.keySet, name)
+      assert(differing.isEmpty,
+        s"$name: ${lines.size} lines differ from the default session's bundle:\n${lines.take(5).mkString("\n")}")
+    }
+  }
+
   /** A count pin: the merge counts finalizeBundle's jobs report. It has
     * not been seen to fail when two jobs split the fill of an observed
     * cache, so it does not guard [[graft.Lineage.concurrently]]'s rule. */
