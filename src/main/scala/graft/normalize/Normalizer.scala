@@ -217,50 +217,39 @@ object Normalizer {
     * node's category still comes from the map, but `custom_node_types`
     * computed from the ORIGINAL types is retained either way — the
     * reference sets it before consulting the normalizer response. Splits
-    * (1→N) fan out to N nodes; duplicate normalized ids collapse (first
-    * wins, like dedup-on-write). */
+    * (1→N) fan out to N nodes; duplicate normalized ids collapse to the
+    * first in input order (`_file_rank`, then row), like the reference's
+    * writer, which keeps the first node written (kgx_file_writer.py:64-69).
+    *
+    * The stats are observed on the normalization's own frames, so the
+    * first action over the result (in a build, the parquet write) computes
+    * them with no job of their own; read them after that action. Nothing
+    * is cached: a caller that reads the result more than once caches it. */
   def normalizeNodes(rawNodes: DataFrame, nodeMap: DataFrame,
-                     strict: Boolean = true): (DataFrame, NodeNormStats) = {
-    val (out, stats) = normalizeNodesDeferred(rawNodes, nodeMap, strict)
-    (out, stats())
-  }
-
-  /** [[normalizeNodes]] with its stats deferred: they are observed on the
-    * normalization's own frames, so the first action over the result (in
-    * a build, the parquet write) computes them with no job of their own;
-    * read them after that action. Strict mode's failure count is the one
-    * exception: an anti-join action run here. Nothing is cached: a caller
-    * that reads the result more than once caches it. */
-  def normalizeNodesDeferred(rawNodes: DataFrame, nodeMap: DataFrame,
-                             strict: Boolean = true): (DataFrame, () => NodeNormStats) = {
+                     strict: Boolean = true): (DataFrame, () => NodeNormStats) = {
     // the reference strips newline characters from every top-level string
     // property of every node, in BOTH modes, BEFORE consulting the
     // normalizer response (orion/normalization.py:235-242 vs :280) —
     // so ORIGINAL properties are stripped, while map-supplied names/ids
     // pass through untouched; string columns only, arrays untouched,
-    // like the `isinstance(value, str)` guard
+    // like the `isinstance(value, str)` guard. Each row is stamped with
+    // its input position: file rank first, because Spark packs scan
+    // splits by descending file size (as in MergeEngine.withOrdinal).
+    val fileRank = if (rawNodes.columns.contains("_file_rank")) col("_file_rank") else lit(0)
     val (nodes, preNorm) = Stats.observe(rawNodes.select(rawNodes.schema.fields.map { f =>
       if (f.dataType == org.apache.spark.sql.types.StringType)
         regexp_replace(col(f.name), "\n", "").as(f.name)
       else col(f.name)
-    }.toSeq: _*), "normalize nodes: input count")(count(lit(1)).as("n"))
+    }.toSeq :+ struct(coalesce(fileRank, lit(0)), monotonically_increasing_id()).as("_pos"): _*),
+      "normalize nodes: input count")(count(lit(1)).as("n"))
     val m = nodeMap.withColumnRenamed("name", "_norm_name")
     // failures are REPORTED in both modes (the reference's
-    // failed_to_normalize list); only strict also drops the rows. In
-    // lenient mode a node row that misses the map leaves exactly one
-    // null-flagged row in the left join, so the count rides the action
-    // that runs it. Strict keeps its inner join, whose build side Spark
-    // picks by size — and that side decides which duplicate the dedup
-    // below keeps — and counts the misses with one anti-join action.
-    val (joined, failures) =
-      if (strict) {
-        val n = nodes.join(m, nodes("id") === m("orig_id"), "left_anti").count()
-        (nodes.join(m, nodes("id") === m("orig_id")), () => n)
-      } else {
-        val (flagged, missed) = Stats.observe(nodes.join(m, nodes("id") === m("orig_id"), "left"),
-          "normalize nodes: failures")(sum(when(m("orig_id").isNull, 1L)).as("n"))
-        (flagged, () => missed.long("n"))
-      }
+    // failed_to_normalize list); only strict also drops the rows. A node
+    // row that misses the map leaves exactly one null-flagged row in the
+    // left join, so the count rides the action that runs it.
+    val (flagged, failures) = Stats.observe(nodes.join(m, nodes("id") === m("orig_id"), "left"),
+      "normalize nodes: failures")(sum(when(m("orig_id").isNull, 1L)).as("n"))
+    val joined = if (strict) flagged.filter(m("orig_id").isNotNull) else flagged
     val origCat = nodes.columns.find(_ == "category").map(_ => nodes("category"))
       .getOrElse(lit(null).cast("array<string>"))
     // a pre-existing custom_node_types property is PRESERVED (the
@@ -294,39 +283,44 @@ object Normalizer {
           .withColumn("_custom_types",
             coalesce(when(size(invalid) > 0, invalid), preCustom))
       }
+    // helper columns (`_file_rank`, `_pos`) stay inside
     val passthrough = nodes.columns
-      .filterNot(Set("id", "name", "category", "equivalent_identifiers",
-        "information_content", "custom_node_types"))
+      .filterNot(c => c.startsWith("_") || Set("id", "name", "category",
+        "equivalent_identifiers", "information_content", "custom_node_types")(c))
       .map(c => nodes(c))
     val extra =
       if (!strict) Seq(col("_custom_types").as("custom_node_types"))
       else if (hasCustom) Seq(preCustom.as("custom_node_types"))
       else Nil
-    val (out, postNorm) = Stats.observe(applied.select(Seq(
-        col("_final_id").as("id"),
-        col("_final_name").as("name"),
-        col("_final_cat").as("category"),
-        m("equivalent_identifiers"),
-        m("information_content")) ++ passthrough ++ extra: _*)
-      .dropDuplicates("id"), "normalize nodes: output count")(count(lit(1)).as("n"))
+    // per normalized id, the row with the least input position: unlike
+    // dropDuplicates, the pick does not depend on which join side or
+    // partition delivers a row first
+    val rest = Seq(col("_final_name").as("name"), col("_final_cat").as("category"),
+      m("equivalent_identifiers"), m("information_content")) ++ passthrough ++ extra
+    val (out, postNorm) = Stats.observe(applied.groupBy(col("_final_id").as("id"))
+      .agg(min_by(struct(rest: _*), col("_pos")).as("_first")).select("id", "_first.*"),
+      "normalize nodes: output count")(count(lit(1)).as("n"))
     // postNorm first: on a read before any action its fallback runs the
     // pipeline, and that run reports the observations below it
     (out, () => {
       val post = postNorm.long("n")
-      NodeNormStats(preNorm.long("n"), post, failures())
+      NodeNormStats(preNorm.long("n"), post, failures.long("n"))
     })
   }
 
-  /** The reference's `node_normalization_lookup` in LENIENT mode: the
-    * node map PLUS identity entries for every node id the map missed
-    * (orion/normalization.py:299-301 — `lookup[id] = [id]` when strict
-    * is off) — so edges referencing a lenient-retained node survive on
-    * its original id instead of dropping at the endpoint join. */
-  def lenientEdgeMap(nodes: DataFrame, nodeMap: DataFrame): DataFrame = {
-    val identity = nodes.select(col("id").as("orig_id")).distinct()
+  /** The `(orig_id, norm_id)` lookup edges normalize against: the node
+    * map, and in LENIENT mode, like the reference's
+    * `node_normalization_lookup` (orion/normalization.py:299-301 —
+    * `lookup[id] = [id]` when strict is off), identity entries for every
+    * node id the map missed — so edges referencing a lenient-retained
+    * node survive on its original id instead of dropping at the endpoint
+    * join. */
+  def edgeMap(nodes: DataFrame, nodeMap: DataFrame, strict: Boolean): DataFrame = {
+    val mapped = nodeMap.select(col("orig_id"), col("norm_id"))
+    if (strict) mapped
+    else mapped.unionByName(nodes.select(col("id").as("orig_id")).distinct()
       .join(nodeMap.select(col("orig_id")), Seq("orig_id"), "left_anti")
-      .withColumn("norm_id", col("orig_id"))
-    nodeMap.select(col("orig_id"), col("norm_id")).unionByName(identity)
+      .withColumn("norm_id", col("orig_id")))
   }
 
   /** N5 — invert an edge: swap every *subject*↔*object* column

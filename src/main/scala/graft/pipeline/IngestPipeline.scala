@@ -108,18 +108,18 @@ object IngestPipeline {
       Lineage.labeled(spark.sparkContext, s"ingest ${loader.sourceId}: parse + count")(loader.parse(spark))
     val nodeMap = loader.nodeNormMap(spark)
     // The raw counts are observed on the parse and ride the first action
-    // over it. Normalization reads the raw nodes twice (the node join and
-    // either the strict failure count or the lenient edge map): without a
-    // cache each read RE-RUNS the parse, and raw sources are the expensive
-    // kind (non-splittable archives, gz text, XML). One scan fills the
-    // cache; the default MEMORY_AND_DISK level spills rather than
-    // evicting, so the shape holds for sources larger than executor
-    // memory. Every other raw frame has one reader and no cache.
+    // over it. Lenient normalization reads the raw nodes twice (the node
+    // join and the edge map's identity entries): without a cache each read
+    // RE-RUNS the parse, and raw sources are the expensive kind
+    // (non-splittable archives, gz text, XML). One scan fills the cache;
+    // the default MEMORY_AND_DISK level spills rather than evicting, so
+    // the shape holds for sources larger than executor memory. Strict
+    // normalization and every other raw frame have one reader and no cache.
     val (rawNodes, rawNodeCount) = Stats.observe(parsedNodes,
       s"ingest ${loader.sourceId}: raw node count")(count(lit(1)).as("n"))
     val (rawEdges, rawEdgeCount) = Stats.observe(parsedEdges,
       s"ingest ${loader.sourceId}: raw edge count")(count(lit(1)).as("n"))
-    if (nodeMap.isDefined) scope.cached(rawNodes)
+    if (nodeMap.isDefined && !loader.strictNormalization) scope.cached(rawNodes)
 
     val ((nodes, edges, supplementation), normalization) = nodeMap match {
       case Some(nm) => Lineage.labeled(spark.sparkContext, s"ingest ${loader.sourceId}: normalize") {
@@ -129,13 +129,8 @@ object IngestPipeline {
         // over the normalized nodes; the edge joins are cached for their
         // stats action and both writes
         val (nNodes, nodeStats) =
-          Normalizer.normalizeNodesDeferred(rawNodes, nm, loader.strictNormalization)
-        // lenient mode: failed nodes are KEPT, so edges referencing them
-        // must survive on the original ids — the reference's lookup maps
-        // a failed id to itself (orion/normalization.py:299-301)
-        val edgeMap =
-          if (loader.strictNormalization) nm
-          else Normalizer.lenientEdgeMap(rawNodes, nm)
+          Normalizer.normalizeNodes(rawNodes, nm, loader.strictNormalization)
+        val edgeMap = Normalizer.edgeMap(rawNodes, nm, loader.strictNormalization)
         val (nEdges, edgeStats) = Normalizer.normalizeEdgesCached(scope, rawEdges, edgeMap, pm,
           s"infores:${loader.sourceId.toLowerCase}")
         val finalNodes =
@@ -216,7 +211,7 @@ object IngestPipeline {
           // normalized like the main path: the node stats ride the parquet
           // write, and the edge joins stay cached in the source's scope
           // until that write has run
-          val (sn, snStats) = Normalizer.normalizeNodesDeferred(suppNodesRaw, nm, loader.strictNormalization)
+          val (sn, snStats) = Normalizer.normalizeNodes(suppNodesRaw, nm, loader.strictNormalization)
           val subjectIdentity = suppEdgesRaw
             .select(col(graft.model.Biolink.Subject).as("orig_id")).distinct()
             .withColumn("norm_id", col("orig_id"))
@@ -227,10 +222,8 @@ object IngestPipeline {
           // subject identities can coincide with lenient identity rows
           // (both map an id to itself) and a duplicate map row would
           // duplicate every edge it joins.
-          val baseMap =
-            if (loader.strictNormalization) nm.select(col("orig_id"), col("norm_id"))
-            else Normalizer.lenientEdgeMap(suppNodesRaw, nm)
-          val edgeMap = baseMap.unionByName(subjectIdentity).distinct()
+          val edgeMap = Normalizer.edgeMap(suppNodesRaw, nm, loader.strictNormalization)
+            .unionByName(subjectIdentity).distinct()
           val (se, seStats) = Normalizer.normalizeEdgesCached(scope, suppEdgesRaw, edgeMap, pm,
             Vcf.snpEffProvenance)
           (sn, se, () => {

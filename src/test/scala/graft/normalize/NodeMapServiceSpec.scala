@@ -33,7 +33,7 @@ class NodeMapServiceSpec extends SparkSpec {
 
     val (normed, stats) = Normalizer.normalizeNodes(nodes, map, strict = true)
     assert(normed.select("id").as[String].collect().toSet == Set("HGNC:5", "MONDO:1"))
-    assert(stats.failures == 1) // MISS:1 dropped under strict
+    assert(stats().failures == 1) // MISS:1 dropped under strict
   }
 
   test("a throwing batch splits in half so one poison curie fails alone") {

@@ -37,7 +37,7 @@ class NormalizerSpec extends SparkSpec {
     val (out, stats) = normalizeNodes(nodes, nodeMap, strict = true)
     val rows = out.collect().map(r => r.getAs[String]("id") -> r.getAs[String]("name")).toMap
     assert(rows == Map("NCBIGene:4522" -> "MTHFD1"))
-    assert(stats.preNorm == 2 && stats.postNorm == 1 && stats.failures == 1)
+    assert(stats() == NodeNormStats(preNorm = 2, postNorm = 1, failures = 1))
   }
 
   test("lenient normalization keeps failed nodes with original values") {
@@ -45,9 +45,10 @@ class NormalizerSpec extends SparkSpec {
       """{"id":"HGNC:7432","name":"old","category":["biolink:Gene"]}""",
       """{"id":"UNKNOWN:1","name":"mystery","category":["biolink:NamedThing"]}""")
     val (out, stats) = normalizeNodes(nodes, nodeMap, strict = false)
-    assert(stats.postNorm == 2)
-    assert(stats.failures == 1) // reported (reference failed_to_normalize), not dropped
-    val mystery = out.filter(col("id") === "UNKNOWN:1").head()
+    val rows = out.collect()
+    assert(rows.length == 2 && stats().postNorm == 2)
+    assert(stats().failures == 1) // reported (reference failed_to_normalize), not dropped
+    val mystery = rows.find(_.getAs[String]("id") == "UNKNOWN:1").get
     assert(mystery.getAs[String]("name") == "mystery")
   }
 
@@ -116,11 +117,15 @@ class NormalizerSpec extends SparkSpec {
     assert(custom(lenientOut, "UNKNOWN:2") == List("bad:New")) // invalid → overwritten
   }
 
-  test("lenientEdgeMap: failed nodes get identity entries so edges survive") {
+  test("lenient edgeMap: failed nodes get identity entries so edges survive") {
     val nodes = nodesDf(
       """{"id":"HGNC:7432","name":"old","category":["biolink:Gene"]}""",
       """{"id":"UNKNOWN:1","name":"mystery","category":["biolink:NamedThing"]}""")
-    val em = lenientEdgeMap(nodes, nodeMap)
+    // strict: the node map's (orig_id, norm_id) pairs and nothing else
+    val strictMap = edgeMap(nodes, nodeMap, strict = true)
+    assert(strictMap.columns.toSeq == Seq("orig_id", "norm_id"))
+    assert(strictMap.filter(col("orig_id") === "UNKNOWN:1").isEmpty)
+    val em = edgeMap(nodes, nodeMap, strict = false)
     val edges = nodesDf(
       """{"subject":"HGNC:7432","predicate":"SEMMEDDB:CAUSES","object":"UNKNOWN:1"}""")
     val (out, stats) = normalizeEdges(edges, em, predMap, "infores:test")
@@ -133,8 +138,32 @@ class NormalizerSpec extends SparkSpec {
   test("node split: one curie to N normalized nodes") {
     val nodes = nodesDf("""{"id":"DBSNP:rs12","name":"v","category":["biolink:SequenceVariant"]}""")
     val (out, stats) = normalizeNodes(nodes, nodeMap)
-    assert(stats.postNorm == 2)
     assert(out.select("id").collect().map(_.getString(0)).toSet == Set("CAID:CA1", "CAID:CA2"))
+    assert(stats().postNorm == 2)
+  }
+
+  test("raw ids that normalize to one id keep the first input row (both modes)") {
+    // two files read through KgxIO: Spark packs scan splits by descending
+    // size, so the larger second file's rows come first in the scan; the
+    // file rank, not the scan order, decides which row is first
+    val dir = java.nio.file.Files.createTempDirectory("norm_first")
+    java.nio.file.Files.writeString(dir.resolve("a.jsonl"),
+      """{"id":"SYN:A","name":"from a","note":"a"}""" + "\n")
+    java.nio.file.Files.writeString(dir.resolve("b.jsonl"),
+      ("""{"id":"SYN:B","name":"from b","note":"b"}""" +:
+        (1 to 50).map(i => s"""{"id":"PAD:$i","name":"padding $i","note":"pad"}"""))
+        .mkString("", "\n", "\n"))
+    val synMap = nodeMapDf(spark, Seq(NodeNormEntry("SYN:A", "SYN:1"), NodeNormEntry("SYN:B", "SYN:1")))
+    val nodes = graft.io.KgxIO.readJsonl(spark, Seq(dir.toString))
+    Seq(true, false).foreach { strict =>
+      val (out, stats) = normalizeNodes(nodes, synMap, strict)
+      val rows = out.collect()
+      val syn = rows.filter(_.getAs[String]("id") == "SYN:1")
+        .map(r => (r.getAs[String]("name"), r.getAs[String]("note"))).toSeq
+      assert(syn == Seq(("from a", "a")), s"strict=$strict")
+      assert(!out.columns.exists(_.startsWith("_")), out.columns.mkString(", "))
+      assert(stats() == NodeNormStats(preNorm = 52, postNorm = if (strict) 1 else 51, failures = 50))
+    }
   }
 
   test("edge normalization: endpoint rewrite, original retention, failure count") {

@@ -226,13 +226,13 @@ class BuildGraphEndToEndSpec extends SparkSpec {
       finally sc.clearJobGroup()
     val jobs = report.jobs.filter(_.group.contains(group))
       .groupBy(_.description).map { case (d, js) => d -> js.size }
-    val perNormalized = Seq(": parse + count" -> 2, ": normalize" -> 10, ": versioned parquet" -> 6)
+    val perNormalized = Seq(": parse + count" -> 2, ": normalize" -> 6, ": versioned parquet" -> 6)
     val perPreNormalized = Seq(": parse + count" -> 2, ": versioned parquet" -> 2)
     assert(jobs === (
       Seq("SRC_A", "SRC_B").flatMap(id => perNormalized.map { case (l, n) => s"ingest $id$l" -> n }) ++
       Seq("SRC_C", "SRC_D").flatMap(id => perPreNormalized.map { case (l, n) => s"ingest $id$l" -> n }) ++
       Seq("bundle: nodes.jsonl" -> 8, "bundle: edges.jsonl" -> 5, "bundle: qc + schema.json" -> 6)).toMap)
-    assert(jobs.values.sum == 63)
+    assert(jobs.values.sum == 55)
 
     import scala.jdk.CollectionConverters._
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
