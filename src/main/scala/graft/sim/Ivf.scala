@@ -22,19 +22,19 @@ object Ivf {
     def nlist: Int = centroids.size
   }
 
-  /** Driver-side k-means on a bounded sample (≤ sampleCap vectors), seeded —
-    * deterministic across runs, no MLlib dependency. */
-  def train(corpus: DataFrame, nlist: Int, iters: Int = 10,
-            vecCol: String = "embedding", sampleCap: Int = 10000,
-            seed: Long = 42L, sampleFraction: Double = 0.01): IvfIndex = {
-    // random sample across ALL partitions, not limit(): limit takes the
-    // first files' rows, so at scale the quantizer would train on one
-    // source's distribution and every other cell would sit empty.
-    // Fast path: a blind fixed fraction + limit — ONE job, no sizing count()
-    // over the corpus. It fills the cap whenever the corpus has
-    // ≥ sampleCap/sampleFraction rows (1M at the defaults) — i.e. always at
-    // scale. Only when the blind sample comes up short (corpus provably
-    // small, ≲ 1M rows) do we pay a count() to pick an exact fraction.
+  /** Up to `sampleCap` vectors of `vecCol`, collected to the driver — the
+    * training sample of both quantizers (this one and Pq.train).
+    *
+    * A random sample across ALL partitions, not limit(): limit takes the
+    * first files' rows, so at scale a quantizer would train on one
+    * source's distribution and every other cell would sit empty.
+    * Fast path: a blind fixed fraction + limit — ONE job, no sizing count()
+    * over the corpus. It fills the cap whenever the corpus has
+    * ≥ sampleCap/sampleFraction rows (1M at the defaults) — i.e. always at
+    * scale. Only when the blind sample comes up short (corpus provably
+    * small, ≲ 1M rows) do we pay a count() to pick an exact fraction. */
+  private[sim] def sampleVectors(corpus: DataFrame, vecCol: String, sampleCap: Int,
+                                 seed: Long, sampleFraction: Double): Array[Array[Float]] = {
     val vecs = corpus.select(col(vecCol))
     val blind = vecs.sample(withReplacement = false, math.min(1.0, sampleFraction), seed)
       .limit(sampleCap).collect()
@@ -48,6 +48,15 @@ object Ivf {
       }
     val sample = rows.map(_.getSeq[Float](0).toArray)
     require(sample.nonEmpty, "empty corpus")
+    sample
+  }
+
+  /** Driver-side k-means on a bounded sample (≤ sampleCap vectors), seeded —
+    * deterministic across runs, no MLlib dependency. */
+  def train(corpus: DataFrame, nlist: Int, iters: Int = 10,
+            vecCol: String = "embedding", sampleCap: Int = 10000,
+            seed: Long = 42L, sampleFraction: Double = 0.01): IvfIndex = {
+    val sample = sampleVectors(corpus, vecCol, sampleCap, seed, sampleFraction)
     val dim = sample.head.length
     val rnd = new scala.util.Random(seed)
     var centroids = rnd.shuffle(sample.indices.toList).take(nlist).map(sample(_)).toArray

@@ -32,26 +32,14 @@ object Pq {
   final case class PqIndex(m: Int, k: Int, subDim: Int,
                            centroids: Array[Array[Array[Float]]])
 
-  /** Seeded per-subspace Lloyd's on a bounded sample (same sampling
-    * policy as Ivf.train: blind fraction+limit first, exact fraction only
-    * for provably small corpora). Its driver actions run as "pq: train". */
+  /** Seeded per-subspace Lloyd's on a bounded sample (Ivf.sampleVectors,
+    * the sampling policy Ivf.train uses). Its driver actions run as
+    * "pq: train". */
   def train(corpus: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 10,
             vecCol: String = "embedding", sampleCap: Int = 10000,
             seed: Long = 42L, sampleFraction: Double = 0.01): PqIndex = {
-    val vecs = corpus.select(col(vecCol))
-    val rows = Lineage.labeled(corpus.sparkSession.sparkContext, "pq: train") {
-      val blind = vecs.sample(withReplacement = false, math.min(1.0, sampleFraction), seed)
-        .limit(sampleCap).collect()
-      if (blind.length >= sampleCap) blind
-      else {
-        val n = corpus.count()
-        if (n <= sampleCap) vecs.collect()
-        else vecs.sample(withReplacement = false, math.min(1.0, sampleCap * 1.2 / n), seed)
-          .limit(sampleCap).collect()
-      }
-    }
-    val sample = rows.map(_.getSeq[Float](0).toArray)
-    require(sample.nonEmpty, "empty corpus")
+    val sample = Lineage.labeled(corpus.sparkSession.sparkContext, "pq: train")(
+      Ivf.sampleVectors(corpus, vecCol, sampleCap, seed, sampleFraction))
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val subDim = dim / m
