@@ -159,21 +159,36 @@ class ScopeSpec extends SparkSpec {
     }
   }
 
-  test("no cache is persisted or unpersisted by hand outside Lineage") {
-    // every cache goes through Scope.cached and every release through
-    // Lineage; a new hand-placed persist/cache/unpersist fails here
-    val root = Paths.get("src/main/scala")
+  /** `path:line: text` for every line of the `.scala` files under `root`
+    * that `pattern` finds, skipping the files named in `except`. */
+  private def sourceLines(root: Path, pattern: scala.util.matching.Regex,
+                          except: Set[String] = Set.empty): List[String] = {
     assert(Files.isDirectory(root), s"run from the repository root: $root missing")
-    val handPlaced = """\.(persist|cache|unpersist)\(""".r
     val files = Files.walk(root)
-    val hits = try files.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Lineage.scala")
+    try files.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !except(p.getFileName.toString))
       .flatMap { (p: Path) =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if handPlaced.findFirstIn(line).nonEmpty => s"$p:${i + 1}: ${line.trim}"
+          case (line, i) if pattern.findFirstIn(line).nonEmpty => s"$p:${i + 1}: ${line.trim}"
         }
       }.toList
     finally files.close()
+  }
+
+  test("no cache is persisted or unpersisted by hand outside Lineage") {
+    // every cache goes through Scope.cached and every release through
+    // Lineage; a new hand-placed persist/cache/unpersist fails here
+    val hits = sourceLines(Paths.get("src/main/scala"), """\.(persist|cache|unpersist)\(""".r,
+      except = Set("Lineage.scala"))
     assert(hits.isEmpty, hits.mkString("hand-placed caches:\n", "\n", ""))
+  }
+
+  test("the build path picks no duplicate with dropDuplicates") {
+    // dropDuplicates keeps whichever row reaches its aggregate first, so
+    // the row a duplicated id keeps would follow the join strategy and
+    // partition layout; the build path picks by input position instead
+    val hits = Seq("normalize", "merge", "pipeline", "derive", "io").flatMap(d =>
+      sourceLines(Paths.get("src/main/scala/graft", d), """\.dropDuplicates\(""".r))
+    assert(hits.isEmpty, hits.mkString("plan-dependent picks:\n", "\n", ""))
   }
 }
